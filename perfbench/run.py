@@ -2,7 +2,7 @@
 
 Usage (from the root of a checkout):
 
-    python3 perfbench/run.py --workload query-mix --seed 7 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload query-mix --seed 7 --seconds 13 --trace 0
 
 Generates a seeded fixture with ``scripts/gen_altdata.py``, runs one
 workload in a child process with its own temp and Spark scratch
@@ -30,6 +30,9 @@ FIXTURE_SF = "0.01"
 DRIVER_MEM = "2g"
 RUN_TIMEOUT_S = 150
 PAGE = os.sysconf("SC_PAGE_SIZE")
+# Spark's task threads take half the cores; the Spark driver, the Python
+# workers and the JIT get the rest.
+CPUS = max(1, len(os.sched_getaffinity(0)) // 2)
 
 
 def _children() -> dict[int, list[int]]:
@@ -102,7 +105,7 @@ def isolated_env(run_dir: str) -> dict[str, str]:
         PYTHONPATH=os.pathsep.join([ROOT, env["PYTHONPATH"]]) if env.get("PYTHONPATH") else ROOT,
         PYSPARK_PYTHON=sys.executable,
         PYSPARK_DRIVER_PYTHON=sys.executable,
-        SPARK_GRAFT_CPUS=str(len(os.sched_getaffinity(0))),
+        SPARK_GRAFT_CPUS=str(CPUS),
         SPARK_GRAFT_DRIVER_MEM=DRIVER_MEM,
         JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
     )

@@ -2,7 +2,7 @@
 end-to-end metric's median and interquartile spread (as a share of the
 median, from ``statistics.quantiles(values, n=4)``).
 
-    python3 perfbench/spread.py --workload serve-mixed --seeds 1 2 3 4 5 --seconds 10
+    python3 perfbench/spread.py --workload serve-mixed --seeds 1 2 3 4 5 --seconds 13
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
-    ap.add_argument("--seconds", default="10")
+    ap.add_argument("--seconds", default="13")
     args = ap.parse_args()
     values: dict[str, list[float]] = {}
     for seed in args.seeds:
@@ -37,7 +37,7 @@ def main() -> int:
         print(f"seed {seed}: {detail['run_wall_s']:.0f}s correct={res['correct']} failed={res['failed']}/{res['attempted']} "
               + " ".join(f"{k}={m['value']:.4g}" for k, m in res["metrics"].items()), flush=True)
         print("    per kind: " + " ".join(
-            f"{k}={v:.3g}x{detail['per_kind_samples'][k]}" for k, v in detail["per_kind_median_s"].items()), flush=True)
+            f"{k}={v:.3g}x{detail['per_kind_samples'][k]}" for k, v in detail["per_kind_trimmed_mean_s"].items()), flush=True)
         for k, m in res["metrics"].items():
             values.setdefault(k, []).append(m["value"])
     for k, vs in values.items():

@@ -312,6 +312,7 @@ class JobLog:
             if not (sub.isDefined() and done.isDefined()):
                 return
             rec = {
+                "id": self.next_id,
                 "start": sub.get().getTime() / 1000.0,
                 "end": done.get().getTime() / 1000.0,
                 "tasks": j.numTasks(),

@@ -1,8 +1,10 @@
 """One benchmark run inside the isolated environment ``run.py`` prepares.
 
-Order: JVM start, repeated set-up (the median is ``setup_s``), the cold
-pass, the correctness check and the measured window (in the order the
-workload asks for), then the metrics, written as JSON to ``--out``.
+Order: JVM start and the first set-up, the cold pass, then the
+correctness check and the measured window in the order the workload asks
+for, with an untimed warm-up just before the window, then repeated
+set-up (the median is ``setup_s``), then the metrics, written as JSON to
+``--out``.
 """
 
 from __future__ import annotations
@@ -20,8 +22,15 @@ ROOT = os.path.dirname(HERE)
 sys.path[:0] = [ROOT]
 
 import tracing  # noqa: E402
+from probe import host_factor, host_probe  # noqa: E402
 
 SETUP_REPEATS = 3
+# Host probes: the first few of a run are JIT-cold and dropped; then as
+# many right before the window as right after it, and a few after each
+# timed set-up.
+PROBE_WARMUP = 3
+WINDOW_PROBES = 8
+SETUP_PROBES = 3
 COMMIT_DIR = re.compile(r"^c-\d+-[0-9a-f]{8}$")
 
 
@@ -35,6 +44,17 @@ def _session():
 
 def _median(xs):
     return statistics.median(xs) if xs else 0.0
+
+
+def _trimmed_mean(xs):
+    """Mean of the middle 80% of ``xs``. Unlike the median it does not
+    jump between the modes of a two-mode sample (a read that overlaps a
+    commit and one that does not), and unlike the mean it ignores the
+    odd GC pause."""
+    xs = sorted(xs)
+    cut = len(xs) // 10
+    xs = xs[cut:len(xs) - cut]
+    return sum(xs) / len(xs) if xs else 0.0
 
 
 def _p90(xs):
@@ -52,17 +72,18 @@ def _throughput(ok: list[dict]) -> float:
     return sum(len(w) / sum(w) for w in busy.values() if sum(w) > 0)
 
 
-def end_to_end(warm: list[dict], setup: list[float]) -> dict:
-    """Warm timings are sums of per-kind medians, so that they do not
-    depend on which kinds the window happened to end on."""
-    medians: dict[tuple[str, bool], float] = {}
+def end_to_end(warm: list[dict], setup: list[float], factor: float = 1.0, setup_factor: float = 1.0) -> dict:
+    """Warm timings are sums of per-kind trimmed means, so that they do
+    not depend on which kinds the window happened to end on. Warm
+    timings are multiplied by ``factor``, set-up by ``setup_factor``."""
+    per_kind: dict[tuple[str, bool], float] = {}
     for kind, write in {(r["kind"], r["write"]) for r in warm if r["ok"]}:
-        medians[kind, write] = _median([r["wall"] for r in warm if r["ok"] and r["kind"] == kind])
+        per_kind[kind, write] = _trimmed_mean([r["wall"] for r in warm if r["ok"] and r["kind"] == kind])
     return {
-        "setup_s": _median(setup),
-        "warm_pass_s": sum(medians.values()),
-        "read_pass_s": sum(v for (_, w), v in medians.items() if not w),
-        "write_pass_s": sum(v for (_, w), v in medians.items() if w),
+        "setup_s": setup_factor * _median(setup),
+        "warm_pass_s": factor * sum(per_kind.values()),
+        "read_pass_s": factor * sum(v for (_, w), v in per_kind.items() if not w),
+        "write_pass_s": factor * sum(v for (_, w), v in per_kind.items() if w),
     }
 
 
@@ -98,7 +119,8 @@ def per_layer(tr: tracing.Tracer, warm: list[dict], joblog: tracing.JobLog, e2e:
     n = max(1, len(warm))
     wall = sum(r["wall"] for r in warm) or 1e-9
     c = tr.counts
-    jobs = joblog.in_window(min(r["t0"] for r in warm), max(r["t1"] for r in warm)) if warm else []
+    # Jobs submitted inside an operation.
+    jobs = list({j["id"]: j for r in warm for j in joblog.in_window(r["t0"], r["t1"])}.values())
     gap = sum(r["wall"] - joblog.busy(r["t0"], r["t1"]) for r in warm)
     entry = sum(
         s["end"] - s["start"]
@@ -185,19 +207,9 @@ def main() -> int:
         from serve_mixed import ServeMixed as Workload
     wl = Workload(args.fixture, args.seed, tr)
 
-    # The first set-up includes the JVM launch; the others restart the
-    # session inside the running JVM.
+    # The first set-up includes the JVM launch and is reported apart.
     wl.setup(spark)
-    setup = [time.perf_counter() - t0]
-    for _ in range(SETUP_REPEATS - 1):
-        wl.teardown()
-        spark.stop()
-        t = time.perf_counter()
-        spark = _session()
-        wl.setup(spark)
-        setup.append(time.perf_counter() - t)
-
-    phases = {"jvm_start_s": jvm_start_s, "setup_after_jvm_s": sum(setup) - jvm_start_s}
+    phases = {"jvm_start_s": jvm_start_s, "first_setup_s": time.perf_counter() - t0}
     try:
         t = time.perf_counter()
         cold = wl.cold()
@@ -205,6 +217,14 @@ def main() -> int:
         t = time.perf_counter()
         if wl.check_first:
             wl.check(args.inject_wrong)
+        phases["check_s"] = time.perf_counter() - t
+        t = time.perf_counter()
+        warmup = wl.warmup()
+        for _ in range(PROBE_WARMUP):
+            host_probe(spark)
+        probes = [host_probe(spark) for _ in range(WINDOW_PROBES)]
+        phases["warmup_s"] = time.perf_counter() - t
+        t = time.perf_counter()
         if tr:
             tr.joblog = tracing.JobLog(spark)
             tr.warm = True
@@ -212,16 +232,34 @@ def main() -> int:
         if tr:
             tr.warm = False
             tr.poll_jobs(force=True)
+        probes += [host_probe(spark) for _ in range(WINDOW_PROBES)]
         if not wl.check_first:
             wl.check(args.inject_wrong)
-        phases["check_and_window_s"] = time.perf_counter() - t
+        phases["window_and_check_s"] = time.perf_counter() - t
     finally:
         wl.teardown()
 
-    e2e = end_to_end(warm, setup)
-    errors = [r["error"] for r in cold + warm if not r["ok"]]
+    # ``setup_s`` is timed after the window, in the warm JVM, where JIT
+    # warm-up does not blur it: each repeat restarts the session and sets
+    # the workload up again, and host probes after it give the host speed.
+    setup: list[float] = []
+    setup_probes: list[float] = []
+    t = time.perf_counter()
+    for _ in range(SETUP_REPEATS):
+        spark.stop()
+        t1 = time.perf_counter()
+        spark = _session()
+        wl.setup(spark)
+        setup.append(time.perf_counter() - t1)
+        setup_probes.extend(host_probe(spark) for _ in range(SETUP_PROBES))
+        wl.teardown()
+    phases["setup_repeats_s"] = time.perf_counter() - t
+
+    factor, setup_factor = host_factor(probes), host_factor(setup_probes)
+    e2e = end_to_end(warm, setup, factor, setup_factor)
+    errors = [r["error"] for r in cold + warmup + warm if not r["ok"]]
     result = {
-        "attempted": len(cold) + len(warm) + wl.checked,
+        "attempted": len(cold) + len(warmup) + len(warm) + wl.checked,
         "failed": len(errors) + len(wl.wrong),
         "end_to_end": e2e,
         "detail": {
@@ -230,8 +268,9 @@ def main() -> int:
             "warm_window_s": wl.window,
             "warm_samples": sum(1 for r in warm if r["ok"]),
             "cold_samples": len(cold),
-            "per_kind_median_s": {
-                k: _median([r["wall"] for r in warm if r["ok"] and r["kind"] == k])
+            "warmup_samples": len(warmup),
+            "per_kind_trimmed_mean_s": {
+                k: _trimmed_mean([r["wall"] for r in warm if r["ok"] and r["kind"] == k])
                 for k in sorted({r["kind"] for r in warm})
             },
             "cold_pass_s": sum(r["wall"] for r in cold),
@@ -242,6 +281,14 @@ def main() -> int:
             "per_kind_samples": {
                 k: sum(1 for r in warm if r["ok"] and r["kind"] == k) for k in sorted({r["kind"] for r in warm})
             },
+            "samples": {
+                k: [round(r["wall"], 3) for r in warm if r["ok"] and r["kind"] == k] for k in sorted({r["kind"] for r in warm})
+            },
+            "host_probe_s": _median(probes),
+            "host_probes": len(probes),
+            "host_factor": factor,
+            "setup_host_probe_s": _median(setup_probes),
+            "end_to_end_uncorrected": end_to_end(warm, setup),
             "errors": errors[:10],
             "wrong": wl.wrong[:10],
         },
