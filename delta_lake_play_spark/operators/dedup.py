@@ -14,11 +14,17 @@ Never an all-pairs join; the only quadratic term is bucket size.
 
 from __future__ import annotations
 
+import functools
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from delta_lake_play_spark.functions.fanout import fan_out
 from delta_lake_play_spark.llm import minhash as mh
+
+_log = logging.getLogger("spark_graft")
 
 
 def _hint(df: DataFrame, broadcast_hints: bool) -> DataFrame:
@@ -50,9 +56,20 @@ def _resolve_hints(df: DataFrame, broadcast_hints: bool | None) -> bool:
         return broadcast_hints
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # non-classic DataFrame (connect) — keep old default
+    except (AttributeError, Py4JError) as e:  # non-classic DataFrame (Connect)
+        _log_hints_fallback(type(e).__name__)
         return True
     return est <= _AUTO_BROADCAST_MAX_BYTES
+
+
+@functools.cache
+def _log_hints_fallback(error: str) -> None:
+    """Warn once per error type that hints fell back to broadcast."""
+    _log.warning(
+        "dedup: no catalyst size estimate (%s); broadcast_hints=None "
+        "falls back to True",
+        error,
+    )
 
 
 def _spread_ids(

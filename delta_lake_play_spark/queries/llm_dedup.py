@@ -647,7 +647,6 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 

@@ -244,7 +244,6 @@ def stream_table_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 
@@ -285,7 +284,6 @@ def stream_table_source_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import stream_table_jvm
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 
@@ -330,11 +328,9 @@ GROUP BY event_type
 @register("stream_medallion_gold", oracle=_MEDALLION_ORACLE)
 def stream_medallion_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
-    import uuid as _uuid
 
     from pyspark.sql import functions as F
 
-    from delta_lake_play_spark.functions import exact
     from delta_lake_play_spark.sources.table_stream import stream_table_jvm
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
@@ -419,7 +415,6 @@ def stream_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 
@@ -556,7 +551,6 @@ def stream_starting_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 
@@ -683,7 +677,6 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-split-agnostic by construction and live pacing is pinned by
     tests/test_streaming.py::test_max_versions_per_trigger_paces_
     steady_state."""
-    import uuid as _uuid
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T

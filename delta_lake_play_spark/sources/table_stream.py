@@ -24,7 +24,6 @@ Usage::
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator, Sequence
 
@@ -33,6 +32,13 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
+)
+
+from delta_lake_play_spark.table.versioned import (
+    VersionedTable,
+    _dv_count,
+    _dv_legacy,
+    _dv_sidecars,
 )
 
 
@@ -51,43 +57,12 @@ class _FilePartition(InputPartition):
         self.synth_change_type = synth_change_type
 
 
-def _log_entries(path: str) -> dict[int, str]:
-    """version -> log file path (no parse — cheap to list)."""
-    log_dir = os.path.join(path, "_log")
-    out = {}
-    for name in os.listdir(log_dir):
-        if name.endswith(".json") and not name.startswith("."):
-            out[int(name[: -len(".json")])] = os.path.join(log_dir, name)
-    return out
-
-
-def _read_entry(path: str, version: int) -> dict:
-    # Direct O(1) path construction — the previous listdir-per-read
-    # made a cold-start backfill O(versions² ) directory scans.
-    log_file = os.path.join(path, "_log", f"{version:020d}.json")
-    with open(log_file) as fh:
-        entry = json.load(fh)
-    if "filesManifest" in entry:
-        # Commits above manifest_inline_max spill the file list to a
-        # parquet sidecar and omit the "files" key (versioned.py
-        # _write_manifest) — resolve it here the same way _read_log
-        # does, or every wide commit would KeyError the stream.
-        import pyarrow.parquet as pq
-
-        man = pq.read_table(
-            os.path.join(path, "_log", entry["filesManifest"])
-        )
-        files = []
-        for p, num_rows, meta in zip(
-            man["path"].to_pylist(),
-            man["num_rows"].to_pylist(),
-            man["meta_json"].to_pylist(),
-        ):
-            f = {"path": p, "num_rows": num_rows}
-            f.update(json.loads(meta))
-            files.append(f)
-        entry["files"] = files
-    return entry
+def _latest_entry(path: str) -> dict:
+    """The newest commit entry, read through the table layer's log
+    reader. The handle takes no session: the stream planner runs in a
+    Python worker, which has none."""
+    table = VersionedTable(None, path)
+    return table._read_log_raw(table.latest_version())
 
 
 class VersionedTableStreamReader(DataSourceStreamReader):
@@ -141,14 +116,14 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         sv = options.get("startingVersion", options.get("startingversion"))
         self.starting_version = int(sv) if sv is not None else None
         self._progress: int | None = None
-        create = _read_entry(self.path, 0)
-        if create.get("operationParameters", {}).get("partitionBy"):
+        self._table = VersionedTable(None, self.path)
+        if self._table.partition_columns():
             raise NotImplementedError(
                 "streaming source over hive-partitioned tables: leaf files "
                 "do not carry the partition columns; read the batch snapshot "
                 "or stream an unpartitioned table"
             )
-        latest = _read_entry(self.path, max(_log_entries(self.path)))
+        latest = _latest_entry(self.path)
         self._schema = T.StructType.fromJson(latest["schema"])
         # column mapping: files carry PHYSICAL names; resolve logical
         # fields through the latest entry's map (stable physicals make
@@ -174,7 +149,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return {"version": first}
 
     def latestOffset(self) -> dict:
-        latest = max(_log_entries(self.path))
+        latest = self._table.latest_version()
         if self.max_versions is not None and self._progress is not None:
             # pace from the engine-acknowledged anchor; never below it
             # (the log only grows), so offsets cannot regress.
@@ -238,15 +213,14 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             prev_files = self._file_map(start["version"])
         k = self.files_per_task
         for v in range(start["version"] + 1, end["version"] + 1):
-            entry = _read_entry(self.path, v)
+            entry = self._table._read_log(v)
             cur = self._file_map(v)
             if "cdcFiles" in entry:
                 # key present = capture ran; [] = zero-change commit
                 # (e.g. a RESTORE reverting a layout-only OPTIMIZE) —
                 # contributes no batch rows, must not fail the stream
                 paths = sorted(
-                    os.path.join(self.path, f["path"])
-                    for f in entry["cdcFiles"]
+                    self._table._abs(f["path"]) for f in entry["cdcFiles"]
                 )
                 parts.extend(
                     _FilePartition(paths[i : i + k], v, None)
@@ -275,21 +249,12 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return parts
 
     def _file_map(self, version: int) -> dict[str, tuple]:
-        from delta_lake_play_spark.table.versioned import (
-            _dv_count,
-            _dv_legacy,
-            _dv_sidecars,
-        )
-
-        entry = _read_entry(self.path, version)
+        entry = self._table._read_log(version)
         out = {}
         for f in entry["files"]:
-            p = f["path"]
-            if not p.startswith("/"):
-                p = os.path.join(self.path, p)
             # DV identity (sidecars + legacy + count): growth between
             # versions must read as a CHANGE, not an append.
-            out[p] = (
+            out[self._table._abs(f["path"])] = (
                 tuple(_dv_sidecars(f)),
                 tuple(_dv_legacy(f)),
                 _dv_count(f),
@@ -347,9 +312,9 @@ class VersionedTableDataSource(DataSource):
 
     def schema(self) -> T.StructType:
         # latest schema wins (evolution only adds nullable columns)
-        latest = max(_log_entries(self.options["path"]))
-        entry = _read_entry(self.options["path"], latest)
-        schema = T.StructType.fromJson(entry["schema"])
+        schema = T.StructType.fromJson(
+            _latest_entry(self.options["path"])["schema"]
+        )
         if str(
             self.options.get(
                 "readChangeFeed", self.options.get("readchangefeed", "false")
@@ -385,7 +350,7 @@ def stream_table_jvm(spark, table_path: str):
     — fast append tailing, full-fidelity source when DML fidelity is
     needed — is the same split Delta users make between the file
     stream source and ``format('delta')``."""
-    latest = _read_entry(table_path, max(_log_entries(table_path)))
+    latest = _latest_entry(table_path)
     if any(k != v for k, v in (latest.get("columnMap") or {}).items()):
         raise NotImplementedError(
             "JVM fast-path streaming over a column-mapped table: the "

@@ -14,6 +14,12 @@ Layout::
                                             (no "=" in the name, so hive
                                             partition inference ignores it)
 
+Only this module knows the ``_log`` format: ``_commit_files`` is its
+one writer and ``_read_log`` / ``_read_log_raw`` its one reader
+(``delta_log.py`` and the streaming source read through them). The
+table config is version 0's ``operationParameters`` (written by
+CREATE, CONVERT or CLONE), parsed once per handle (``_config``).
+
 Each log entry carries the **complete file list** for its version
 (paths relative to the table root + per-file row counts and min/max
 stats), so a version is an arbitrary set of files spanning many
@@ -35,7 +41,9 @@ all (it re-references the old version's file list).
 Commit protocol: data files first (into a commit-unique directory —
 two racing writers can never collide on data paths), then the log
 entry via write-temp + atomic ``os.link``, which fails if the
-version number was taken. Losing writers raise
+version number was taken. Every version-0 writer (CREATE, CONVERT,
+CLONE) commits through the same link, so two racing creators of one
+path cannot both win. Losing writers raise
 ``VersionConflictError`` and the DML methods retry against the new
 latest snapshot (optimistic concurrency, Delta's loop on
 ``_delta_log`` conflicts). A writer that crashes between data write
@@ -297,7 +305,8 @@ class VersionedTable:
     #: can lower it to exercise the spill path on small tables.
     manifest_inline_max: int = 512
 
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, spark: SparkSession | None, path: str):
+        # spark=None gives a log-only handle (metadata reads, no DataFrames)
         self.spark = spark
         self.path = path
         self._log_dir = os.path.join(path, "_log")
@@ -420,7 +429,6 @@ class VersionedTable:
                     "cluster_by and partition_by are mutually exclusive "
                     "per column (Delta clustered tables are unpartitioned)"
                 )
-        os.makedirs(t._log_dir, exist_ok=True)
         for name, expr in (generated or {}).items():
             df = df.withColumn(name, F.expr(expr))
         if identity:
@@ -494,29 +502,13 @@ class VersionedTable:
         )
         if not files:
             raise FileNotFoundError(f"no parquet files under {source_dir}")
-        os.makedirs(t._log_dir, exist_ok=True)
-        entry = {
-            "version": 0,
-            "timestamp": t._commit_timestamp(0),
-            "operation": "CONVERT",
-            "operationParameters": {
-                "sourceDir": source_dir,
-                "partitionBy": [],
-                "constraints": {},
-            },
-            "num_rows": sum(f["num_rows"] for f in files),
-            "files": files,
-            "schema": json.loads(schema.json()),
-        }
-        tmp = os.path.join(t._log_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        try:
-            os.link(tmp, os.path.join(t._log_dir, f"{0:020d}.json"))
-        except FileExistsError:
-            raise VersionConflictError("version 0 committed by another writer") from None
-        finally:
-            os.unlink(tmp)
+        t._commit_files(
+            None,
+            files,
+            "CONVERT",
+            {"sourceDir": source_dir, "partitionBy": [], "constraints": {}},
+            schema,
+        )
         return t
 
     @classmethod
@@ -623,12 +615,12 @@ class VersionedTable:
             raise ValueError("pass both txn_app_id and txn_version, or neither")
 
         def attempt() -> int:
-            base = self.latest_version()
+            latest = self.latest_version()
             if txn_app_id is not None:
                 last = self.last_txn_version(txn_app_id)
                 if last is not None and txn_version <= last:
-                    return base  # already applied: idempotent no-op
-            entry = self._read_log(base)
+                    return latest  # already applied: idempotent no-op
+            entry = self._read_log(latest)
             schema = self._entry_schema(entry)
             gen = set(self.generated_columns())
             idcfg = self.identity_info()
@@ -686,15 +678,12 @@ class VersionedTable:
                 ]
             )
             return self._commit_files(
-                aligned, list(entry["files"]), "APPEND", {}, schema,
-                base_version=base,
+                aligned, list(entry["files"]), "APPEND", {}, schema, base=entry,
                 txn=(
                     {"appId": txn_app_id, "version": int(txn_version)}
                     if txn_app_id is not None
                     else None
                 ),
-                column_map=entry.get("columnMap"),
-                retired_physical=entry.get("retiredPhysical"),
             )
 
         return self._retrying(attempt)
@@ -754,8 +743,7 @@ class VersionedTable:
         src_keys = source.groupBy(key).count().persist()
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             t_cols = [f.name for f in schema.fields]
             s_cols = set(source.columns)
@@ -958,8 +946,7 @@ class VersionedTable:
                 cdc = pre.unionByName(post).unionByName(ins)
             return self._commit_files(
                 new_rows, carried, "MERGE", params, new_schema,
-                base_version=base, cdc_df=cdc, column_map=merge_map,
-                retired_physical=entry.get("retiredPhysical"),
+                base={**entry, "columnMap": merge_map}, cdc_df=cdc,
             )
 
         try:
@@ -978,8 +965,7 @@ class VersionedTable:
         hit = F.coalesce(pred, F.lit(False))
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             cmap = entry.get("columnMap")
             cur = self._read_files(
@@ -995,9 +981,7 @@ class VersionedTable:
             params = {"predicate": str(predicate)}
             if not touched:
                 return self._commit_files(
-                    None, carried, "DELETE", params, schema,
-                    base_version=base, column_map=cmap,
-                    retired_physical=entry.get("retiredPhysical"),
+                    None, carried, "DELETE", params, schema, base=entry,
                 )
             kept = self._read_files(hit_files, schema, column_map=cmap).filter(~hit)
             cdc = None
@@ -1008,9 +992,7 @@ class VersionedTable:
                     .withColumn("_change_type", F.lit("delete"))
                 )
             return self._commit_files(
-                kept, carried, "DELETE", params, schema, base_version=base,
-                cdc_df=cdc, column_map=cmap,
-                retired_physical=entry.get("retiredPhysical"),
+                kept, carried, "DELETE", params, schema, base=entry, cdc_df=cdc,
             )
 
         return self._retrying(attempt)
@@ -1030,8 +1012,7 @@ class VersionedTable:
         hit = F.coalesce(pred, F.lit(False))
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             _check_set_columns(set_cols, schema)
             cmap = entry.get("columnMap")
@@ -1048,9 +1029,7 @@ class VersionedTable:
             params = {"where": str(where)}
             if not touched:
                 return self._commit_files(
-                    None, carried, "UPDATE", params, schema,
-                    base_version=base, column_map=cmap,
-                    retired_physical=entry.get("retiredPhysical"),
+                    None, carried, "UPDATE", params, schema, base=entry,
                 )
             updated = self._read_files(hit_files, schema, column_map=cmap)
             # One select so every SET expression (and the predicate)
@@ -1089,9 +1068,7 @@ class VersionedTable:
                     post.withColumn("_change_type", F.lit("update_postimage"))
                 )
             return self._commit_files(
-                updated, carried, "UPDATE", params, schema, base_version=base,
-                cdc_df=cdc, column_map=cmap,
-                retired_physical=entry.get("retiredPhysical"),
+                updated, carried, "UPDATE", params, schema, base=entry, cdc_df=cdc,
             )
 
         return self._retrying(attempt)
@@ -1144,8 +1121,7 @@ class VersionedTable:
         hit = F.coalesce(pred, F.lit(False))
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             files = entry["files"]
             cmap = entry.get("columnMap")
@@ -1190,9 +1166,7 @@ class VersionedTable:
             if not counts:  # no-op delete: drop the empty sidecar
                 _rmtree(sidecar_dir)
                 return self._commit_files(
-                    None, list(files), "DELETE_MOR", params, schema,
-                    base_version=base, column_map=cmap,
-                    retired_physical=entry.get("retiredPhysical"),
+                    None, list(files), "DELETE_MOR", params, schema, base=entry,
                 )
             out = []
             for f in files:
@@ -1221,9 +1195,7 @@ class VersionedTable:
                     .withColumn("_change_type", F.lit("delete"))
                 )
             return self._commit_files(
-                None, out, "DELETE_MOR", params, schema, base_version=base,
-                cdc_df=cdc, column_map=cmap,
-                retired_physical=entry.get("retiredPhysical"),
+                None, out, "DELETE_MOR", params, schema, base=entry, cdc_df=cdc,
             )
 
         return self._retrying(attempt)
@@ -1263,8 +1235,7 @@ class VersionedTable:
         hit = F.coalesce(pred, F.lit(False))
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             files = entry["files"]
             cmap = entry.get("columnMap")
@@ -1303,9 +1274,7 @@ class VersionedTable:
             if not counts:  # no-op update: drop the empty sidecar
                 _rmtree(sidecar_dir)
                 return self._commit_files(
-                    None, list(files), "UPDATE_MOR", params, schema,
-                    base_version=base, column_map=cmap,
-                    retired_physical=entry.get("retiredPhysical"),
+                    None, list(files), "UPDATE_MOR", params, schema, base=entry,
                 )
             out = []
             for f in files:
@@ -1342,9 +1311,7 @@ class VersionedTable:
                     post.withColumn("_change_type", F.lit("update_postimage"))
                 )
             return self._commit_files(
-                post, out, "UPDATE_MOR", params, schema, base_version=base,
-                cdc_df=cdc, column_map=cmap,
-                retired_physical=entry.get("retiredPhysical"),
+                post, out, "UPDATE_MOR", params, schema, base=entry, cdc_df=cdc,
             )
 
         return self._retrying(attempt)
@@ -1378,8 +1345,7 @@ class VersionedTable:
             )
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             cmap = entry.get("columnMap")
             cur = self._read_files(
@@ -1443,8 +1409,7 @@ class VersionedTable:
                 )
             return self._commit_files(
                 aligned, carried, "REPLACE_WHERE", params, schema,
-                base_version=base, cdc_df=cdc, column_map=cmap,
-                retired_physical=entry.get("retiredPhysical"),
+                base=entry, cdc_df=cdc,
             )
 
         try:
@@ -1496,8 +1461,7 @@ class VersionedTable:
             )
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             cmap = entry.get("columnMap")
             cur = self._read_files(
@@ -1568,8 +1532,7 @@ class VersionedTable:
                 )
             return self._commit_files(
                 aligned, carried, "REPLACE_WHERE", params, schema,
-                base_version=base, cdc_df=cdc, column_map=cmap,
-                retired_physical=entry.get("retiredPhysical"),
+                base=entry, cdc_df=cdc,
             )
 
         try:
@@ -1598,7 +1561,7 @@ class VersionedTable:
             version = self._resolve_timestamp(timestamp)
 
         def attempt() -> int:
-            base = self.latest_version()
+            latest = self._read_log(self.latest_version())
             entry = self._read_log(version)
             cdc = None
             if self.cdf_enabled():
@@ -1606,7 +1569,7 @@ class VersionedTable:
                 # (Delta emits the same shape). Shared files cancel by
                 # identity, so the diff reads only files present in
                 # exactly one of the two snapshots.
-                cdc = self._snapshot_diff(self._read_log(base), entry)
+                cdc = self._snapshot_diff(latest, entry)
             params: dict = {"sourceVersion": version}
             # ADVICE r9 (medium): without this, column_defaults()'s
             # newest-record-wins scan would keep a post-sourceVersion
@@ -1630,10 +1593,13 @@ class VersionedTable:
                 "RESTORE",
                 params,
                 self._entry_schema(entry),
-                base_version=base,
+                # the restored version's column mapping, not latest's
+                base={
+                    **latest,
+                    "columnMap": entry.get("columnMap"),
+                    "retiredPhysical": entry.get("retiredPhysical"),
+                },
                 cdc_df=cdc,
-                column_map=entry.get("columnMap"),
-                retired_physical=entry.get("retiredPhysical"),
             )
 
         return self._retrying(attempt)
@@ -1650,8 +1616,7 @@ class VersionedTable:
         (same restriction class as Delta's)."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             names = [f.name for f in schema.fields]
             if old not in names:
@@ -1684,9 +1649,7 @@ class VersionedTable:
                 "RENAME_COLUMN",
                 params,
                 new_schema,
-                base_version=base,
-                column_map=cmap,
-                retired_physical=entry.get("retiredPhysical"),
+                base={**entry, "columnMap": cmap},
             )
 
         return self._retrying(attempt)
@@ -1700,8 +1663,7 @@ class VersionedTable:
         Structural columns refuse to drop (see rename_column)."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             names = [f.name for f in schema.fields]
             if name not in names:
@@ -1728,9 +1690,7 @@ class VersionedTable:
                 "DROP_COLUMN",
                 params,
                 new_schema,
-                base_version=base,
-                column_map=cmap,
-                retired_physical=sorted(retired),
+                base={**entry, "columnMap": cmap, "retiredPhysical": retired},
             )
 
         return self._retrying(attempt)
@@ -1761,8 +1721,7 @@ class VersionedTable:
         )
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             if name in {f.name for f in schema.fields}:
                 raise ValueError(f"column {name!r} already exists")
@@ -1798,9 +1757,7 @@ class VersionedTable:
                 "ADD_COLUMN",
                 params,
                 new_schema,
-                base_version=base,
-                column_map=cmap or None,
-                retired_physical=entry.get("retiredPhysical"),
+                base={**entry, "columnMap": cmap},
             )
 
         return self._retrying(attempt)
@@ -1905,8 +1862,7 @@ class VersionedTable:
         qualify (nothing to compact)."""
 
         def attempt() -> int | None:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             small = [
                 f
@@ -1930,10 +1886,7 @@ class VersionedTable:
                     "compacted": len(small),
                     "targetFiles": target_files,
                 },
-                schema,
-                base_version=base,
-                column_map=entry.get("columnMap"),
-                retired_physical=entry.get("retiredPhysical"),
+                schema, base=entry,
             )
 
         return self._retrying(attempt)
@@ -2044,7 +1997,7 @@ class VersionedTable:
         clone = VersionedTable(self.spark, path)
         if clone.exists():
             raise FileExistsError(f"versioned table already exists at {path}")
-        os.makedirs(clone._log_dir, exist_ok=True)
+
         def clone_entry(f: dict) -> dict:
             g = {**f, "path": self._abs(f["path"])}
             if _dv_sidecars(f):  # sidecars live under the SOURCE table
@@ -2054,32 +2007,27 @@ class VersionedTable:
                 }
             return g
 
-        files = [clone_entry(f) for f in src["files"]]
-        entry = {
-            "version": 0,
-            "timestamp": clone._commit_timestamp(0),
-            "operation": "CLONE",
-            "operationParameters": {
+        # a renamed/dropped-column source reads through its map; the
+        # clone inherits it (and the retired set, so later evolution
+        # on the clone can't resurface dropped bytes) plus clustering
+        inherited = {
+            k: src[k]
+            for k in ("columnMap", "retiredPhysical", "clusterBy")
+            if src.get(k)
+        }
+        clone._commit_files(
+            None,
+            [clone_entry(f) for f in src["files"]],
+            "CLONE",
+            {
                 "sourcePath": self.path,
                 "sourceVersion": src["version"],
                 "partitionBy": self.partition_columns(),
                 "constraints": self.constraints(),
             },
-            "num_rows": src["num_rows"],
-            "files": files,
-            "schema": src["schema"],
-        }
-        # a renamed/dropped-column source reads through its map; the
-        # clone inherits it (and the retired set, so later evolution
-        # on the clone can't resurface dropped bytes)
-        if src.get("columnMap"):
-            entry["columnMap"] = src["columnMap"]
-        if src.get("retiredPhysical"):
-            entry["retiredPhysical"] = src["retiredPhysical"]
-        if src.get("clusterBy"):
-            entry["clusterBy"] = src["clusterBy"]
-        with open(os.path.join(clone._log_dir, f"{0:020d}.json"), "w") as fh:
-            json.dump(entry, fh)
+            self._entry_schema(src),
+            base=inherited,
+        )
         return clone
 
     def optimize(
@@ -2126,8 +2074,7 @@ class VersionedTable:
             )
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             hit, carried = list(entry["files"]), []
             if where is not None:
@@ -2161,7 +2108,7 @@ class VersionedTable:
                     f for i, f in enumerate(entry["files"]) if i not in keep
                 ]
                 if not hit:
-                    return base  # nothing in scope: no-op, no commit
+                    return entry["version"]  # nothing in scope: no-op, no commit
             df = self._read_entry({**entry, "files": hit})
             # A clustered table's plain OPTIMIZE applies the DECLARED
             # clustering columns (Delta: OPTIMIZE on a clustered table
@@ -2189,10 +2136,7 @@ class VersionedTable:
                     "zorderBy": zorder_by or [],
                     **({"predicate": where} if where is not None else {}),
                 },
-                schema,
-                base_version=base,
-                column_map=entry.get("columnMap"),
-                retired_physical=entry.get("retiredPhysical"),
+                schema, base=entry,
             )
 
         return self._retrying(attempt)
@@ -2978,53 +2922,42 @@ class VersionedTable:
             raise ValueError(f"no version at or before {ts.isoformat()}")
         return max(candidates)
 
+    def _config(self) -> dict:
+        """The table config: version 0's ``operationParameters``
+        (CREATE, CONVERT or CLONE), parsed once per handle — version 0
+        never changes once linked. Empty, and not memoized, while
+        version 0 does not exist."""
+        cfg = getattr(self, "_cfg", None)
+        if cfg is None:
+            try:
+                cfg = self._read_log_raw(0).get("operationParameters", {})
+            except FileNotFoundError:
+                return {}
+            self._cfg = cfg
+        return cfg
+
     def partition_columns(self) -> list[str]:
-        """Table partitioning, from the CREATE entry (empty if none).
-        Memoized — partitioning is fixed at CREATE time."""
-        cached = getattr(self, "_part_cols", None)
-        if cached is not None:
-            return cached
-        if 0 not in self._versions():
-            return []
-        cols = self._read_log_raw(0).get("operationParameters", {}).get("partitionBy", [])
-        self._part_cols = cols
-        return cols
+        """Table partitioning, from the table config (empty if none)."""
+        return self._config().get("partitionBy", [])
 
     def constraints(self) -> dict[str, str]:
-        """Table CHECK constraints, from the CREATE entry."""
-        if 0 not in self._versions():
-            return {}
-        return self._read_log_raw(0).get("operationParameters", {}).get("constraints", {})
+        """Table CHECK constraints, from the table config."""
+        return self._config().get("constraints", {})
 
     def bloom_filter_columns(self) -> list[str]:
-        """Columns with per-file bloom indexes, from the CREATE entry."""
-        if 0 not in self._versions():
-            return []
-        return self._read_log_raw(0).get("operationParameters", {}).get(
-            "bloomFilterCols", []
-        )
+        """Columns with per-file bloom indexes, from the table config."""
+        return self._config().get("bloomFilterCols", [])
 
     def generated_columns(self) -> dict[str, str]:
-        """Generated-column expressions, from the CREATE entry."""
-        if 0 not in self._versions():
-            return {}
-        return self._read_log_raw(0).get("operationParameters", {}).get(
-            "generated", {}
-        )
+        """Generated-column expressions, from the table config."""
+        return self._config().get("generated", {})
 
     def identity_info(self) -> dict | None:
         """Identity-column config (Delta ``GENERATED ALWAYS AS
-        IDENTITY``) from the CREATE entry — ``{"column", "start",
+        IDENTITY``) from the table config — ``{"column", "start",
         "step"}`` — or None. The running high-water mark lives in
         each commit entry (``identityHighWaterMark``), never here."""
-        if 0 not in self._versions():
-            return None
-        return (
-            self._read_log_raw(0)
-            .get("operationParameters", {})
-            .get("identity")
-            or None
-        )
+        return self._config().get("identity") or None
 
     def _identity_hwm(self, entry: dict, idcfg: dict) -> int:
         return int(
@@ -3036,64 +2969,33 @@ class VersionedTable:
 
     def delta_mirror_enabled(self) -> bool:
         """Whether every commit also maintains the open-protocol
-        Delta log (``_delta_log``), from the CREATE entry."""
-        if 0 not in self._versions():
-            return False
-        return bool(
-            self._read_log_raw(0).get("operationParameters", {}).get(
-                "deltaMirror", False
-            )
-        )
+        Delta log (``_delta_log``), from the table config."""
+        return bool(self._config().get("deltaMirror", False))
 
     def cdf_enabled(self) -> bool:
         """Whether commits capture the Change Data Feed (Delta
-        ``delta.enableChangeDataFeed``), from the CREATE entry."""
-        if 0 not in self._versions():
-            return False
-        return bool(
-            self._read_log_raw(0).get("operationParameters", {}).get(
-                "enableCdf", False
-            )
-        )
+        ``delta.enableChangeDataFeed``), from the table config."""
+        return bool(self._config().get("enableCdf", False))
 
     def append_only_enabled(self) -> bool:
         """Whether the table refuses row-changing DML (Delta
-        ``delta.appendOnly``), from the CREATE entry."""
-        if 0 not in self._versions():
-            return False
-        return bool(
-            self._read_log_raw(0).get("operationParameters", {}).get(
-                "appendOnly", False
-            )
-        )
+        ``delta.appendOnly``), from the table config."""
+        return bool(self._config().get("appendOnly", False))
 
     def dv_mirror_policy(self) -> str:
         """How MoR deletion vectors reach the mirror: ``materialize``
         (rewrite survivors, protocol stays (1, 2)) or ``native``
         (protocol ``deletionVector`` specs + roaring .bin files, the
-        ``deletionVectors`` reader-writer feature). From the CREATE
-        entry."""
-        if 0 not in self._versions():
-            return "materialize"
-        return (
-            self._read_log_raw(0)
-            .get("operationParameters", {})
-            .get("dvMirrorPolicy")
-            or "materialize"
-        )
+        ``deletionVectors`` reader-writer feature). From the table
+        config."""
+        return self._config().get("dvMirrorPolicy") or "materialize"
 
     def vacuum_protocol_check_enabled(self) -> bool:
         """Whether the mirror declares the ``vacuumProtocolCheck``
         reader-writer marker feature (PROTOCOL.md): VACUUM must
         verify it understands the table's protocol before reclaiming
-        files. From the CREATE entry."""
-        if 0 not in self._versions():
-            return False
-        return bool(
-            self._read_log_raw(0).get("operationParameters", {}).get(
-                "vacuumProtocolCheck", False
-            )
-        )
+        files. From the table config."""
+        return bool(self._config().get("vacuumProtocolCheck", False))
 
     def _vacuum_check_mirror_protocol(self) -> None:
         """The vacuumProtocolCheck obligation: before deleting ANY
@@ -3153,20 +3055,13 @@ class VersionedTable:
             )
 
     def checkpoint_policy(self) -> str:
-        """Mirror checkpoint policy from the CREATE entry: ``classic``
+        """Mirror checkpoint policy from the table config: ``classic``
         (single-file parquet checkpoint) or ``v2`` (uuid-named
         manifest + file-action sidecars under ``_delta_log/_sidecars``
         — the reader-writer table feature ``v2Checkpoint``). V2 is the
         100 TB policy: the top-level file stays O(#shards) while
         millions of add actions shard across parallel sidecars."""
-        if 0 not in self._versions():
-            return "classic"
-        return (
-            self._read_log_raw(0)
-            .get("operationParameters", {})
-            .get("checkpointPolicy")
-            or "classic"
-        )
+        return self._config().get("checkpointPolicy") or "classic"
 
     def set_cluster_by(self, cols: list[str]) -> int:
         """Declare (or clear, with ``[]``) the table's clustering
@@ -3180,8 +3075,7 @@ class VersionedTable:
         the clustering columns through the protocol."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            entry = self._read_log(base)
+            entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             names = {f.name for f in schema.fields}
             missing = [c for c in cols if c not in names]
@@ -3199,10 +3093,7 @@ class VersionedTable:
                 list(entry["files"]),
                 "CLUSTER BY",
                 {"clusterBy": list(cols)},
-                schema,
-                base_version=base,
-                column_map=entry.get("columnMap"),
-                retired_physical=entry.get("retiredPhysical"),
+                schema, base=entry,
             )
 
         return self._retrying(attempt)
@@ -3252,7 +3143,7 @@ class VersionedTable:
 
     def row_tracking_enabled(self) -> bool:
         """Whether commits assign row-id ranges to fresh files (Delta
-        ``delta.enableRowTracking``), from the CREATE entry. Fresh
+        ``delta.enableRowTracking``), from the table config. Fresh
         (non-materialized) row tracking: every file added to the table
         gets a contiguous id range ``[baseRowId, baseRowId +
         num_rows - 1]`` above a commit-logged high-water mark, so a
@@ -3262,30 +3153,18 @@ class VersionedTable:
         columns, which this layer deliberately does not add to data
         files (zero write amplification; same trade Delta makes when
         ``delta.rowTracking.preserved`` is unavailable)."""
-        if 0 not in self._versions():
-            return False
-        return bool(
-            self._read_log_raw(0).get("operationParameters", {}).get(
-                "rowTracking", False
-            )
-        )
+        return bool(self._config().get("rowTracking", False))
 
     def ict_enabled(self) -> bool:
         """Whether the mirror advertises Delta in-commit timestamps
-        (writer feature ``inCommitTimestamp``), from the CREATE entry.
+        (writer feature ``inCommitTimestamp``), from the table config.
         The private log's commit timestamps are ALREADY the in-commit
         clock — strictly increasing, bumped past the previous commit
         (``_commit_timestamp``) — so the feature costs nothing here;
         what it adds is the protocol declaration that lets external
         readers time-travel by the log's clock instead of trusting
         commit-file modification times."""
-        if 0 not in self._versions():
-            return False
-        return bool(
-            self._read_log_raw(0).get("operationParameters", {}).get(
-                "inCommitTimestamps", False
-            )
-        )
+        return bool(self._config().get("inCommitTimestamps", False))
 
     def row_id_high_water_mark(self, version: int | None = None) -> int:
         """The highest row id ever assigned as of ``version`` (latest
@@ -3324,35 +3203,36 @@ class VersionedTable:
         operation: str,
         params: dict,
         schema: T.StructType,
-        base_version: int | None = None,
+        base: dict | None = None,
         cdc_df: DataFrame | None = None,
         txn: dict | None = None,
-        column_map: dict | None = None,
-        retired_physical: list | None = None,
     ) -> int:
         """Write ``new_df`` (if any) as fresh data files, then commit
-        a log entry whose file list is ``carried`` + the new files.
+        a log entry whose file list is ``carried`` + the new files —
+        the only writer of ``_log`` entries.
         Raises :class:`VersionConflictError` if the version was taken
         between read and commit (the written data directory is left
         orphaned for ``vacuum`` — readers never see it).
 
-        ``base_version`` is the snapshot version the caller's attempt
-        READ; the commit targets exactly ``base_version + 1``. This is
-        what makes the optimistic concurrency sound: picking the
-        version at commit time (``_next_version``) instead would let a
-        writer that read snapshot N succeed at N+2 after another
-        writer landed N+1 — silently dropping N+1's changes (a lost
-        update; caught by the r4 concurrent-writer torture test).
-        ``None`` (CREATE only) falls back to next-version discovery."""
-        version = self._next_version() if base_version is None else base_version + 1
-        mirror = (
-            params.get("deltaMirror")
-            if operation == "CREATE"
-            else self.delta_mirror_enabled()
-        )
-        gen = (
-            params.get("generated") if operation == "CREATE" else self.generated_columns()
-        )
+        ``base`` is the log entry the caller's attempt READ; the commit
+        targets exactly ``base["version"] + 1``. This is what makes
+        the optimistic concurrency sound: picking the version at
+        commit time instead would let a writer that read snapshot N
+        succeed at N+2 after another writer landed N+1 — silently
+        dropping N+1's changes (a lost update; caught by the r4
+        concurrent-writer torture test). The new entry also inherits
+        base's row-id and identity high-water marks, its declared
+        clustering, its column mapping (``columnMap`` /
+        ``retiredPhysical``; a commit that changes the mapping passes
+        base with the new values) and a timestamp strictly after
+        base's. A base without ``version`` (``None`` for CREATE and
+        CONVERT; CLONE's inherited mapping and clustering) commits
+        version 0, whose config is ``params`` itself; every later
+        commit reads the stored config."""
+        base = base or {}
+        version = base.get("version", -1) + 1
+        cfg = params if version == 0 else self._config()
+        gen = cfg.get("generated")
         if gen and new_df is not None:
             # Generated columns (Delta GENERATED ALWAYS AS shape) are
             # recomputed from their expressions at EVERY write — the
@@ -3360,21 +3240,17 @@ class VersionedTable:
             # can never diverge, and a writer may omit them entirely.
             for name, expr in gen.items():
                 new_df = new_df.withColumn(name, F.expr(expr))
-        checks = (
-            params.get("constraints") if operation == "CREATE" else self.constraints()
-        )
+        checks = cfg.get("constraints")
         if checks and new_df is not None and operation != "OPTIMIZE":
             self._check_constraints(new_df, checks)
-        part_cols = (
-            params.get("partitionBy") if operation == "CREATE" else self.partition_columns()
-        )
+        part_cols = cfg.get("partitionBy")
         # Column mapping (rename/drop support): logical names may
         # differ from the PHYSICAL parquet column names (stable since
         # column creation). Data/change files are always written with
         # physical names; footer stats are re-keyed back to logical so
         # every stats consumer (skipping, blooms, pruning) stays in
         # logical space. Identity map = zero-cost no-op path.
-        cmap = {k: v for k, v in (column_map or {}).items() if k != v}
+        cmap = {k: v for k, v in (base.get("columnMap") or {}).items() if k != v}
         inv_cmap = {v: k for k, v in cmap.items()}
 
         def _phys_schema(s: T.StructType) -> T.StructType:
@@ -3429,11 +3305,7 @@ class VersionedTable:
             )
             if cmap:
                 _logical_keys(new_entries)
-            bloom_cols = (
-                params.get("bloomFilterCols")
-                if operation == "CREATE"
-                else self.bloom_filter_columns()
-            )
+            bloom_cols = cfg.get("bloomFilterCols")
             if bloom_cols:
                 self._attach_blooms(new_entries, schema, bloom_cols)
         cdc_entries: list[dict] = []
@@ -3479,20 +3351,21 @@ class VersionedTable:
             if cmap:
                 _logical_keys(cdc_entries)
         files = carried + new_entries
+        # strictly after the base commit, so timestamp travel is
+        # total-ordered without sleeping
+        now = datetime.now(timezone.utc)
+        if "timestamp" in base:
+            prev = datetime.fromisoformat(base["timestamp"])
+            now = max(now, prev + timedelta(milliseconds=1))
         entry = {
             "version": version,
-            "timestamp": self._commit_timestamp(version),
+            "timestamp": now.isoformat(),
             "operation": operation,
             "operationParameters": params,
             "num_rows": sum(f["num_rows"] - _dv_count(f) for f in files),
             "schema": json.loads(schema.json()),
         }
-        rt = (
-            params.get("rowTracking")
-            if operation == "CREATE"
-            else self.row_tracking_enabled()
-        )
-        if rt:
+        if cfg.get("rowTracking"):
             # Fresh row-id assignment (Delta rowTracking): each new
             # file takes the next contiguous id range above the
             # base snapshot's high-water mark; carried files keep the
@@ -3501,32 +3374,19 @@ class VersionedTable:
             # never moves rows). Zero extra jobs: ranges come from the
             # footer row counts already in hand. The mark is monotone
             # across every commit, so ids are never reused.
-            hwm = -1
-            if base_version is not None:
-                hwm = int(
-                    self._read_log_raw(base_version).get("rowIdHighWaterMark", -1)
-                )
+            hwm = int(base.get("rowIdHighWaterMark", -1))
             for e in new_entries:
                 e["baseRowId"] = hwm + 1
                 e["defaultRowCommitVersion"] = version
                 hwm += int(e["num_rows"])
             entry["rowIdHighWaterMark"] = hwm
-        idcfg = (
-            params.get("identity") if operation == "CREATE" else self.identity_info()
-        )
+        idcfg = cfg.get("identity")
         if idcfg:
             # High-water mark advance costs nothing: the max assigned
             # id comes from the written files' footer stats, and it is
             # monotone across EVERY commit (delete/restore/optimize
             # carry the previous mark forward) so ids are never reused.
-            prev = int(idcfg["start"]) - int(idcfg["step"])
-            if base_version is not None:
-                prev = int(
-                    self._read_log_raw(base_version).get(
-                        "identityHighWaterMark", prev
-                    )
-                )
-            cand = [prev]
+            cand = [self._identity_hwm(base, idcfg)]
             for e in new_entries:
                 s = e.get("stats", {}).get(idcfg["column"])
                 if s and s[1] is not None:
@@ -3539,10 +3399,8 @@ class VersionedTable:
         cb = (
             params.get("clusterBy")
             if operation in ("CREATE", "CLUSTER BY")
-            else None
+            else base.get("clusterBy")
         )
-        if cb is None and base_version is not None:
-            cb = self._read_log_raw(base_version).get("clusterBy")
         if cb:
             entry["clusterBy"] = list(cb)
         if cdc_df is not None:
@@ -3556,8 +3414,8 @@ class VersionedTable:
             entry["txn"] = txn
         if cmap:
             entry["columnMap"] = cmap
-        if retired_physical:
-            entry["retiredPhysical"] = sorted(set(retired_physical))
+        if base.get("retiredPhysical"):
+            entry["retiredPhysical"] = sorted(set(base["retiredPhysical"]))
         os.makedirs(self._log_dir, exist_ok=True)
         if len(files) > self.manifest_inline_max:
             entry["filesManifest"] = self._write_manifest(version, files)
@@ -3581,7 +3439,12 @@ class VersionedTable:
             ) from None
         finally:
             os.unlink(tmp)
-        if mirror:
+        top, defaults = getattr(self, "_defaults_cache", (-1, {}))
+        if top == version - 1:  # keep column_defaults() warm: no rescan
+            self._defaults_cache = (
+                version, dict(params.get("columnDefaults", defaults))
+            )
+        if cfg.get("deltaMirror"):
             # After the private commit won the version race: mirror it
             # into the open-protocol Delta log. sync() is idempotent
             # and self-healing, so a crash right here is repaired by
@@ -3593,29 +3456,6 @@ class VersionedTable:
 
             _delta_sync(self, materialize_dvs=True)
         return version
-
-    def _next_version(self) -> int:
-        """Target version for a commit — the race window optimistic
-        concurrency closes: two writers may both pick N, only one
-        ``os.link``s the log entry, the other retries."""
-        versions = self._versions()
-        return (max(versions) + 1) if versions else 0
-
-    def _commit_timestamp(self, version: int) -> str:
-        """Wall-clock, bumped to strictly after the previous commit so
-        timestamp travel is total-ordered without sleeping."""
-        now = datetime.now(timezone.utc)
-        if version > 0:
-            try:
-                prev = datetime.fromisoformat(
-                    self._read_log_raw(version - 1)["timestamp"]
-                )
-            except FileNotFoundError:
-                return now.isoformat()
-            floor = prev + timedelta(milliseconds=1)
-            if now < floor:
-                now = floor
-        return now.isoformat()
 
     def _footer_entries(
         self,

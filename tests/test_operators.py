@@ -274,6 +274,36 @@ def test_broadcast_hints_auto_flip_past_size_threshold(spark, sf_dir, monkeypatc
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+def test_resolve_hints_fallback_logs_warning(caplog):
+    """A DataFrame whose plan-stats call raises (a non-classic,
+    Connect-style frame) keeps the broadcast default and says so
+    through the package logger instead of failing silently."""
+    from py4j.protocol import Py4JError
+
+    from delta_lake_play_spark.operators import dedup as dd
+
+    class _Plan:
+        def optimizedPlan(self):
+            raise Py4JError("no plan stats")
+
+    class _Jdf:
+        def queryExecution(self):
+            return _Plan()
+
+    class _Frame:
+        _jdf = _Jdf()
+
+    dd._log_hints_fallback.cache_clear()
+    with caplog.at_level("WARNING", logger="spark_graft"):
+        assert dd._resolve_hints(_Frame(), None) is True
+        assert dd._resolve_hints(object(), None) is True  # AttributeError
+        assert dd._resolve_hints(_Frame(), None) is True
+    warned = [r for r in caplog.records if r.name == "spark_graft"]
+    assert [r.levelname for r in warned] == ["WARNING", "WARNING"]
+    assert "Py4JError" in warned[0].getMessage()
+    assert "AttributeError" in warned[1].getMessage()
+
+
 def test_cms_python_probe_matches_jvm(spark):
     """The numpy read-path in operators/sketches.py must reproduce
     ``CountMinSketchImpl.estimateCount`` bit-for-bit — same wire

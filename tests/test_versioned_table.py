@@ -10,6 +10,7 @@ from pyspark.sql import types as T
 from delta_lake_play_spark.table.versioned import (
     MergeSchemaError,
     MergeSourceKeyError,
+    VersionConflictError,
     VersionedTable,
     _dv_count as dv_count,
     _dv_sidecars as dv_sidecars,
@@ -309,6 +310,38 @@ def test_shallow_clone_shares_files_and_diverges(spark):
     clone.vacuum(retain_last=1, min_age_seconds=0)
     assert all(os.path.exists(p) for p in src_files)
     assert t.to_df().count() == 900
+
+
+def test_racing_clones_to_one_path_keep_the_first(spark, names, monkeypatch):
+    """Two clones racing to one destination: the loser raises and the
+    winner's version 0 stays intact and readable. The race window is
+    forced: version 0 of the destination appears (the winner commits)
+    between the loser's existence check and its write."""
+    names.merge(spark.createDataFrame([(4, "Eve", "Adams")], SEED_SCHEMA), key="id")
+    dest = temp_table_path("clone-race")
+    real_exists = VersionedTable.exists
+    raced = []
+
+    def exists_then_lose_the_race(self):
+        seen = real_exists(self)
+        if self.path == dest and not raced:
+            raced.append(True)
+            names.clone_to(dest, version=0)  # the winner lands first
+        return seen
+
+    monkeypatch.setattr(VersionedTable, "exists", exists_then_lose_the_race)
+    with pytest.raises(VersionConflictError):
+        names.clone_to(dest)
+    monkeypatch.undo()
+    assert raced
+    winner = VersionedTable(spark, dest)
+    assert winner.latest_version() == 0
+    v0 = winner._read_log(0)
+    assert (v0["operation"], v0["operationParameters"]["sourceVersion"]) == (
+        "CLONE",
+        0,
+    )
+    assert rows(winner.to_df()) == sorted(SEED)
 
 
 def test_clone_of_partitioned_table_reads_partitions(spark):
@@ -1332,3 +1365,58 @@ def test_update_mor_cdf_pre_and_post_images(spark):
     assert ("update_postimage", 1, "Z") in kinds
     assert any(k[0] == "update_preimage" and k[1] == 1 for k in kinds)
     assert len([k for k in kinds if k[1] == 1]) == 2
+
+
+def test_warm_mirrored_commit_log_budget(spark, monkeypatch):
+    """Private-log I/O per commit on a warm handle of the serving
+    table (``delta_mirror=True``): the commit reads the snapshot it
+    builds on once, the mirror sync reads the new entry and its
+    predecessor, and version 0 (the table config, parsed once per
+    handle) is never parsed again. Counts every JSON parse of a
+    ``_log`` entry and every listing of ``_log``."""
+    import json
+
+    from delta_lake_play_spark.serving.handlers import NamesTableService
+
+    svc = NamesTableService(spark, temp_table_path("log-budget"), delta_mirror=True)
+    table = svc.table
+    for i in range(3):  # warm the handle; stays clear of checkpoint versions
+        svc.merge_to_table([{"id": 10 + i, "firstname": "a", "lastname": "b"}])
+    log_dir = os.path.join(table.path, "_log")
+    counts = {}
+    real_load, real_listdir = json.load, os.listdir
+
+    def load(fh, *args, **kwargs):
+        name = getattr(fh, "name", "")
+        if os.path.dirname(name) == log_dir:
+            counts["parses"] += 1
+            counts["v0"] += name.endswith(f"{0:020d}.json")
+        return real_load(fh, *args, **kwargs)
+
+    def listdir(path="."):
+        counts["listings"] += os.path.normpath(str(path)) == log_dir
+        return real_listdir(path)
+
+    monkeypatch.setattr(json, "load", load)
+    monkeypatch.setattr(os, "listdir", listdir)
+    ops = {
+        "merge": lambda: svc.merge_to_table(
+            [{"id": 1, "firstname": "x", "lastname": "y"}]
+        ),
+        "delete": lambda: table.delete("id = 2"),
+        "append": lambda: table.append(
+            spark.createDataFrame([(50, "n", "m")], SEED_SCHEMA)
+        ),
+    }
+    got = {}
+    for name, op in ops.items():
+        counts.update(parses=0, v0=0, listings=0)
+        op()
+        got[name] = dict(counts)
+    monkeypatch.undo()
+    assert got == {
+        "merge": {"parses": 3, "v0": 0, "listings": 2},
+        "delete": {"parses": 3, "v0": 0, "listings": 2},
+        "append": {"parses": 3, "v0": 0, "listings": 3},
+    }
+    assert table.latest_version() == 6
