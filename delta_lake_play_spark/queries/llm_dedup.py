@@ -28,30 +28,42 @@ from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
 
 
-def _footer_midpoint(path: str, col: str) -> int | None:
-    """Midpoint of ``col``'s [min, max] range read from the parquet
-    FOOTER statistics — a driver-side metadata fact, no Spark job.
-    Returns None when any row group lacks stats for the column (the
-    caller falls back to a distributed aggregate)."""
+def _footer_midpoint(path: str, col: str, every: int) -> int | None:
+    """Split point for the rows whose ``col`` is a multiple of
+    ``every``, read from the parquet FOOTER statistics — a driver-side
+    metadata fact, no Spark job. The midpoint of ``col``'s [min, max]
+    range is clamped into the range those rows can span: each row
+    group's [min, max] narrowed to its multiples of ``every``, row
+    groups holding none skipped. A skewed id distribution (a sparse
+    tail of non-multiples) therefore cannot push the split past every
+    multiple. Returns None when any row group lacks integer stats for
+    the column or fewer than two multiples fit (the caller falls back
+    to a distributed aggregate)."""
+    import operator
+
     import pyarrow.parquet as pq
 
+    lo = hi = first = last = None
     try:
         md = pq.ParquetFile(path).metadata
-    except Exception:
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx[col]).statistics
+            if st is None or not st.has_min_max:
+                return None
+            mn, mx = operator.index(st.min), operator.index(st.max)
+            lo = mn if lo is None else min(lo, mn)
+            hi = mx if hi is None else max(hi, mx)
+            rg_first, rg_last = mn + -mn % every, mx - mx % every
+            if rg_first <= rg_last:
+                first = rg_first if first is None else min(first, rg_first)
+                last = rg_last if last is None else max(last, rg_last)
+    except (OSError, KeyError, TypeError, ValueError):
         return None
-    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    if col not in idx:
+    if first is None or first >= last:
         return None
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx[col]).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    if lo is None:
-        return None
-    return (int(lo) + int(hi)) // 2
+    return min(max((lo + hi) // 2, first), last - 1)
+
 
 # --- llm_dedup_exact ------------------------------------------------------
 
@@ -740,10 +752,11 @@ def llm_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost): ANY ascending-range boundary yields the same flagged set
     # (the invariance documented above), so the exact percentile(0.5)
     # job is replaced by the doc_id range midpoint read from the
-    # parquet FOOTER stats — a driver-side metadata read instead of a
-    # distributed aggregate job. Falls back to the percentile job
-    # when the footer carries no doc_id stats.
-    b1 = _footer_midpoint(os.path.join(sf_dir, "documents.parquet"), "doc_id")
+    # parquet FOOTER stats, clamped into the range the arrivals (the
+    # multiples of 3) can span — a driver-side metadata read instead
+    # of a distributed aggregate job. Falls back to the percentile job
+    # when the footer carries no integer doc_id stats.
+    b1 = _footer_midpoint(os.path.join(sf_dir, "documents.parquet"), "doc_id", 3)
     if b1 is None:
         (b1,) = arrivals.agg(F.expr("percentile(doc_id, 0.5)")).first()
     bronze = VersionedTable.create(

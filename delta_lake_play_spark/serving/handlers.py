@@ -15,6 +15,9 @@ observed flaws:
 - ``api.py:107`` builds the DELETE predicate by f-string from a
   Python tuple (renders ``id IN (7,)`` for single ids; injectable) —
   here it's a parameterized ``Column.isin``.
+- The MERGE source and the seed rows are built by ``local_df`` as
+  ``LocalRelation`` plans, not PythonRDD-backed frames, so a request
+  never starts a Python worker.
 
 The handler layer is framework-free so it is testable in this
 environment (FastAPI is not installed); the semantics, request and
@@ -32,7 +35,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from delta_lake_play_spark.table.versioned import VersionedTable
+from delta_lake_play_spark.table.versioned import VersionedTable, local_df
 
 # The reference's fixed schema and seed rows (spark_project.py:29-35).
 NAMES_SCHEMA = T.StructType(
@@ -67,7 +70,7 @@ class NamesTableService:
         reference, whose delta-spark writes the Delta log under every
         endpoint DML (``spark_project.py:36`` + ``api.py:91-107``)."""
         self.spark = spark
-        seed = spark.createDataFrame(SEED_ROWS, NAMES_SCHEMA)
+        seed = local_df(spark, SEED_ROWS, NAMES_SCHEMA)
         self.table = VersionedTable.create_if_absent(
             spark, table_dir, seed, delta_mirror=delta_mirror
         )
@@ -110,8 +113,10 @@ class NamesTableService:
         """``api.py:88-102``: MERGE on id — update matched names,
         insert unmatched."""
         records = [r if isinstance(r, TableRow) else TableRow(**r) for r in rows]
-        source = self.spark.createDataFrame(
-            [(r.id, r.firstname, r.lastname) for r in records], NAMES_SCHEMA
+        source = local_df(
+            self.spark,
+            [(r.id, r.firstname, r.lastname) for r in records],
+            NAMES_SCHEMA,
         )
         new_version = self.table.merge(source, key="id")
         return {"version": new_version}

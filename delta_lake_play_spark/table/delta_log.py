@@ -66,6 +66,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .versioned import empty_df, local_df
+
 _CHECKPOINT_EVERY = 10
 
 # V2 checkpoints: file actions per sidecar parquet. At 100 TB a
@@ -737,7 +739,8 @@ def _ensure_materialized(table, entry: dict) -> None:
     )
     dv_df = table._dv_df(files)
     kept = src.join(dv_df, ["__path", "__row_idx"], "left_anti")
-    fp_map = table.spark.createDataFrame(
+    fp_map = local_df(
+        table.spark,
         [(table._abs(f["path"]), fp) for fp, f in pending.items()],
         "__path string, __fp string",
     )
@@ -2510,7 +2513,7 @@ def read_delta_snapshot(
         [T.StructField(f.name, f.dataType, True) for f in schema.fields]
     )
     if not adds:
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
 
     # Native deletion vectors (reader-writer feature): decode each
     # add's roaring bitmap and mask (file, row_index) pairs with a
@@ -2532,7 +2535,7 @@ def read_delta_snapshot(
     def _read(paths: list[str]) -> DataFrame:
         df = spark.read.schema(data_schema).parquet(*paths)
         if dv_rows:
-            mask = spark.createDataFrame(dv_rows, "__fn string, __ri long")
+            mask = local_df(spark, dv_rows, "__fn string, __ri long")
             df = (
                 df.withColumn("__fn", F.col("_metadata.file_name"))
                 .withColumn("__ri", F.col("_metadata.row_index"))
@@ -2715,8 +2718,8 @@ def read_delta_changes(
     if schema_string is None:
         raise ValueError("no metaData action found — not a valid delta log")
     end_schema = T.StructType.fromJson(json.loads(schema_string))
-    return spark.createDataFrame(
-        [],
+    return empty_df(
+        spark,
         T.StructType(
             list(end_schema.fields)
             + [

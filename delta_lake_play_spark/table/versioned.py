@@ -65,7 +65,9 @@ LogStore abstraction; the layout and recovery story are unchanged.
 
 from __future__ import annotations
 
+import functools
 import json
+import logging
 import os
 import re
 import tempfile
@@ -75,9 +77,12 @@ from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 from urllib.parse import unquote
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+_logger = logging.getLogger("spark_graft")
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -576,7 +581,8 @@ class VersionedTable:
         entries = [
             self._read_log_raw(v) for v in sorted(self._versions(), reverse=True)
         ]
-        return self.spark.createDataFrame(
+        return local_df(
+            self.spark,
             [
                 (
                     e["version"],
@@ -1139,7 +1145,8 @@ class VersionedTable:
                 )
             # Translate scan paths (absolute) back to the logged path
             # strings — an O(#files) broadcast map, not a collect.
-            map_df = self.spark.createDataFrame(
+            map_df = local_df(
+                self.spark,
                 [(self._abs(f["path"]), f["path"]) for f in files],
                 "__path string, path string",
             )
@@ -1250,7 +1257,8 @@ class VersionedTable:
                 matched = matched.join(
                     existing, ["__path", "__row_idx"], "left_anti"
                 )
-            map_df = self.spark.createDataFrame(
+            map_df = local_df(
+                self.spark,
                 [(self._abs(f["path"]), f["path"]) for f in files],
                 "__path string, path string",
             )
@@ -1912,7 +1920,8 @@ class VersionedTable:
             )
             for f in entry["files"]
         ]
-        return self.spark.createDataFrame(
+        return local_df(
+            self.spark,
             rows,
             "path string, num_rows long, dv_masked long, "
             "stats string, null_counts string",
@@ -2096,7 +2105,7 @@ class VersionedTable:
                         f["path"].replace(os.sep, "/"), part_cols
                     )
                     rows.append((i, *[pv.get(c) for c in part_cols]))
-                typed = self.spark.createDataFrame(rows, pschema).select(
+                typed = local_df(self.spark, rows, pschema).select(
                     "__idx",
                     *[F.col(c).cast(by_name[c]).alias(c) for c in part_cols],
                 )
@@ -2295,7 +2304,7 @@ class VersionedTable:
                 T.StructField("_commit_timestamp", T.TimestampType(), True),
             ]
         )
-        return self.spark.createDataFrame([], empty_schema)
+        return empty_df(self.spark, empty_schema)
 
     def vacuum(
         self,
@@ -2763,7 +2772,7 @@ class VersionedTable:
         zero-cost generated columns, not data reads."""
         schema = _nullable(schema)
         if not paths:
-            out = self.spark.createDataFrame([], schema)
+            out = empty_df(self.spark, schema)
             if with_meta:
                 out = out.withColumn("__path", F.lit(None).cast("string")).withColumn(
                     "__row_idx", F.lit(None).cast("long")
@@ -2856,7 +2865,7 @@ class VersionedTable:
         ``(__path, __row_idx)`` DataFrame (absolute paths), or None
         when nothing is masked. Sidecars are read distributedly by
         Spark; only pre-sidecar inline lists (legacy entries) go
-        through ``createDataFrame``. Sidecar rows for files outside
+        through ``local_df``. Sidecar rows for files outside
         ``file_entries`` are filtered out by the path-map join, so
         partial reads (stats-pruned scans, change feeds) stay exact."""
         legacy_rows = [
@@ -2869,7 +2878,8 @@ class VersionedTable:
             return None
         out = None
         if sidecars:
-            map_df = self.spark.createDataFrame(
+            map_df = local_df(
+                self.spark,
                 [(f["path"], self._abs(f["path"])) for f in file_entries],
                 "path string, __path string",
             ).dropDuplicates(["path"])
@@ -2878,8 +2888,8 @@ class VersionedTable:
                 "__path", F.col("pos").alias("__row_idx")
             )
         if legacy_rows:
-            ldf = self.spark.createDataFrame(
-                legacy_rows, "__path string, __row_idx long"
+            ldf = local_df(
+                self.spark, legacy_rows, "__path string, __row_idx long"
             )
             out = ldf if out is None else out.unionByName(ldf)
         return out
@@ -3272,7 +3282,7 @@ class VersionedTable:
         new_entries: list[dict] = []
         if new_df is not None and _is_empty_local(new_df):
             # A provably-empty LOCAL relation (e.g. the empty seed of
-            # a CREATE: spark.createDataFrame([], schema)) writes no
+            # a CREATE: empty_df(spark, schema)) writes no
             # files and yields no entries — skip the Spark write job
             # outright (optimization r12, guide §7.3 fixed cost: an
             # empty create otherwise pays a full job + committer
@@ -3533,35 +3543,87 @@ class VersionedTable:
         return entries
 
 
-def empty_df(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
-    """Empty DataFrame that OPTIMIZES to an empty LocalRelation —
-    emptiness is then a driver-side-provable plan fact, so committing
-    it as a table seed skips the data-write job (``_is_empty_local``).
-    ``createDataFrame([], schema)`` instead parallelizes an empty RDD
-    (a LogicalRDD plan) whose emptiness only a job can prove."""
-    s = (
-        schema
-        if isinstance(schema, T.StructType)
-        else T._parse_datatype_string(schema)
+def local_df(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """DataFrame over driver-held ``rows`` (tuples in schema field
+    order) that plans as a ``LocalRelation``.
+
+    ``createDataFrame(list, schema)`` plans a ``LogicalRDD`` over
+    ``parallelize(rows)`` mapped through a Python lambda — a PythonRDD,
+    so every stage that scans it launches Python workers (~250 ms per
+    job on a small local session), and a persisted copy computed by two
+    concurrent AQE query stages races on its cache blocks. Built from
+    an Arrow table instead, the rows travel to the JVM once and the
+    plan is a ``LocalRelation``: no Python worker, no job to collect
+    it, and exact size statistics. Each row is checked first by the
+    same verifier ``createDataFrame`` runs by default, so a bad row
+    raises the same PySpark error class and message."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    s = _struct(schema)
+    verify = T._make_type_verifier(s)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(s)
+    columns = [
+        pa.array([row[i] for row in rows], type=field.type)
+        for i, field in enumerate(arrow_schema)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), s
     )
-    cols = [F.lit(None).cast(f.dataType).alias(f.name) for f in s.fields]
+
+
+def empty_df(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """Empty DataFrame (all columns nullable) that OPTIMIZES to an
+    empty LocalRelation — emptiness is then a driver-side-provable plan
+    fact, so committing it as a table seed skips the data-write job
+    (``_is_empty_local``). ``createDataFrame([], schema)`` instead
+    parallelizes an empty RDD through a Python lambda: a LogicalRDD
+    whose emptiness only a job can prove, and every stage scanning it
+    launches Python workers (see ``local_df``)."""
+    cols = [
+        F.lit(None).cast(f.dataType).alias(f.name) for f in _struct(schema).fields
+    ]
     return spark.range(1).select(*cols).where(F.lit(False))
+
+
+def _struct(schema: T.StructType | str) -> T.StructType:
+    """``schema`` as a StructType (DDL strings parsed)."""
+    if isinstance(schema, T.StructType):
+        return schema
+    return T._parse_datatype_string(schema)
 
 
 def _is_empty_local(df: DataFrame) -> bool:
     """True iff ``df`` optimizes to an EMPTY LocalRelation — a plan
     whose row count is a driver-side fact (no job needed). Used to
-    skip the data-write job of empty commits; any uncertainty (a real
-    scan, a non-collapsed projection, Connect) returns False and the
-    normal write path runs."""
+    skip the data-write job of empty commits; a real scan or a
+    non-collapsed projection returns False and the normal write path
+    runs. A DataFrame without a classic JVM plan (Connect) also
+    returns False, and the first such fallback per error type is
+    logged through the ``spark_graft`` logger."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         return (
             plan.getClass().getSimpleName() == "LocalRelation"
             and plan.data().isEmpty()
         )
-    except Exception:
+    except (AttributeError, Py4JError) as e:  # non-classic DataFrame
+        _log_empty_local_fallback(type(e).__name__)
         return False
+
+
+@functools.cache
+def _log_empty_local_fallback(error: str) -> None:
+    """Warn once per error type that the empty-commit check fell back."""
+    _logger.warning(
+        "no classic plan to prove a commit empty (%s); running the "
+        "data-write job",
+        error,
+    )
 
 
 def _nullable(schema: T.StructType) -> T.StructType:

@@ -282,3 +282,57 @@ def test_pydantic_request_models_validate_wire_shapes(spark):
         assert status == 200 and got["version"] == 1
     finally:
         server.shutdown()
+
+
+def test_warm_merge_job_budget(spark, monkeypatch):
+    """A warm 5-row ``merge_to_table`` on the serving table
+    (``delta_mirror=True``) runs a pinned number of Spark jobs, and no
+    frame the service builds from request or seed rows scans a
+    PythonRDD (``ExistingRDD``): the merge source, the seed and the
+    ``history()`` frame are ``LocalRelation`` plans, so a request never
+    starts a Python worker. A wrongly typed row still fails with the
+    ``TypeError``/``ValueError`` the HTTP layer maps to 422."""
+    from delta_lake_play_spark.table.versioned import VersionedTable
+
+    built = {}
+    real_create, real_merge = VersionedTable.create_if_absent, VersionedTable.merge
+
+    def create_if_absent(spark, path, df, **kwargs):
+        built["seed"] = df
+        return real_create(spark, path, df, **kwargs)
+
+    def merge(self, source, *args, **kwargs):
+        built["merge source"] = source
+        return real_merge(self, source, *args, **kwargs)
+
+    monkeypatch.setattr(VersionedTable, "create_if_absent", create_if_absent)
+    monkeypatch.setattr(VersionedTable, "merge", merge)
+    svc = NamesTableService(spark, temp_table_path("job-budget"), delta_mirror=True)
+
+    def rows(i):
+        return [
+            {"id": (5 * i + k) % 20, "firstname": f"f{i}", "lastname": "l"}
+            for k in range(5)
+        ]
+
+    for i in range(4):  # warm the handle; stays clear of checkpoint versions
+        svc.merge_to_table(rows(i))
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-job-budget", "one warm merge")
+    try:
+        svc.merge_to_table(rows(4))  # updates ids 0-4, as serve-mixed mostly does
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("merge-job-budget")
+    assert len(jobs) == 9
+
+    built["history"] = svc.table.history()
+    for name, df in built.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, f"{name} scans a PythonRDD:\n{plan}"
+
+    for bad in ({"id": "7", "firstname": "a", "lastname": "b"},
+                {"id": 7, "firstname": None, "lastname": "b"}):
+        with pytest.raises((TypeError, ValueError)):
+            svc.merge_to_table([bad])
+    assert svc.table.latest_version() == 5

@@ -431,3 +431,28 @@ def test_stream_source_reads_manifest_spilled_commit(spark):
     )
     q.awaitTermination()
     assert sorted(got) == list(range(0, 60)) + list(range(100, 160))
+
+
+def test_footer_midpoint_splits_arrivals_under_skewed_stats(tmp_path):
+    """``llm_dedup_streaming`` splits its arrivals (the multiples of 3)
+    into two bronze commits at a point read from the parquet footer. A
+    sparse tail of non-multiples far above the dense ids must not push
+    the split past every arrival: both commits stay non-empty. Stats
+    that are not integers give None (the percentile fallback)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from delta_lake_play_spark.queries.llm_dedup import _footer_midpoint
+
+    ids = list(range(30)) + [1_000_000, 1_000_001]  # tail: no multiples of 3
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(
+        pa.table({"doc_id": ids, "name": [str(i) for i in ids]}),
+        path,
+        row_group_size=30,
+    )
+    b1 = _footer_midpoint(path, "doc_id", 3)
+    arrivals = [i for i in ids if i % 3 == 0]
+    assert [i for i in arrivals if i <= b1]
+    assert [i for i in arrivals if i > b1]
+    assert _footer_midpoint(path, "name", 3) is None
