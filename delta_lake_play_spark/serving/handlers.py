@@ -11,7 +11,12 @@ observed flaws:
 - ``api.py:75`` re-runs ``history().agg(max).collect()`` on every
   latest-read for the version label — here the log layer answers
   ``latest_version()`` from the commit log in O(#commits) without a
-  Spark job.
+  Spark job. The version is resolved once and that snapshot is read,
+  so a commit landing mid-request cannot label version V's rows V+1.
+- ``get_table`` collects the whole snapshot to pandas anyway, so it
+  sorts the reply by ``id`` there (ascending, nulls first, as Spark's
+  ``orderBy`` does): one Spark job, no range-partition sample job and
+  no shuffle.
 - ``api.py:107`` builds the DELETE predicate by f-string from a
   Python tuple (renders ``id IN (7,)`` for single ids; injectable) —
   here it's a parameterized ``Column.isin``.
@@ -96,16 +101,13 @@ class NamesTableService:
         """``api.py:69-86``: dispatch None/int/datetime → latest /
         versionAsOf / timestampAsOf, return records + version label."""
         if version is None:
-            sdf = self.table.to_df()
-            label: Any = self.table.latest_version()
-        elif isinstance(version, int):
+            version = self.table.latest_version()
+        if isinstance(version, int):
             sdf = self.table.read(version=version)
-            label = version
         else:
             sdf = self.table.read(timestamp=version)
-            label = version
-        data = sdf.orderBy("id").toPandas().to_dict(orient="records")
-        return {"version": label, "data": data}
+        pdf = sdf.toPandas().sort_values("id", na_position="first")
+        return {"version": version, "data": pdf.to_dict(orient="records")}
 
     # ---------------------------------------------- PUT /merge_to_table
 

@@ -736,17 +736,25 @@ class VersionedTable:
         new source columns are added to the table schema (carried
         files simply read as null for them; no rewrite), missing
         source columns are filled with null.
+
+        How the duplicate-key check and the touched-file probe run is
+        selected from the source's optimized plan. A ``LocalRelation``
+        source (every ``local_df`` frame, such as a serving request)
+        already sits on the driver: its keys are collected without a
+        job and checked in Python, and the touched files come from one
+        shuffle-free collect over a broadcast semi-join. Any other
+        source is aggregated once per key and persisted for the
+        attempts, and both checks run as one fused probe job.
         """
         self._refuse_if_append_only("MERGE")
-        # One source aggregation serves both the duplicate-key check
-        # (Delta semantics: a target row may match at most one source
-        # row) and the touched-file semi-join below — no second scan.
-        # The check itself is FUSED into the touched-file probe job
-        # (optimization r12, guide §7.3 driver-side fixed cost): the
-        # commit-bound keys run 25-30 sub-second jobs each and every
-        # extra action costs a scheduling gap, so the dup probe rides
-        # the same collect as the file probe instead of its own job.
-        src_keys = source.groupBy(key).count().persist()
+        if _local_relation(source) is not None:
+            src_keys = None
+        else:
+            # One source aggregation serves both the duplicate-key
+            # check (Delta semantics: a target row may match at most
+            # one source row) and the touched-file semi-join — no
+            # second scan, and retried attempts reuse it.
+            src_keys = source.groupBy(key).count().persist()
 
         def attempt() -> int:
             entry = self._read_log(self.latest_version())
@@ -814,33 +822,13 @@ class VersionedTable:
             target = self._read_files(
                 entry["files"], schema, keep_path="__file", column_map=cmap
             )
-            # One probe job: distinct touched files UNION'd with (at
-            # most one) duplicated source key — both branches read
-            # relations this attempt needs anyway (the persisted
-            # src_keys aggregate and the touched-file semi-join), so
-            # the dup check costs no extra action. Tag 'd' rows win
-            # the error before any file is interpreted.
-            probe = (
-                target.join(src_keys.select(key), key, "left_semi")
-                .select(F.lit("f").alias("__t"), F.col("__file").alias("__v"))
-                .distinct()
-                .unionByName(
-                    src_keys.filter(F.col("count") > 1)
-                    .limit(1)
-                    .select(
-                        F.lit("d").alias("__t"),
-                        F.col(key).cast("string").alias("__v"),
-                    )
-                )
-                .collect()
-            )
-            dup = [r["__v"] for r in probe if r["__t"] == "d"]
-            if dup:
-                raise MergeSourceKeyError(
-                    f"source has multiple rows for key {key}={dup[0]!r}"
-                )
             touched = {
-                self._norm_file(r["__v"]) for r in probe if r["__t"] == "f"
+                self._norm_file(f)
+                for f in (
+                    _probe_local_merge(target, source, key)
+                    if src_keys is None
+                    else _probe_aggregated_merge(target, src_keys, key)
+                )
             }
             hit_files = [
                 f for f in entry["files"] if self._abs(f["path"]) in touched
@@ -958,7 +946,8 @@ class VersionedTable:
         try:
             return self._retrying(attempt)
         finally:
-            src_keys.unpersist()
+            if src_keys is not None:
+                src_keys.unpersist()
 
     def delete(self, predicate: Column | str) -> int:
         """DELETE rows matching the predicate (``api.py:107``), taken
@@ -3597,33 +3586,97 @@ def _struct(schema: T.StructType | str) -> T.StructType:
     return T._parse_datatype_string(schema)
 
 
-def _is_empty_local(df: DataFrame) -> bool:
-    """True iff ``df`` optimizes to an EMPTY LocalRelation — a plan
-    whose row count is a driver-side fact (no job needed). Used to
-    skip the data-write job of empty commits; a real scan or a
-    non-collapsed projection returns False and the normal write path
-    runs. A DataFrame without a classic JVM plan (Connect) also
-    returns False, and the first such fallback per error type is
-    logged through the ``spark_graft`` logger."""
+def _local_relation(df: DataFrame):
+    """The optimized plan of ``df`` when it is a ``LocalRelation`` —
+    rows the driver already holds, so collecting them runs no job —
+    else None. A real scan or a non-collapsed projection returns None.
+    So does a DataFrame without a classic JVM plan (Connect), and the
+    first such fallback per error type is logged through the
+    ``spark_graft`` logger."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
-        return (
-            plan.getClass().getSimpleName() == "LocalRelation"
-            and plan.data().isEmpty()
-        )
+        return plan if plan.getClass().getSimpleName() == "LocalRelation" else None
     except (AttributeError, Py4JError) as e:  # non-classic DataFrame
-        _log_empty_local_fallback(type(e).__name__)
-        return False
+        _log_local_plan_fallback(type(e).__name__)
+        return None
 
 
 @functools.cache
-def _log_empty_local_fallback(error: str) -> None:
-    """Warn once per error type that the empty-commit check fell back."""
+def _log_local_plan_fallback(error: str) -> None:
+    """Warn once per error type that the LocalRelation check fell back."""
     _logger.warning(
-        "no classic plan to prove a commit empty (%s); running the "
-        "data-write job",
+        "no classic plan to inspect (%s); treating the frame as a "
+        "distributed relation",
         error,
     )
+
+
+def _is_empty_local(df: DataFrame) -> bool:
+    """True iff ``df`` optimizes to an EMPTY LocalRelation — a plan
+    whose row count is a driver-side fact (no job needed). Used to
+    skip the data-write job of empty commits; anything else runs the
+    normal write path."""
+    plan = _local_relation(df)
+    return plan is not None and plan.data().isEmpty()
+
+
+def _probe_local_merge(target: DataFrame, source: DataFrame, key: str) -> set[str]:
+    """MERGE probe for a ``LocalRelation`` source: the raw ``__file``
+    values of the target rows that ``source`` matches on ``key``.
+
+    The keys are collected without a job and checked for duplicates in
+    Python, with the grouping semantics of the aggregated probe (nulls
+    form one group, NaNs form one group), raising the same
+    ``MergeSourceKeyError``. The touched files come from one collect
+    over a broadcast semi-join — no shuffle — with one path per matched
+    target row, de-duplicated here."""
+    seen = set()
+    for (k,) in source.select(key).collect():
+        group = "NaN" if k != k else k
+        if group in seen:
+            shown = None if group is None else str(group)
+            raise MergeSourceKeyError(
+                f"source has multiple rows for key {key}={shown!r}"
+            )
+        seen.add(group)
+    matched = target.join(F.broadcast(source.select(key)), key, "left_semi")
+    return {r["__file"] for r in matched.select("__file").collect()}
+
+
+def _probe_aggregated_merge(
+    target: DataFrame, src_keys: DataFrame, key: str
+) -> set[str]:
+    """MERGE probe for any other source, given its per-key counts
+    ``src_keys`` (``key``, ``count``): the raw ``__file`` values of the
+    touched target files, raising ``MergeSourceKeyError`` for a
+    duplicated source key.
+
+    One probe job: distinct touched files UNION'd with (at most one)
+    duplicated source key — both branches read relations the MERGE
+    needs anyway (the persisted ``src_keys`` aggregate and the
+    touched-file semi-join), so the duplicate check costs no extra
+    action. Tag 'd' rows win the error before any file is
+    interpreted."""
+    probe = (
+        target.join(src_keys.select(key), key, "left_semi")
+        .select(F.lit("f").alias("__t"), F.col("__file").alias("__v"))
+        .distinct()
+        .unionByName(
+            src_keys.filter(F.col("count") > 1)
+            .limit(1)
+            .select(
+                F.lit("d").alias("__t"),
+                F.col(key).cast("string").alias("__v"),
+            )
+        )
+        .collect()
+    )
+    dup = [r["__v"] for r in probe if r["__t"] == "d"]
+    if dup:
+        raise MergeSourceKeyError(
+            f"source has multiple rows for key {key}={dup[0]!r}"
+        )
+    return {r["__v"] for r in probe if r["__t"] == "f"}
 
 
 def _nullable(schema: T.StructType) -> T.StructType:

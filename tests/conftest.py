@@ -1,3 +1,5 @@
+import contextlib
+import itertools
 import os
 import sys
 
@@ -12,6 +14,26 @@ from delta_lake_play_spark.session import get_spark  # noqa: E402
 from delta_lake_play_spark.sources.catalog import TABLES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+_job_groups = itertools.count()
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs the block runs: yields a list
+    that holds them once the block exits. The block runs under a fresh
+    job group, which the threads Spark starts for a query (broadcasts,
+    adaptive query stages) inherit."""
+    sc = spark.sparkContext
+    group = f"job-budget-{next(_job_groups)}"
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setJobGroup("", "")
+    jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_configure(config):

@@ -5,10 +5,14 @@ predicate delete, history, and time travel through the HTTP shapes.
 
 from __future__ import annotations
 
+import re
+from datetime import datetime
+
 import pytest
 
 from delta_lake_play_spark.serving.handlers import NamesTableService, TableRow
 from delta_lake_play_spark.table.versioned import temp_table_path
+from .conftest import spark_jobs
 
 
 @pytest.fixture()
@@ -286,9 +290,11 @@ def test_pydantic_request_models_validate_wire_shapes(spark):
 
 def test_warm_merge_job_budget(spark, monkeypatch):
     """A warm 5-row ``merge_to_table`` on the serving table
-    (``delta_mirror=True``) runs a pinned number of Spark jobs, and no
-    frame the service builds from request or seed rows scans a
-    PythonRDD (``ExistingRDD``): the merge source, the seed and the
+    (``delta_mirror=True``) runs a pinned number of Spark jobs (its
+    ``LocalRelation`` source is probed on the driver: no aggregate, no
+    persist, no shuffle), and no frame the service builds from request
+    or seed rows scans a PythonRDD (``ExistingRDD``): the merge source,
+    the seed and the
     ``history()`` frame are ``LocalRelation`` plans, so a request never
     starts a Python worker. A wrongly typed row still fails with the
     ``TypeError``/``ValueError`` the HTTP layer maps to 422."""
@@ -317,14 +323,9 @@ def test_warm_merge_job_budget(spark, monkeypatch):
 
     for i in range(4):  # warm the handle; stays clear of checkpoint versions
         svc.merge_to_table(rows(i))
-    sc = spark.sparkContext
-    sc.setJobGroup("merge-job-budget", "one warm merge")
-    try:
+    with spark_jobs(spark) as jobs:
         svc.merge_to_table(rows(4))  # updates ids 0-4, as serve-mixed mostly does
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("merge-job-budget")
-    assert len(jobs) == 9
+    assert len(jobs) == 4
 
     built["history"] = svc.table.history()
     for name, df in built.items():
@@ -336,3 +337,108 @@ def test_warm_merge_job_budget(spark, monkeypatch):
         with pytest.raises((TypeError, ValueError)):
             svc.merge_to_table([bad])
     assert svc.table.latest_version() == 5
+
+
+def _executed_nodes(df):
+    """Operator names in ``df``'s executed physical plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return set(re.findall(r"^[\s:+\-]*(?:\*\(\d+\) )?(\w+)", plan, re.M))
+
+
+def test_warm_get_table_job_budget(spark, monkeypatch):
+    """A warm latest or as-of ``get_table`` (by version and by
+    timestamp) runs exactly one Spark job: the reply is sorted on the
+    driver after ``toPandas()``, so the executed plan has no range
+    sample job, no ``Exchange`` and no ``Sort``."""
+    svc = NamesTableService(spark, temp_table_path("read-budget"), delta_mirror=True)
+    for i in range(3):
+        svc.merge_to_table([{"id": 10 - i, "firstname": "f", "lastname": "l"}])
+    as_of_ts = datetime.fromisoformat(svc.get_table_history()["timestamp"]["2"])
+
+    collected = []
+    frame_cls = type(spark.range(1))
+    real_to_pandas = frame_cls.toPandas
+
+    def to_pandas(self):
+        collected.append(self)
+        return real_to_pandas(self)
+
+    monkeypatch.setattr(frame_cls, "toPandas", to_pandas)
+    for version in (None, 1, as_of_ts):
+        svc.get_table(version)  # warm
+        collected.clear()
+        with spark_jobs(spark) as jobs:
+            resp = svc.get_table(version)
+        assert len(jobs) == 1, (version, jobs)
+        [df] = collected
+        nodes = _executed_nodes(df)
+        assert "Sort" not in nodes and not any("Exchange" in n for n in nodes), nodes
+        ids = [r["id"] for r in resp["data"]]
+        assert ids == sorted(ids)
+
+
+def test_get_table_reply_matches_spark_order(spark, service):
+    """The driver-side sort returns the same JSON as sorting in Spark
+    with ``orderBy("id")`` (ascending, nulls first), for latest and
+    as-of reads; a null id sorts first."""
+    import json
+
+    from delta_lake_play_spark.table.versioned import VersionedTable
+
+    service.merge_to_table([TableRow(9, "Q", "Branch"), TableRow(0, "Z", "Zero")])
+    service.delete_from_table([2])
+    service.merge_to_table([TableRow(5, "M", "Boss"), TableRow(1, "Jim", "Bond")])
+    for version in (None, 0, 1, 2):
+        resp = service.get_table(version)
+        want = (
+            service.table.read(version=resp["version"])
+            .orderBy("id")
+            .toPandas()
+            .to_dict(orient="records")
+        )
+        assert json.dumps(resp["data"]) == json.dumps(want)
+        ids = [r["id"] for r in resp["data"]]
+        assert ids == sorted(ids)
+
+    path = temp_table_path("serving-null-id")
+    VersionedTable.create(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(3, "c", "C"), (None, "n", "N"), (1, "a", "A")],
+            "id int, firstname string, lastname string",
+        ),
+    )
+    resp = NamesTableService(spark, path).get_table()
+    want = (
+        VersionedTable(spark, path).to_df().orderBy("id").toPandas()
+        .to_dict(orient="records")
+    )
+    assert json.dumps(resp["data"]) == json.dumps(want)
+    assert [r["firstname"] for r in resp["data"]] == ["n", "a", "c"]
+
+
+def test_get_table_labels_the_version_it_read(service, monkeypatch):
+    """A commit landing between the latest read's version lookup and
+    its data read does not relabel the reply: the version is resolved
+    once and that snapshot is read."""
+    from delta_lake_play_spark.table.versioned import VersionedTable
+
+    real_latest = VersionedTable.latest_version
+    landed = []
+
+    def latest_version(self):
+        v = real_latest(self)
+        if not landed:
+            landed.append(v)
+            service.merge_to_table([TableRow(9, "Q", "Branch")])
+        return v
+
+    monkeypatch.setattr(VersionedTable, "latest_version", latest_version)
+    resp = service.get_table()
+    monkeypatch.undo()
+    assert landed == [0] and service.table.latest_version() == 1
+    assert resp["version"] == 0
+    assert _names(resp) == {
+        (1, "James", "Bond"), (2, "Alice", "Rogers"), (3, "Joe", "Bloggs")
+    }

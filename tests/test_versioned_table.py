@@ -1425,7 +1425,8 @@ def test_warm_mirrored_commit_log_budget(spark, monkeypatch):
 def test_is_empty_local_fallback_logs_warning(caplog):
     """A DataFrame whose plan call raises (a non-classic, Connect-style
     frame) is treated as possibly non-empty, so the data-write job
-    runs, and the fallback says so once through the package logger."""
+    runs, and as a non-local MERGE source; the shared plan check says
+    so once through the package logger."""
     from py4j.protocol import Py4JError
 
     from delta_lake_play_spark.table import versioned as vt
@@ -1437,10 +1438,11 @@ def test_is_empty_local_fallback_logs_warning(caplog):
     class _Frame:
         _jdf = _Jdf()
 
-    vt._log_empty_local_fallback.cache_clear()
+    vt._log_local_plan_fallback.cache_clear()
     with caplog.at_level("WARNING", logger="spark_graft"):
         assert vt._is_empty_local(_Frame()) is False
         assert vt._is_empty_local(_Frame()) is False
+        assert vt._local_relation(_Frame()) is None
     warned = [r for r in caplog.records if r.name == "spark_graft"]
     assert [r.levelname for r in warned] == ["WARNING"]
     assert "Py4JError" in warned[0].getMessage()
