@@ -40,6 +40,20 @@ _SRC_SQL = """
 """
 
 
+def _drop_commit_jsons(t: VersionedTable, upto: int) -> None:
+    """Delete the mirror's commit JSONs at or below ``upto`` (what log
+    cleanup does once a checkpoint covers them), so the protocol reader
+    can only replay from the checkpoint."""
+    import os as _os
+
+    from delta_lake_play_spark.table.delta_log import _commit_versions
+
+    ddir = _os.path.join(t.path, "_delta_log")
+    for v in _commit_versions(ddir):
+        if v <= upto:
+            _os.remove(_os.path.join(ddir, f"{v:020d}.json"))
+
+
 def _merge_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     updates = c.filter(F.col("c_custkey") % 10 == 0).select(
@@ -620,8 +634,6 @@ def dml_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried by reference under their narrower physical type; the
     declared (widened) schema upcasts them at scan — zero rewrite,
     which is the point of the feature at 100 TB."""
-    import os as _os
-
     from delta_lake_play_spark.table.delta_log import read_delta_snapshot
 
     base = (
@@ -645,11 +657,7 @@ def dml_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t.merge(src, key="c_custkey", evolve_schema=True)  # widens iv  # v1
     v = t.checkpoint_mirror()
-    ddir = _os.path.join(t.path, "_delta_log")
-    for fn in list(_os.listdir(ddir)):
-        if fn.endswith(".json") and not fn.startswith(("_", ".")):
-            if int(fn.split(".")[0]) <= v:
-                _os.remove(_os.path.join(ddir, fn))
+    _drop_commit_jsons(t, v)
     return read_delta_snapshot(spark, t.path)
 
 
@@ -1031,8 +1039,6 @@ def dml_checkpoint_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol's cleaned-prefix state), and read the snapshot back
     exclusively through the V2 manifest + sidecars
     (table/delta_log.py::read_delta_snapshot)."""
-    import os as _os
-
     from delta_lake_play_spark.table.delta_log import read_delta_snapshot
 
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 20 == 0)
@@ -1046,11 +1052,7 @@ def dml_checkpoint_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.append(c.withColumn("c_custkey", F.col("c_custkey") + 1000000))
     t.delete(F.col("c_acctbal") < 0)
     v = t.checkpoint_mirror()
-    ddir = _os.path.join(t.path, "_delta_log")
-    for fn in list(_os.listdir(ddir)):
-        if fn.endswith(".json") and not fn.startswith(("_", ".")):
-            if int(fn.split(".")[0]) <= v:
-                _os.remove(_os.path.join(ddir, fn))
+    _drop_commit_jsons(t, v)
     return read_delta_snapshot(spark, t.path)
 
 
@@ -1135,7 +1137,10 @@ def dml_log_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader from the surviving checkpoint + JSON tail alone."""
     import os as _os
 
-    from delta_lake_play_spark.table.delta_log import read_delta_snapshot
+    from delta_lake_play_spark.table.delta_log import (
+        _COMMIT_RE,
+        read_delta_snapshot,
+    )
 
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 20 == 3)
     t = VersionedTable.create(
@@ -1147,7 +1152,7 @@ def dml_log_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.append(c.withColumn("c_custkey", F.col("c_custkey") + 2000000))  # v3
     future = int(_os.path.getmtime(t.path) * 1000) + 10_000_000
     deleted = t.cleanup_log_mirror(retention_ms=0, now_ms=future)
-    assert any(fn.endswith(".json") for fn in deleted), deleted
+    assert any(_COMMIT_RE.match(fn) for fn in deleted), deleted
     return read_delta_snapshot(spark, t.path)
 
 
@@ -1349,10 +1354,10 @@ def dml_in_commit_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
     and strictly increases; then timestamp-travel THROUGH THE
     PROTOCOL READER to v1's in-commit time and return that snapshot
     (nation + first append), which the oracle states directly."""
-    import json as _json
     import os as _os
 
     from delta_lake_play_spark.table.delta_log import (
+        _commit_actions,
         _ts_ms,
         read_delta_snapshot,
         resolve_delta_timestamp,
@@ -1378,8 +1383,8 @@ def dml_in_commit_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddir = _os.path.join(t.path, "_delta_log")
     icts = {}
     for v in sorted(t._versions()):
-        with open(_os.path.join(ddir, f"{v:020d}.json")) as fh:
-            info = _json.loads(fh.readline())["commitInfo"]
+        path = _os.path.join(ddir, f"{v:020d}.json")
+        info = list(_commit_actions(path))[0]["commitInfo"]
         icts[v] = info["inCommitTimestamp"]
         if icts[v] != _ts_ms(t._read_log_raw(v)["timestamp"]):
             raise AssertionError(f"v{v}: inCommitTimestamp != private clock")
@@ -1667,8 +1672,6 @@ def dml_cluster_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering declaration from the replayed ``delta.clustering``
     domainMetadata. A lost or stale domain changes clustering_cols
     and fails the value hash."""
-    import os as _os
-
     from delta_lake_play_spark.table.delta_log import (
         read_delta_domains,
         read_delta_snapshot,
@@ -1685,11 +1688,7 @@ def dml_cluster_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.set_cluster_by(["c_nationkey", "c_acctbal"])   # v1: ALTER, O(1)
     t.optimize(target_files=4)                        # v2: declared layout
     v = t.checkpoint_mirror()
-    ddir = _os.path.join(t.path, "_delta_log")
-    for fn in list(_os.listdir(ddir)):
-        if fn.endswith(".json") and not fn.startswith(("_", ".")):
-            if int(fn.split(".")[0]) <= v:
-                _os.remove(_os.path.join(ddir, fn))
+    _drop_commit_jsons(t, v)
     domains = read_delta_domains(t.path)
     cols = [
         p[0]
@@ -1734,9 +1733,9 @@ def dml_append_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     the appends. The mirror's metaData carries delta.appendOnly=true,
     checked from the raw v0 commit JSON; enforcement failures poison
     the output marker instead of silently passing."""
-    import json as _json
     import os as _os
 
+    from delta_lake_play_spark.table.delta_log import _commit_actions
     from delta_lake_play_spark.table.versioned import AppendOnlyError
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -1768,12 +1767,13 @@ def dml_append_only(spark: SparkSession, sf_dir: str) -> DataFrame:
             op()
         except AppendOnlyError:
             blocked += 1
-    with open(_os.path.join(t.path, "_delta_log", f"{0:020d}.json")) as fh:
-        metas = [
-            _json.loads(line)["metaData"]
-            for line in fh
-            if '"metaData"' in line
-        ]
+    metas = [
+        a["metaData"]
+        for a in _commit_actions(
+            _os.path.join(t.path, "_delta_log", f"{0:020d}.json")
+        )
+        if "metaData" in a
+    ]
     prop = metas[0].get("configuration", {}).get("delta.appendOnly")
     marker = "enforced" if blocked == 5 and prop == "true" else (
         f"BROKEN blocked={blocked} prop={prop}"
@@ -1812,8 +1812,6 @@ def dml_dv_native_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     back exclusively through the protocol reader, which decodes the
     roaring bitmaps and anti-joins (file, row_index) — the same plan
     shape as the private MoR read."""
-    import os as _os
-
     from delta_lake_play_spark.table.delta_log import read_delta_snapshot
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -1829,11 +1827,7 @@ def dml_dv_native_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.delete_mor(F.col("c_acctbal") < 0)        # v1
     t.delete_mor(F.col("c_custkey") % 10 == 3)  # v2: union on same files
     v = t.checkpoint_mirror()
-    ddir = _os.path.join(t.path, "_delta_log")
-    for fn in list(_os.listdir(ddir)):
-        if fn.endswith(".json") and not fn.startswith(("_", ".")):
-            if int(fn.split(".")[0]) <= v:
-                _os.remove(_os.path.join(ddir, fn))
+    _drop_commit_jsons(t, v)
     return read_delta_snapshot(spark, t.path)
 
 
@@ -1867,7 +1861,11 @@ def dml_vacuum_protocol_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
 
-    from delta_lake_play_spark.table.delta_log import DeltaMirrorError
+    from delta_lake_play_spark.table.delta_log import (
+        DeltaMirrorError,
+        _commit_actions,
+        _commit_versions,
+    )
 
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
@@ -1882,12 +1880,11 @@ def dml_vacuum_protocol_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.delete(F.col("c_acctbal") < 0)  # v1: v0's files become orphans
 
     ddir = _os.path.join(t.path, "_delta_log")
-    with open(_os.path.join(ddir, f"{0:020d}.json")) as fh:
-        protos = [
-            _json.loads(line)["protocol"]
-            for line in fh
-            if '"protocol"' in line
-        ]
+    protos = [
+        a["protocol"]
+        for a in _commit_actions(_os.path.join(ddir, f"{0:020d}.json"))
+        if "protocol" in a
+    ]
     p = protos[0] if protos else {}
     declared = (
         p.get("minReaderVersion") == 3
@@ -1902,11 +1899,7 @@ def dml_vacuum_protocol_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     forged["writerFeatures"] = list(p.get("writerFeatures") or []) + [
         "futureCompactionScheme"
     ]
-    nxt = max(
-        int(fn[:20])
-        for fn in _os.listdir(ddir)
-        if fn.endswith(".json") and fn[:20].isdigit()
-    ) + 1
+    nxt = max(_commit_versions(ddir)) + 1
     forged_path = _os.path.join(ddir, f"{nxt:020d}.json")
     with open(forged_path, "w") as fh:
         fh.write(_json.dumps({"protocol": forged}) + "\n")
@@ -1981,10 +1974,7 @@ def dml_checkpoint_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
         and lc.get("parts") == 2
         and lc.get("version") == v
     )
-    for fn in list(_os.listdir(ddir)):
-        if fn.endswith(".json") and not fn.startswith(("_", ".")):
-            if int(fn.split(".")[0]) <= v:
-                _os.remove(_os.path.join(ddir, fn))
+    _drop_commit_jsons(t, v)
     marker = "parts=2" if ok else f"BROKEN names={names} lc={lc}"
     return read_delta_snapshot(spark, t.path).withColumn(
         "cp_layout", F.lit(marker)

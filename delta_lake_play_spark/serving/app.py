@@ -33,7 +33,7 @@ except ImportError:  # pragma: no cover - not installed in build env
 
 def create_app(spark: SparkSession, table_dir: str):
     """Build the FastAPI app (``api.py:52``'s ``create_app`` shape).
-    Request models live in ``serving/models.py`` (pydantic-gated, and
+    Request models live in ``serving/models.py`` (pydantic, and
     since r8 exercised by the stdlib dev server too)."""
     if not _HAVE_FASTAPI:
         raise ImportError(

@@ -37,13 +37,6 @@ from delta_lake_play_spark.serving import models
 from delta_lake_play_spark.serving.handlers import NamesTableService
 
 
-def _parse_version(v):
-    """``api.py:37-38``: version is int, ISO datetime string, or null."""
-    if v is None or isinstance(v, int):
-        return v
-    return datetime.fromisoformat(v)
-
-
 def make_handler(service: NamesTableService) -> type[BaseHTTPRequestHandler]:
     class Handler(BaseHTTPRequestHandler):
         def _reply(self, status: int, payload: dict) -> None:
@@ -67,15 +60,11 @@ def make_handler(service: NamesTableService) -> type[BaseHTTPRequestHandler]:
                 elif method == "GET" and self.path == "/get_table_history":
                     self._reply(200, service.get_table_history())
                 elif method == "POST" and self.path == "/get_table":
-                    # Validate through the pydantic request model when
-                    # available (exactly what FastAPI does before the
-                    # route runs); hand parsing is the fallback.
-                    if models.HAVE_PYDANTIC:
-                        version = models.GetTableRequest.model_validate(
-                            self._body()
-                        ).version
-                    else:  # pragma: no cover - pydantic present here
-                        version = _parse_version(self._body().get("version"))
+                    # Validate through the pydantic request model
+                    # (exactly what FastAPI does before the route runs).
+                    version = models.GetTableRequest.model_validate(
+                        self._body()
+                    ).version
                     out = service.get_table(version)
                     # JSON-shape parity with the FastAPI app (r6
                     # review): integer labels stay numbers; only a
@@ -84,21 +73,13 @@ def make_handler(service: NamesTableService) -> type[BaseHTTPRequestHandler]:
                         out["version"] = out["version"].isoformat()
                     self._reply(200, out)
                 elif method == "PUT" and self.path == "/merge_to_table":
-                    if models.HAVE_PYDANTIC:
-                        req = models.MergeToTableRequest.model_validate(
-                            self._body()
-                        )
-                        rows = [r.model_dump() for r in req.data]
-                    else:  # pragma: no cover - pydantic present here
-                        rows = self._body()["data"]
+                    req = models.MergeToTableRequest.model_validate(self._body())
+                    rows = [r.model_dump() for r in req.data]
                     self._reply(200, service.merge_to_table(rows))
                 elif method == "DELETE" and self.path == "/delete_from_table":
-                    if models.HAVE_PYDANTIC:
-                        ids = models.DeleteFromTableRequest.model_validate(
-                            self._body()
-                        ).ids
-                    else:  # pragma: no cover - pydantic present here
-                        ids = self._body()["ids"]
+                    ids = models.DeleteFromTableRequest.model_validate(
+                        self._body()
+                    ).ids
                     self._reply(200, service.delete_from_table(ids))
                 else:
                     self._reply(404, {"detail": "Not Found"})

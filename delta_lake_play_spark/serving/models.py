@@ -5,45 +5,34 @@ lastname), ``MergeToTableRequest`` (``data`` list), ``DeleteFrom-
 TableRequest`` (``ids`` list), ``GetTableRequest`` (``version``: int,
 ISO datetime, or null).
 
-Gated on pydantic ALONE — FastAPI remains uninstallable in this
-environment (SURVEY §15 probe), but pydantic became available in the
-r8 re-probe, so the request-shape parity is now EXECUTED at runtime:
-the stdlib dev server (``http_server.py``) validates every request
-body through these models exactly as FastAPI would before invoking a
-route, rejecting malformed payloads with the same 422 semantics. When
-pydantic is absent the callers fall back to hand parsing.
+FastAPI remains uninstallable in this environment (SURVEY §15
+probe); pydantic is a pinned requirement, so the request-shape parity
+is EXECUTED at runtime: the stdlib dev server (``http_server.py``)
+validates every request body through these models exactly as FastAPI
+would before invoking a route, rejecting malformed payloads with the
+same 422 semantics.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
-try:
-    from pydantic import BaseModel, ValidationError
+from pydantic import BaseModel
 
-    HAVE_PYDANTIC = True
-except ImportError:  # pragma: no cover - pydantic present in this env
-    HAVE_PYDANTIC = False
-    ValidationError = None  # type: ignore[assignment]
 
-if HAVE_PYDANTIC:
+class TableRowModel(BaseModel):  # api.py:23-26
+    id: int
+    firstname: str
+    lastname: str
 
-    class TableRowModel(BaseModel):  # api.py:23-26
-        id: int
-        firstname: str
-        lastname: str
 
-    class MergeToTableRequest(BaseModel):  # api.py:29-30
-        data: list[TableRowModel]
+class MergeToTableRequest(BaseModel):  # api.py:29-30
+    data: list[TableRowModel]
 
-    class DeleteFromTableRequest(BaseModel):  # api.py:33-34
-        ids: list[int]
 
-    class GetTableRequest(BaseModel):  # api.py:37-38
-        version: int | datetime | None = None
+class DeleteFromTableRequest(BaseModel):  # api.py:33-34
+    ids: list[int]
 
-else:  # pragma: no cover - pydantic present in this env
-    TableRowModel = None  # type: ignore[assignment]
-    MergeToTableRequest = None  # type: ignore[assignment]
-    DeleteFromTableRequest = None  # type: ignore[assignment]
-    GetTableRequest = None  # type: ignore[assignment]
+
+class GetTableRequest(BaseModel):  # api.py:37-38
+    version: int | datetime | None = None

@@ -50,6 +50,21 @@ add-file set → schema'd parquet scan with partition values from
 never touches the private log), so round-tripping through it is
 evidence the emitted log is self-describing the way external readers
 require.
+
+Every read of ``_delta_log`` goes through one layer (the "log reader"
+section below): :func:`_commit_actions` is the only parser of commit
+and compacted JSON files, :func:`_checkpoint_actions` the only reader
+of checkpoint parquet (multi-part sets expanded, V2 sidecars
+resolved, optional column pruning), and :func:`_replay` folds them
+into one :class:`_LogState` the way the protocol reads a log: the
+newest checkpoint at or below the target, then the commits after it.
+The snapshot and domain readers, the CDF start schema, log
+compaction and the checkpoint writer all reconcile through that
+state. The checkpoint writer replays from the previous checkpoint
+too, so writing one costs O(commits since the last checkpoint), not
+O(history); its live file list still comes from the private log.
+``tests/test_delta_log_reader_lint.py`` keeps a second reader from
+growing back.
 """
 
 from __future__ import annotations
@@ -59,6 +74,7 @@ import json
 import os
 import re
 import uuid
+from collections.abc import Callable, Iterator
 from datetime import datetime
 from urllib.parse import quote, unquote
 
@@ -149,8 +165,8 @@ def _checkpoint_versions(ddir: str) -> dict[int, str]:
 def _checkpoint_files(ddir: str, fn: str) -> list[str]:
     """Expand a representative checkpoint filename to every file that
     must be read: all parts for the multi-part classic form, the file
-    itself otherwise (V2 sidecars are resolved separately by each
-    reader, as before)."""
+    itself otherwise (V2 sidecars are resolved by
+    :func:`_checkpoint_actions`)."""
     m = _CP_MULTIPART_RE.match(fn)
     if not m:
         return [fn]
@@ -159,6 +175,209 @@ def _checkpoint_files(ddir: str, fn: str) -> list[str]:
         f"{v:020d}.checkpoint.{p:010d}.{total:010d}.parquet"
         for p in range(1, total + 1)
     ]
+
+
+# ------------------------------------------------------------ log reader
+
+
+def _commit_actions(path: str) -> Iterator[dict]:
+    """The actions of one commit or compacted JSON file, in file
+    order: the only parser of ``_delta_log`` JSON."""
+    with open(path) as fh:
+        for line in fh:
+            if line.strip():
+                yield json.loads(line)
+
+
+def _checkpoint_actions(
+    ddir: str, fn: str, columns: list[str] | None = None
+) -> Iterator[dict]:
+    """The action rows of the checkpoint that ``fn`` represents (see
+    :func:`_checkpoint_versions`): the only reader of checkpoint and
+    sidecar parquet. Every part of a multi-part set is read; a V2
+    manifest's ``sidecar`` rows are followed into ``_sidecars/``
+    whenever file actions are wanted. ``columns`` prunes the read to
+    those action columns (ones a file lacks are skipped), so a
+    protocol or schema lookup never loads a large checkpoint's add
+    rows."""
+    import pyarrow.parquet as pq
+
+    def read(path: str, want: list[str] | None) -> list[dict]:
+        with pq.ParquetFile(path) as pf:
+            if want is not None:
+                want = [c for c in want if c in pf.schema_arrow.names]
+                if not want:
+                    return []
+            return pf.read(columns=want).to_pylist()
+
+    side = (
+        None if columns is None else [c for c in columns if c in ("add", "remove")]
+    )
+    top = columns if not side else list(dict.fromkeys([*columns, "sidecar"]))
+    for part in _checkpoint_files(ddir, fn):
+        rows = read(os.path.join(ddir, part), top)
+        yield from rows
+        if side == []:
+            continue
+        for r in rows:
+            if r.get("sidecar"):
+                yield from read(
+                    os.path.join(ddir, "_sidecars", r["sidecar"]["path"]), side
+                )
+
+
+class _LogState:
+    """Reconciled actions of a stretch of log, by the protocol's
+    rules: the latest protocol and metaData, live adds and remove
+    tombstones by path, the latest txn per appId and the latest
+    domainMetadata per domain (removals kept, as tombstones)."""
+
+    def __init__(self) -> None:
+        self.protocol: dict | None = None
+        self.meta: dict | None = None
+        self.adds: dict[str, dict] = {}
+        self.removes: dict[str, dict] = {}
+        self.txns: dict[str, dict] = {}
+        self.domains: dict[str, dict] = {}
+
+    def apply(self, action: dict) -> None:
+        # a checkpoint row carries every action column, all null but one
+        p = action.get("protocol")
+        if p and p.get("minReaderVersion"):
+            self.protocol = p
+        if action.get("metaData"):
+            self.meta = action["metaData"]
+        if action.get("add"):
+            add = action["add"]
+            if isinstance(add.get("partitionValues"), list):  # parquet map
+                add["partitionValues"] = dict(add["partitionValues"])
+            self.adds[add["path"]] = add
+            self.removes.pop(add["path"], None)
+        if action.get("remove"):
+            rm = action["remove"]
+            self.adds.pop(rm["path"], None)
+            # The tombstone is kept even when it cancels an add of the
+            # same stretch: Delta's reconciliation keeps removes for
+            # the retention window, so a reader substituting a
+            # compacted range for its commits (incl. a mid-span replay
+            # over a checkpoint that still holds the transient file)
+            # and VACUUM both see the removal (ADVICE r6).
+            self.removes[rm["path"]] = rm
+        if action.get("txn"):
+            self.txns[action["txn"]["appId"]] = action["txn"]
+        if action.get("domainMetadata"):
+            d = action["domainMetadata"]
+            self.domains[d["domain"]] = d
+
+    def actions(self) -> list[dict]:
+        """The state as actions, in checkpoint row order."""
+        out: list[dict] = []
+        if self.protocol is not None:
+            out.append({"protocol": self.protocol})
+        if self.meta is not None:
+            out.append({"metaData": self.meta})
+        out += [{"txn": t} for t in self.txns.values()]
+        out += [{"domainMetadata": d} for d in self.domains.values()]
+        out += [{"add": a} for a in self.adds.values()]
+        out += [{"remove": r} for r in self.removes.values()]
+        return out
+
+
+def _replay(
+    ddir: str,
+    version: int | None = None,
+    gaps_ok: bool = False,
+    columns: list[str] | None = None,
+) -> tuple[int, _LogState]:
+    """Reconcile the log up to ``version`` (default: the newest) the
+    way the protocol reads it: the newest checkpoint at or below it
+    (pruned to ``columns``), then each later commit, the widest
+    compacted range that fits standing in for its commits.
+
+    A missing commit raises ``FileNotFoundError`` unless ``gaps_ok``:
+    the checkpoint writer must replay over a vacuum re-base, which
+    writes no JSON for the versions it skips, and the CDF start schema
+    leaves a cleaned-up range to the range check."""
+    versions = _commit_versions(ddir)
+    cp_map = _checkpoint_versions(ddir)
+    cp_versions = sorted(cp_map)
+    spans = _compacted_spans(ddir)
+    span_ends = {e for lst in spans.values() for e, _fn in lst}
+    if version is None:
+        if not versions and not cp_versions and not span_ends:
+            raise FileNotFoundError(
+                f"no delta log at {ddir!r}: neither JSON commits nor "
+                "checkpoints found"
+            )
+        version = max(versions + cp_versions + sorted(span_ends))
+    if not gaps_ok and (
+        version not in versions
+        and version not in cp_versions
+        and version not in span_ends
+    ):
+        raise FileNotFoundError(f"delta version {version} not in log")
+
+    state = _LogState()
+    usable = [v for v in cp_versions if v <= version]
+    v = 0
+    if usable:
+        for row in _checkpoint_actions(ddir, cp_map[usable[-1]], columns):
+            state.apply(row)
+        v = usable[-1] + 1
+
+    while v <= version:
+        # Minor log compactions: the WIDEST <v>.<e>.compacted.json
+        # whose range fits the replay substitutes for its JSON
+        # commits — one read instead of e-v+1 (and tolerates those
+        # commits' absence). Overshooting ranges are skipped; a
+        # narrower re-compaction sibling can still match.
+        fit = next(
+            ((e, fn) for e, fn in spans.get(v, []) if e <= version), None
+        )
+        commit = os.path.join(ddir, f"{v:020d}.json")
+        if fit is None and not os.path.exists(commit):
+            # Commit JSON cleaned up mid-span (e.g. checkpoint at 2,
+            # compacted [1,5], JSONs 3..5 removed): a span STARTING
+            # BEFORE the cursor still reconstructs v..end exactly,
+            # because a compacted file is the full action
+            # reconciliation of its range — re-applying the already-
+            # replayed prefix is idempotent (adds re-add live files,
+            # retained remove tombstones re-delete dead ones, latest
+            # metaData/protocol/txn win). Only engaged when the JSON
+            # is genuinely missing; widest usable end wins (ADVICE r6).
+            fit = max(
+                (
+                    (e, fn)
+                    for s in spans
+                    if s <= v
+                    for e, fn in spans[s]
+                    if v <= e <= version
+                ),
+                key=lambda t: t[0],
+                default=None,
+            )
+            if fit is None:
+                if gaps_ok:
+                    v += 1
+                    continue
+                if v in versions or usable:
+                    raise FileNotFoundError(
+                        f"delta log is missing commit {v} needed to replay "
+                        f"version {version} from checkpoint "
+                        f"{usable[-1] if usable else '(none)'}"
+                    )
+                raise FileNotFoundError(
+                    f"delta version {version} predates every checkpoint and "
+                    f"its JSON commits were cleaned up — not reconstructible"
+                )
+        if fit is not None:
+            commit = os.path.join(ddir, fit[1])
+        for action in _commit_actions(commit):
+            state.apply(action)
+        v = fit[0] + 1 if fit is not None else v + 1
+    return version, state
+
+
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _MATERIALIZED_DIR = "_dv_materialized"
@@ -802,54 +1021,35 @@ def latest_mirror_protocol(table) -> dict | None:
     if not os.path.isdir(ddir):
         return None
 
-    def _scan_json(path: str) -> dict | None:
-        found = None
-        with open(path) as fh:
-            for line in fh:
-                if '"protocol"' not in line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    found = action["protocol"]  # last line wins
-        return found
+    def _last_protocol(actions) -> dict | None:
+        state = _LogState()
+        for action in actions:
+            state.apply(action)
+        return state.protocol
 
     candidates: list[tuple[int, dict]] = []
-    jsons = sorted(
-        fn
-        for fn in os.listdir(ddir)
-        if len(fn) == 25 and fn.endswith(".json") and fn[:20].isdigit()
-    )
-    for fn in reversed(jsons):
-        p = _scan_json(os.path.join(ddir, fn))
+    for v in reversed(_commit_versions(ddir)):
+        p = _last_protocol(_commit_actions(os.path.join(ddir, f"{v:020d}.json")))
         if p is not None:
-            candidates.append((int(fn[:20]), p))
+            candidates.append((v, p))
             break  # highest JSON version with a protocol line
     spans = _compacted_spans(ddir)
     # a compaction's protocol is the reconciled one AT its range end
     for end, cfn in sorted(
         ((e, fn) for s in spans for e, fn in spans[s]), reverse=True
     ):
-        p = _scan_json(os.path.join(ddir, cfn))
+        p = _last_protocol(_commit_actions(os.path.join(ddir, cfn)))
         if p is not None:
             candidates.append((end, p))
             break
     cps = _checkpoint_versions(ddir)
     if cps:
-        import pyarrow.parquet as pq
-
         cp = max(cps)
-        for part in _checkpoint_files(ddir, cps[cp]):
-            # column-pruned: the protocol lookup must not materialize
-            # a large checkpoint's add/remove/stats rows
-            tbl = pq.read_table(os.path.join(ddir, part), columns=["protocol"])
-            for row in tbl.to_pylist():
-                p = row.get("protocol")
-                if p and p.get("minReaderVersion"):
-                    candidates.append((cp, p))
-                    break
-            else:
-                continue
-            break
+        # column-pruned: the protocol lookup must not materialize a
+        # large checkpoint's add/remove/stats rows
+        p = _last_protocol(_checkpoint_actions(ddir, cps[cp], ["protocol"]))
+        if p is not None:
+            candidates.append((cp, p))
     if not candidates:
         return None
     return max(candidates, key=lambda t: t[0])[1]
@@ -1230,56 +1430,17 @@ def write_log_compaction(table, start: int, end: int) -> str:
     ddir = _delta_dir(table.path)
     if start >= end:
         raise ValueError("compaction range must span at least two commits")
-    adds: dict[str, dict] = {}
-    removes: dict[str, dict] = {}
-    meta = None
-    proto = None
-    txns: dict[str, dict] = {}
-    domains: dict[str, dict] = {}
+    state = _LogState()
     for v in range(start, end + 1):
         p = os.path.join(ddir, f"{v:020d}.json")
         if not os.path.exists(p):
             raise FileNotFoundError(
                 f"cannot compact [{start}, {end}]: commit {v} missing"
             )
-        with open(p) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a:
-                    adds[a["add"]["path"]] = a["add"]
-                    removes.pop(a["add"]["path"], None)
-                elif "remove" in a:
-                    rm = a["remove"]
-                    adds.pop(rm["path"], None)
-                    # Tombstone retained even when it cancels an
-                    # in-range add: Delta's reconciliation keeps
-                    # removes for the retention window, so a reader
-                    # substituting this file for the range (incl. a
-                    # mid-span replay over a checkpoint that still
-                    # holds the transient file) and VACUUM both see
-                    # the removal (ADVICE r6).
-                    removes[rm["path"]] = rm
-                elif "metaData" in a:
-                    meta = a["metaData"]
-                elif "protocol" in a:
-                    proto = a["protocol"]
-                elif "txn" in a:
-                    txns[a["txn"]["appId"]] = a["txn"]
-                elif "domainMetadata" in a:
-                    domains[a["domainMetadata"]["domain"]] = a["domainMetadata"]
-    actions: list[dict] = []
-    if proto is not None:
-        actions.append({"protocol": proto})
-    if meta is not None:
-        actions.append({"metaData": meta})
-    actions += [{"txn": t} for t in txns.values()]
-    actions += [{"domainMetadata": d} for d in domains.values()]
-    actions += [{"add": a} for a in adds.values()]
-    actions += [{"remove": r} for r in removes.values()]
+        for action in _commit_actions(p):
+            state.apply(action)
     name = f"{start:020d}.{end:020d}.compacted.json"
-    _write_atomic(ddir, name, "\n".join(json.dumps(a) for a in actions))
+    _write_atomic(ddir, name, "\n".join(json.dumps(a) for a in state.actions()))
     return os.path.join(ddir, name)
 
 
@@ -1315,8 +1476,8 @@ def cleanup_expired_logs(
     checkpoint become unreconstructible — time travel is bounded by
     the retention window by design; the protocol readers raise their
     descriptive not-reconstructible error for them. Checkpoints are
-    self-contained for replay, and ``_checkpoint_rows`` seeds txn and
-    unexpired tombstones from the prior checkpoint, so nothing a
+    self-contained for replay, and the checkpoint writer replays txn
+    and unexpired tombstones from the prior checkpoint, so nothing a
     FUTURE checkpoint needs lives only in the deleted JSONs. Sidecar
     GC is reference-counted against every retained manifest — an
     incremental checkpoint's REUSED sidecars are exactly the case a
@@ -1405,15 +1566,12 @@ def cleanup_expired_logs(
     # V2 sidecar GC: keep exactly what surviving manifests reference.
     sdir = os.path.join(ddir, "_sidecars")
     if os.path.isdir(sdir):
-        import pyarrow.parquet as pq
-
-        referenced: set[str] = set()
-        for fn in _checkpoint_versions(ddir).values():
-            if fn.endswith(".checkpoint.parquet") or _CP_MULTIPART_RE.match(fn):
-                continue  # classic (single- or multi-part): no sidecars
-            for row in pq.read_table(os.path.join(ddir, fn)).to_pylist():
-                if row.get("sidecar"):
-                    referenced.add(row["sidecar"]["path"])
+        referenced = {
+            row["sidecar"]["path"]
+            for fn in _checkpoint_versions(ddir).values()
+            for row in _checkpoint_actions(ddir, fn, ["sidecar"])
+            if row.get("sidecar")
+        }
         for fn in os.listdir(sdir):
             # mtime grace: _write_checkpoint_v2 links sidecars into
             # place BEFORE its manifest lands, so an unreferenced
@@ -1452,23 +1610,19 @@ def _gc_dv_bins(table, ddir: str, cutoff: float) -> list[str]:
             if rel:
                 referenced.add(rel)
 
-    for fn in os.listdir(ddir):
-        full = os.path.join(ddir, fn)
-        if fn.endswith(".json") and not fn.startswith(("_", ".")):
-            with open(full) as fh:
-                for line in fh:
-                    if line.strip():
-                        _ref(json.loads(line).get("add"))
-        elif fn.endswith(".parquet") and ".checkpoint" in fn:
-            import pyarrow.parquet as pq
-
-            for row in pq.read_table(full).to_pylist():
-                _ref(row.get("add"))
-                if row.get("sidecar"):
-                    sp = os.path.join(ddir, "_sidecars", row["sidecar"]["path"])
-                    if os.path.exists(sp):
-                        for srow in pq.read_table(sp).to_pylist():
-                            _ref(srow.get("add"))
+    jsons = [f"{v:020d}.json" for v in _commit_versions(ddir)] + [
+        fn for spans in _compacted_spans(ddir).values() for _e, fn in spans
+    ]
+    for fn in jsons:
+        for action in _commit_actions(os.path.join(ddir, fn)):
+            _ref(action.get("add"))
+    # Every checkpoint a reader can pick: the sidecar GC above keeps
+    # exactly these manifests' sidecars. Another checkpoint of the
+    # same version reconciles the same snapshot, so it references the
+    # same bins.
+    for fn in _checkpoint_versions(ddir).values():
+        for row in _checkpoint_actions(ddir, fn, ["add"]):
+            _ref(row.get("add"))
     deleted: list[str] = []
     for fn in os.listdir(table.path):
         if (
@@ -1833,31 +1987,6 @@ def _checkpoint_schema(v2_manifest: bool = False):
     )
 
 
-def _recent_tombstones(ddir: str, version: int, as_of_ms: int) -> list[dict]:
-    """Remove actions from mirrored commits ≤ ``version`` whose
-    deletionTimestamp is within the retention window — PROTOCOL.md
-    requires checkpoints to carry them until
-    delta.deletedFileRetentionDuration so external VACUUM /
-    incremental readers can still see recently removed files."""
-    floor = as_of_ms - _TOMBSTONE_RETENTION_MS
-    out: list[dict] = []
-    for v_fn in _commit_versions(ddir):
-        if v_fn > version:
-            continue
-        fn = f"{v_fn:020d}.json"
-        with open(os.path.join(ddir, fn)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                rm = action.get("remove")
-                if rm and rm.get("deletionTimestamp", 0) >= floor:
-                    out.append(rm)
-    # keep only tombstones for files NOT re-added later (paths are
-    # uuid'd and never reused, so "latest action wins" = set difference)
-    return out
-
-
 def _write_checkpoint(
     table, ddir: str, version: int, entry: dict, parts: int | None = None
 ) -> None:
@@ -1912,36 +2041,20 @@ def _write_checkpoint_multipart(
     _write_last_checkpoint(ddir, version, len(rows), parts=parts)
 
 
-def _prior_checkpoint_rows(ddir: str, version: int) -> list[dict]:
-    """All action rows (manifest + sidecars for V2) of the newest
-    checkpoint STRICTLY below ``version`` — the seed state a new
-    checkpoint must reconcile over once the JSON prefix below that
-    checkpoint has been cleaned up (``cleanup_expired_logs``): txn
-    and unexpired tombstone actions whose commits no longer exist
-    must survive checkpoint-to-checkpoint."""
-    usable = [v for v in _checkpoint_versions(ddir) if v < version]
-    if not usable:
-        return []
-    import pyarrow.parquet as pq
-
-    cp = max(usable)
-    fn = _checkpoint_versions(ddir)[cp]
-    rows = [
-        r
-        for part in _checkpoint_files(ddir, fn)
-        for r in pq.read_table(os.path.join(ddir, part)).to_pylist()
-    ]
-    for sp in [r["sidecar"]["path"] for r in rows if r.get("sidecar")]:
-        rows += pq.read_table(os.path.join(ddir, "_sidecars", sp)).to_pylist()
-    return rows
-
-
 def _checkpoint_rows(table, ddir: str, version: int, entry: dict) -> list[dict]:
     """The reconciled snapshot at ``version`` as action rows: one
     protocol row, one metaData row, latest txn per appId, persisted
     domainMetadata, one add row per live file, plus retained remove
     tombstones. Checkpoint rows are reconciliations, not new data:
-    adds are written with dataChange=false per the spec."""
+    adds are written with dataChange=false per the spec.
+
+    The live files, protocol, metaData and domains come from the
+    private entry. txn and tombstones come from replaying the log
+    from the previous checkpoint: the checkpoint must carry the
+    LATEST txn version per appId so idempotent writers can resume,
+    and unexpired removes so external VACUUM / incremental readers
+    still see recently removed files, after the JSON prefix is
+    cleaned up (PROTOCOL.md checkpoint contents)."""
     ts = _ts_ms(entry["timestamp"])
     part_cols = table.partition_columns()
     tchanges = _type_changes(table, entry)  # computed once, fed to both
@@ -1952,32 +2065,8 @@ def _checkpoint_rows(table, ddir: str, version: int, entry: dict) -> list[dict]:
         _protocol_action(table, entry, tchanges),
         {"metaData": meta},
     ]
-    prior = _prior_checkpoint_rows(ddir, version)
-    # SetTransaction reconciliation: the checkpoint must carry the
-    # LATEST txn version per appId so idempotent writers can resume
-    # after the JSON prefix is cleaned up (PROTOCOL.md checkpoint
-    # contents). Seeded from the previous checkpoint — after log
-    # cleanup the JSONs that recorded an appId may no longer exist —
-    # then overlaid with every commit still on disk.
-    latest_txn: dict[str, dict] = {}
-    for r in prior:
-        if r.get("txn"):
-            latest_txn[r["txn"]["appId"]] = {
-                k: v for k, v in r["txn"].items() if v is not None
-            }
-    for v_fn in _commit_versions(ddir):
-        if v_fn > version:
-            continue
-        fn = f"{v_fn:020d}.json"
-        with open(os.path.join(ddir, fn)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "txn" in action:
-                    latest_txn[action["txn"]["appId"]] = action["txn"]
-    for t in latest_txn.values():
-        rows.append({"txn": t})
+    _, state = _replay(ddir, version, gaps_ok=True, columns=["txn", "remove"])
+    rows += [{"txn": t} for t in state.txns.values()]
     if "rowIdHighWaterMark" in entry:
         # domainMetadata persists in checkpoints (PROTOCOL.md): the
         # row-id high-water mark must survive JSON-prefix cleanup.
@@ -1993,40 +2082,19 @@ def _checkpoint_rows(table, ddir: str, version: int, entry: dict) -> list[dict]:
         ):
             rows.append(action)
             live_paths.add(action["add"]["path"])
-    seen_tombstones: set[str] = set()
-    for rm in _recent_tombstones(ddir, version, ts):
-        if rm["path"] not in live_paths:
-            seen_tombstones.add(rm["path"])
-            rows.append(
-                {
-                    "remove": {
-                        "path": rm["path"],
-                        "deletionTimestamp": rm.get("deletionTimestamp"),
-                        "dataChange": False,
-                    }
-                }
-            )
-    # Tombstones whose commits were cleaned up survive via the prior
-    # checkpoint until they age out of the retention window.
+    # tombstones last until delta.deletedFileRetentionDuration
     floor = ts - _TOMBSTONE_RETENTION_MS
-    for r in prior:
-        rm = r.get("remove")
-        if (
-            rm
-            and rm["path"] not in live_paths
-            and rm["path"] not in seen_tombstones
-            and (rm.get("deletionTimestamp") or 0) >= floor
-        ):
-            seen_tombstones.add(rm["path"])
-            rows.append(
-                {
-                    "remove": {
-                        "path": rm["path"],
-                        "deletionTimestamp": rm.get("deletionTimestamp"),
-                        "dataChange": False,
-                    }
-                }
-            )
+    rows += [
+        {
+            "remove": {
+                "path": path,
+                "deletionTimestamp": rm.get("deletionTimestamp"),
+                "dataChange": False,
+            }
+        }
+        for path, rm in state.removes.items()
+        if path not in live_paths and (rm.get("deletionTimestamp") or 0) >= floor
+    ]
     return rows
 
 
@@ -2106,11 +2174,9 @@ def _prev_sidecar_index(ddir: str, version: int) -> dict[tuple[str, str], dict]:
     ]
     if not prev:
         return {}
-    import pyarrow.parquet as pq
-
     _, fn = max(prev)
     out: dict[tuple[str, str], dict] = {}
-    for row in pq.read_table(os.path.join(ddir, fn)).to_pylist():
+    for row in _checkpoint_actions(ddir, fn, ["sidecar"]):
         sc = row.get("sidecar")
         if not sc:
             continue
@@ -2231,9 +2297,10 @@ def resolve_delta_timestamp(table_path: str, timestamp_ms: int) -> int:
     ddir = _delta_dir(table_path)
     best: int | None = None
     for v in _commit_versions(ddir):
-        fn = f"{v:020d}.json"
-        with open(os.path.join(ddir, fn)) as fh:
-            first = json.loads(fh.readline())
+        # commitInfo is the first action when the feature is enabled
+        actions = _commit_actions(os.path.join(ddir, f"{v:020d}.json"))
+        first = next(actions, {})
+        actions.close()
         ict = first.get("commitInfo", {}).get("inCommitTimestamp")
         if ict is None:
             raise DeltaMirrorError(
@@ -2247,170 +2314,19 @@ def resolve_delta_timestamp(table_path: str, timestamp_ms: int) -> int:
     return best
 
 
-def _replay_actions(
-    table_path: str, version: int | None = None
-) -> tuple[int, dict[str, dict], str | None, list[str], dict[str, dict]]:
-    """Protocol-reader action replay (checkpoint + compacted spans +
-    JSON commits) shared by :func:`read_delta_snapshot` and
-    :func:`read_delta_domains`. Returns ``(version, adds,
-    schema_string, part_cols, domains)`` where ``domains`` is the
-    latest non-removed ``domainMetadata`` per domain — reconciled
-    exactly as PROTOCOL.md specifies (latest action per domain wins;
-    a ``removed`` tombstone drops it)."""
+def _read_state(table_path: str, version: int | None) -> tuple[int, _LogState]:
+    """The protocol reader's replay, shared by :func:`read_delta_snapshot`
+    and :func:`read_delta_domains`: :func:`_replay`, then the reader
+    protocol gate and the version-checksum check."""
     ddir = _delta_dir(table_path)
-    versions = _commit_versions(ddir)
-    cp_map = _checkpoint_versions(ddir)
-    cp_versions = sorted(cp_map)
-    spans = _compacted_spans(ddir)
-    span_ends = {e for lst in spans.values() for e, _fn in lst}
-    if version is None:
-        if not versions and not cp_versions and not span_ends:
-            raise FileNotFoundError(
-                f"no delta log at {ddir!r}: neither JSON commits nor "
-                "checkpoints found"
-            )
-        version = max(versions + cp_versions + sorted(span_ends))
-    if (
-        version not in versions
-        and version not in cp_versions
-        and version not in span_ends
-    ):
-        raise FileNotFoundError(f"delta version {version} not in log")
-
-    adds: dict[str, dict] = {}
-    domains: dict[str, dict] = {}
-    schema_string: str | None = None
-    part_cols: list[str] = []
-    protocol: dict | None = None
-    start = 0
-
-    def _apply_domain(d: dict) -> None:
-        if d.get("removed"):
-            domains.pop(d["domain"], None)
-        else:
-            domains[d["domain"]] = d
-
-    def _apply_protocol(p: dict) -> None:
-        nonlocal protocol
-        protocol = p
-
-    usable = [v for v in cp_versions if v <= version]
-    if usable:
-        import pyarrow.parquet as pq
-
-        cp = usable[-1]
-
-        def _cp_row(row: dict) -> None:
-            nonlocal schema_string, part_cols
-            if row.get("metaData"):
-                schema_string = row["metaData"]["schemaString"]
-                part_cols = list(row["metaData"]["partitionColumns"] or [])
-            if row.get("domainMetadata"):
-                _apply_domain(row["domainMetadata"])
-            if row.get("protocol") and row["protocol"].get("minReaderVersion"):
-                _apply_protocol(row["protocol"])
-            if row.get("add"):
-                a = row["add"]
-                if isinstance(a.get("partitionValues"), list):
-                    a["partitionValues"] = dict(a["partitionValues"])
-                adds[a["path"]] = a
-
-        rows = [
-            r
-            for part in _checkpoint_files(ddir, cp_map[cp])
-            for r in pq.read_table(os.path.join(ddir, part)).to_pylist()
-        ]
-        # V2 manifests carry file actions in sidecar shards — resolve
-        # each sidecar action against _delta_log/_sidecars/.
-        sidecars = [r["sidecar"]["path"] for r in rows if r.get("sidecar")]
-        for row in rows:
-            _cp_row(row)
-        for sp in sidecars:
-            for row in pq.read_table(
-                os.path.join(ddir, "_sidecars", sp)
-            ).to_pylist():
-                _cp_row(row)
-        start = cp + 1
-
-    def _apply_json(path: str) -> None:
-        nonlocal schema_string, part_cols
-        with open(path) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    schema_string = action["metaData"]["schemaString"]
-                    part_cols = list(action["metaData"]["partitionColumns"])
-                elif "add" in action:
-                    adds[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    adds.pop(action["remove"]["path"], None)
-                elif "domainMetadata" in action:
-                    _apply_domain(action["domainMetadata"])
-                elif "protocol" in action:
-                    _apply_protocol(action["protocol"])
-
-    v = start
-    while v <= version:
-        # Minor log compactions: the WIDEST <v>.<e>.compacted.json
-        # whose range fits the replay substitutes for its JSON
-        # commits — one read instead of e-v+1 (and tolerates those
-        # commits' absence). Overshooting ranges are skipped; a
-        # narrower re-compaction sibling can still match.
-        fit = next(
-            ((e, fn) for e, fn in spans.get(v, []) if e <= version), None
-        )
-        if fit is not None:
-            end_v, cfn = fit
-            _apply_json(os.path.join(ddir, cfn))
-            v = end_v + 1
-            continue
-        commit = os.path.join(ddir, f"{v:020d}.json")
-        if not os.path.exists(commit):
-            # Commit JSON cleaned up mid-span (e.g. checkpoint at 2,
-            # compacted [1,5], JSONs 3..5 removed): a span STARTING
-            # BEFORE the cursor still reconstructs v..end exactly,
-            # because a compacted file is the full action
-            # reconciliation of its range — re-applying the already-
-            # replayed prefix is idempotent (adds re-add live files,
-            # retained remove tombstones re-delete dead ones, latest
-            # metaData/protocol/txn win). Only engaged when the JSON
-            # is genuinely missing; widest usable end wins (ADVICE r6).
-            covering = max(
-                (
-                    (e, fn)
-                    for s in spans
-                    if s <= v
-                    for e, fn in spans[s]
-                    if v <= e <= version
-                ),
-                key=lambda t: t[0],
-                default=None,
-            )
-            if covering is not None:
-                end_v, cfn = covering
-                _apply_json(os.path.join(ddir, cfn))
-                v = end_v + 1
-                continue
-            if v in versions or usable:
-                raise FileNotFoundError(
-                    f"delta log is missing commit {v} needed to replay "
-                    f"version {version} from checkpoint "
-                    f"{usable[-1] if usable else '(none)'}"
-                )
-            raise FileNotFoundError(
-                f"delta version {version} predates every checkpoint and "
-                f"its JSON commits were cleaned up — not reconstructible"
-            )
-        _apply_json(commit)
-        v += 1
+    version, state = _replay(ddir, version)
 
     # Protocol gate (PROTOCOL.md reader responsibilities): a reader
     # MUST refuse tables demanding a newer reader version or naming a
     # reader feature it does not implement — silently misreading (e.g.
     # returning deleted rows of an un-applied DV scheme) is the one
     # failure mode the protocol exists to prevent.
+    protocol = state.protocol
     if protocol is not None:
         mrv = int(protocol.get("minReaderVersion") or 1)
         if mrv > 3:
@@ -2437,8 +2353,8 @@ def _replay_actions(
     if os.path.exists(crc_path):
         with open(crc_path) as fh:
             crc = json.load(fh)
-        got_files = len(adds)
-        got_size = sum(int(a.get("size") or 0) for a in adds.values())
+        got_files = len(state.adds)
+        got_size = sum(int(a.get("size") or 0) for a in state.adds.values())
         if (
             crc.get("numFiles") != got_files
             or crc.get("tableSizeBytes") != got_size
@@ -2448,7 +2364,7 @@ def _replay_actions(
                 f"{crc.get('numFiles')} files / {crc.get('tableSizeBytes')} "
                 f"bytes, replay produced {got_files} / {got_size}"
             )
-    return version, adds, schema_string, part_cols, domains
+    return version, state
 
 
 def read_delta_domains(
@@ -2460,11 +2376,74 @@ def read_delta_domains(
     This is how an external client discovers e.g. a clustered table's
     clustering columns (domain ``delta.clustering``) after the JSON
     prefix that declared them was checkpointed and cleaned up."""
-    _, _, _, _, domains = _replay_actions(table_path, version)
+    _, state = _read_state(table_path, version)
     out: dict[str, dict] = {}
-    for name, d in domains.items():
+    for name, d in state.domains.items():
+        if d.get("removed"):
+            continue  # a removed tombstone drops the domain
         cfg = d.get("configuration")
         out[name] = json.loads(cfg) if isinstance(cfg, str) else (cfg or {})
+    return out
+
+
+def _scan_files(
+    spark: SparkSession,
+    table_path: str,
+    files: list[dict],
+    meta: dict,
+    extra: tuple[T.StructField, ...] = (),
+    mask: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """The data files named by ``files`` (add or cdc actions) as one
+    DataFrame of the logical columns of ``meta`` (a metaData action):
+    each partition's files are read under their PHYSICAL column names
+    (column mapping mode "name" advertises them in field metadata),
+    aliased back to the logical names, and given their partition
+    values as literals, as the protocol requires (partition columns
+    are absent from the data files). ``extra`` fields are read as
+    stored and kept after the table columns; ``mask`` is applied to
+    each raw parquet read."""
+    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    part_cols = list(meta.get("partitionColumns") or [])
+    phys = {
+        f.name: (f.metadata or {}).get(
+            "delta.columnMapping.physicalName", f.name
+        )
+        for f in schema.fields
+    }
+    data_fields = [f for f in schema.fields if f.name not in part_cols]
+    read_schema = T.StructType(
+        [T.StructField(phys[f.name], f.dataType, True) for f in data_fields]
+        + list(extra)
+    )
+    if not files:
+        # strip mapping metadata from the returned schema
+        return empty_df(
+            spark,
+            T.StructType(
+                [T.StructField(f.name, f.dataType, True) for f in schema.fields]
+                + list(extra)
+            ),
+        )
+    names = [f.name for f in schema.fields] + [f.name for f in extra]
+    types = {f.name: f.dataType for f in schema.fields}
+    by_part: dict[tuple, list[str]] = {}
+    for a in files:
+        key = tuple((a.get("partitionValues") or {}).get(c) for c in part_cols)
+        by_part.setdefault(key, []).append(_decode_path(table_path, a["path"]))
+    out: DataFrame | None = None
+    for key, paths in sorted(by_part.items(), key=lambda kv: repr(kv[0])):
+        df = spark.read.schema(read_schema).parquet(*paths)
+        if mask is not None:
+            df = mask(df)
+        df = df.select(
+            *[F.col(phys[f.name]).alias(f.name) for f in data_fields],
+            *[f.name for f in extra],
+        )
+        for c, raw in zip(part_cols, key):
+            df = df.withColumn(c, F.lit(raw).cast(types[c]))
+        df = df.select(*names)
+        out = df if out is None else out.unionByName(df)
     return out
 
 
@@ -2483,37 +2462,9 @@ def read_delta_snapshot(
     the max over JSON commits AND checkpoints, and replay starts at
     the newest usable checkpoint. Requesting a version below every
     checkpoint with its JSON missing raises a descriptive error."""
-    version, adds, schema_string, part_cols, _domains = _replay_actions(
-        table_path, version
-    )
-    if schema_string is None:
+    _, state = _read_state(table_path, version)
+    if state.meta is None:
         raise ValueError("no metaData action found — not a valid delta log")
-    schema = T.StructType.fromJson(json.loads(schema_string))
-    # Column mapping mode "name": fields advertise the PHYSICAL
-    # parquet column name in their metadata — read physical, alias
-    # back to the logical field name.
-    phys = {
-        f.name: (f.metadata or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        )
-        for f in schema.fields
-    }
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    data_schema = T.StructType(
-        [T.StructField(phys[f.name], f.dataType, True) for f in data_fields]
-    )
-
-    def _logical(df: DataFrame) -> DataFrame:
-        return df.select(
-            *[F.col(phys[f.name]).alias(f.name) for f in data_fields]
-        )
-
-    # strip mapping metadata from the returned schema
-    schema = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in schema.fields]
-    )
-    if not adds:
-        return empty_df(spark, schema)
 
     # Native deletion vectors (reader-writer feature): decode each
     # add's roaring bitmap and mask (file, row_index) pairs with a
@@ -2524,7 +2475,7 @@ def read_delta_snapshot(
     from .dv_codec import read_dv_spec
 
     dv_rows: list[tuple[str, int]] = []
-    for p, a in adds.items():
+    for p, a in state.adds.items():
         spec = a.get("deletionVector")
         if spec:
             base = os.path.basename(_decode_path(table_path, p))
@@ -2532,35 +2483,22 @@ def read_delta_snapshot(
                 (base, int(pos)) for pos in read_dv_spec(table_path, spec)
             )
 
-    def _read(paths: list[str]) -> DataFrame:
-        df = spark.read.schema(data_schema).parquet(*paths)
-        if dv_rows:
-            mask = local_df(spark, dv_rows, "__fn string, __ri long")
-            df = (
-                df.withColumn("__fn", F.col("_metadata.file_name"))
-                .withColumn("__ri", F.col("_metadata.row_index"))
-                .join(F.broadcast(mask), ["__fn", "__ri"], "left_anti")
-                .drop("__fn", "__ri")
-            )
-        return df
+    def _mask(df: DataFrame) -> DataFrame:
+        mask = local_df(spark, dv_rows, "__fn string, __ri long")
+        return (
+            df.withColumn("__fn", F.col("_metadata.file_name"))
+            .withColumn("__ri", F.col("_metadata.row_index"))
+            .join(F.broadcast(mask), ["__fn", "__ri"], "left_anti")
+            .drop("__fn", "__ri")
+        )
 
-    if not part_cols:
-        paths = [_decode_path(table_path, p) for p in adds]
-        return _logical(_read(paths))
-
-    by_part: dict[tuple, list[str]] = {}
-    for p, a in adds.items():
-        key = tuple(a["partitionValues"].get(c) for c in part_cols)
-        by_part.setdefault(key, []).append(_decode_path(table_path, p))
-    types = {f.name: f.dataType for f in schema.fields}
-    out: DataFrame | None = None
-    for key, paths in sorted(by_part.items(), key=lambda kv: repr(kv[0])):
-        df = _logical(_read(paths))
-        for c, raw in zip(part_cols, key):
-            df = df.withColumn(c, F.lit(raw).cast(types[c]))
-        df = df.select(*[f.name for f in schema.fields])
-        out = df if out is None else out.unionByName(df)
-    return out
+    return _scan_files(
+        spark,
+        table_path,
+        list(state.adds.values()),
+        state.meta,
+        mask=_mask if dv_rows else None,
+    )
 
 
 def read_delta_changes(
@@ -2588,37 +2526,15 @@ def read_delta_changes(
             raise FileNotFoundError(f"no delta JSON commits at {ddir!r}")
         ending_version = max(versions)
 
-    schema_string: str | None = None
-    part_cols: list[str] = []
-    # metaData as of the range start: replay any JSON commits before
-    # it; when the prefix was cleaned up past a checkpoint, take the
-    # newest usable checkpoint's metaData first.
-    cp_map = _checkpoint_versions(ddir)
-    usable_cp = [v for v in sorted(cp_map) if v < starting_version]
-    if usable_cp and 0 not in versions:
-        import pyarrow.parquet as pq
-
-        # metaData always lives in the top-level file (classic AND V2
-        # manifests) — no sidecar resolution needed for schema lookup.
-        for part in _checkpoint_files(ddir, cp_map[usable_cp[-1]]):
-            tbl = pq.read_table(
-                os.path.join(ddir, part), columns=["metaData"]
-            )
-            for row in tbl.to_pylist():
-                if row.get("metaData"):
-                    schema_string = row["metaData"]["schemaString"]
-                    part_cols = list(
-                        row["metaData"]["partitionColumns"] or []
-                    )
-    for v in (x for x in versions if x < starting_version):
-        with open(os.path.join(ddir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    schema_string = action["metaData"]["schemaString"]
-                    part_cols = list(action["metaData"]["partitionColumns"])
+    # metaData as of the range start, replayed like any reader's
+    # (metaData always lives in a checkpoint's top-level file, so the
+    # checkpoint read is pruned to it); a commit the range needs but
+    # the log lacks is reported by the range loop below.
+    meta = None
+    if starting_version > 0:
+        meta = _replay(
+            ddir, starting_version - 1, gaps_ok=True, columns=["metaData"]
+        )[1].meta
 
     out: DataFrame | None = None
     for v in range(starting_version, ending_version + 1):
@@ -2632,36 +2548,30 @@ def read_delta_changes(
         cdc_files: list[dict] = []
         add_files: list[dict] = []
         removed = 0
-        with open(commit) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    schema_string = action["metaData"]["schemaString"]
-                    part_cols = list(action["metaData"]["partitionColumns"])
-                elif "commitInfo" in action:
-                    ts_ms = action["commitInfo"].get("timestamp", 0)
-                elif "cdc" in action:
-                    cdc_files.append(action["cdc"])
-                elif "add" in action and action["add"].get("dataChange", True):
-                    add_files.append(action["add"])
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    removed += 1
-        if schema_string is None:
+        for action in _commit_actions(commit):
+            if "metaData" in action:
+                meta = action["metaData"]
+            elif "commitInfo" in action:
+                ts_ms = action["commitInfo"].get("timestamp", 0)
+            elif "cdc" in action:
+                cdc_files.append(action["cdc"])
+            elif "add" in action and action["add"].get("dataChange", True):
+                add_files.append(action["add"])
+            elif "remove" in action and action["remove"].get(
+                "dataChange", True
+            ):
+                removed += 1
+        if meta is None:
             raise ValueError("no metaData action found — not a valid delta log")
-        schema = T.StructType.fromJson(json.loads(schema_string))
-        phys = {
-            f.name: (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            )
-            for f in schema.fields
-        }
-        types = {f.name: f.dataType for f in schema.fields}
         if cdc_files:
-            files, extra = cdc_files, []
+            batch = _scan_files(
+                spark,
+                table_path,
+                cdc_files,
+                meta,
+                extra=(T.StructField("_change_type", T.StringType(), True),),
+            )
+            change_type = []
         elif removed:
             raise ValueError(
                 f"version {v} removed files with dataChange=true but has "
@@ -2669,42 +2579,13 @@ def read_delta_changes(
                 "without delta.enableChangeDataFeed)"
             )
         elif add_files:
-            files, extra = add_files, [F.lit("insert").alias("_change_type")]
+            batch = _scan_files(spark, table_path, add_files, meta)
+            change_type = [F.lit("insert").alias("_change_type")]
         else:
             continue
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        data_schema = T.StructType(
-            [
-                T.StructField(phys[f.name], f.dataType, True)
-                for f in data_fields
-            ]
-            + (
-                [T.StructField("_change_type", T.StringType(), True)]
-                if not extra
-                else []
-            )
-        )
-        by_part: dict[tuple, list[str]] = {}
-        for a in files:
-            key = tuple((a.get("partitionValues") or {}).get(c) for c in part_cols)
-            by_part.setdefault(key, []).append(_decode_path(table_path, a["path"]))
-        batch: DataFrame | None = None
-        for key, paths in sorted(by_part.items(), key=lambda kv: repr(kv[0])):
-            df = spark.read.schema(data_schema).parquet(*paths)
-            df = df.select(
-                *[
-                    F.col(phys[f.name]).alias(f.name)
-                    for f in data_fields
-                ],
-                *([] if extra else [F.col("_change_type")]),
-            )
-            for c, raw in zip(part_cols, key):
-                df = df.withColumn(c, F.lit(raw).cast(types[c]))
-            change_col = extra if extra else [F.col("_change_type")]
-            df = df.select(*[f.name for f in schema.fields], *change_col)
-            batch = df if batch is None else batch.unionByName(df)
         batch = batch.select(
             "*",
+            *change_type,
             F.lit(v).cast("long").alias("_commit_version"),
             F.timestamp_millis(F.lit(ts_ms)).alias("_commit_timestamp"),
         )
@@ -2715,9 +2596,9 @@ def read_delta_changes(
         )
     if out is not None:
         return out
-    if schema_string is None:
+    if meta is None:
         raise ValueError("no metaData action found — not a valid delta log")
-    end_schema = T.StructType.fromJson(json.loads(schema_string))
+    end_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     return empty_df(
         spark,
         T.StructType(
