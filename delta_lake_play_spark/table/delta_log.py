@@ -19,10 +19,13 @@ on-disk contract from the protocol spec so a user of the reference
 can hand their Delta-reading tools a mirrored table unchanged.
 
 Sync model: :func:`sync` is idempotent and self-healing — it diffs
-the private log (``_log``) against the Delta log and (re)writes every
-missing version atomically (tmp + ``os.link``, first writer wins), so
-a crash between a private commit and its mirror write heals on the
-next commit or explicit sync. Two hard cases are handled explicitly:
+each private (``_log``) version above the newest one the Delta log
+holds against its predecessor and writes it atomically (tmp +
+``os.link``, first writer wins), so a crash between a private commit
+and its mirror write heals on the next commit or explicit sync, and
+a prefix removed by log cleanup stays removed. Everything else the
+mirror derives (checkpoints, the protocol lookup) is a replay of the
+Delta log itself. Two hard cases are handled explicitly:
 
 - **Vacuumed history**: versions whose data files were reclaimed by
   ``vacuum`` cannot be backfilled (and a partial backfill would leave
@@ -58,11 +61,11 @@ of checkpoint parquet (multi-part sets expanded, V2 sidecars
 resolved, optional column pruning), and :func:`_replay` folds them
 into one :class:`_LogState` the way the protocol reads a log: the
 newest checkpoint at or below the target, then the commits after it.
-The snapshot and domain readers, the CDF start schema, log
-compaction and the checkpoint writer all reconcile through that
-state. The checkpoint writer replays from the previous checkpoint
-too, so writing one costs O(commits since the last checkpoint), not
-O(history); its live file list still comes from the private log.
+The snapshot and domain readers, the protocol lookup, the CDF start
+schema, log compaction and the checkpoint writer all reconcile
+through that state. A checkpoint is written straight from it, so
+writing one costs O(commits since the last checkpoint), not
+O(history), and reads nothing of the private log.
 ``tests/test_delta_log_reader_lint.py`` keeps a second reader from
 growing back.
 """
@@ -226,11 +229,33 @@ def _checkpoint_actions(
                 )
 
 
+# Map-typed action fields: parquet reads a map as a list of (key,
+# value) pairs; a commit JSON writes it as an object.
+_MAP_FIELDS = {"partitionValues", "configuration", "options", "tags"}
+
+
+def _plain(action: dict) -> dict:
+    """An action as a commit JSON carries it: parquet's null struct
+    fields dropped and maps made dicts (their null values kept), so a
+    file's action is the same dict from a checkpoint or a commit."""
+    out = {}
+    for k, v in action.items():
+        if v is None:
+            continue
+        if k in _MAP_FIELDS and not isinstance(v, str):
+            v = dict(v)
+        elif isinstance(v, dict):
+            v = _plain(v)
+        out[k] = v
+    return out
+
+
 class _LogState:
     """Reconciled actions of a stretch of log, by the protocol's
     rules: the latest protocol and metaData, live adds and remove
     tombstones by path, the latest txn per appId and the latest
-    domainMetadata per domain (removals kept, as tombstones)."""
+    domainMetadata per domain (removals kept, as tombstones), plus
+    the timestamp of the last commit replayed."""
 
     def __init__(self) -> None:
         self.protocol: dict | None = None
@@ -239,18 +264,17 @@ class _LogState:
         self.removes: dict[str, dict] = {}
         self.txns: dict[str, dict] = {}
         self.domains: dict[str, dict] = {}
+        self.timestamp: int | None = None
 
     def apply(self, action: dict) -> None:
         # a checkpoint row carries every action column, all null but one
-        p = action.get("protocol")
-        if p and p.get("minReaderVersion"):
-            self.protocol = p
+        action = _plain(action)
+        if action.get("protocol"):
+            self.protocol = action["protocol"]
         if action.get("metaData"):
             self.meta = action["metaData"]
         if action.get("add"):
             add = action["add"]
-            if isinstance(add.get("partitionValues"), list):  # parquet map
-                add["partitionValues"] = dict(add["partitionValues"])
             self.adds[add["path"]] = add
             self.removes.pop(add["path"], None)
         if action.get("remove"):
@@ -268,6 +292,8 @@ class _LogState:
         if action.get("domainMetadata"):
             d = action["domainMetadata"]
             self.domains[d["domain"]] = d
+        if action.get("commitInfo"):
+            self.timestamp = action["commitInfo"].get("timestamp")
 
     def actions(self) -> list[dict]:
         """The state as actions, in checkpoint row order."""
@@ -283,34 +309,37 @@ class _LogState:
         return out
 
 
-def _replay(
-    ddir: str,
-    version: int | None = None,
-    gaps_ok: bool = False,
-    columns: list[str] | None = None,
-) -> tuple[int, _LogState]:
-    """Reconcile the log up to ``version`` (default: the newest) the
-    way the protocol reads it: the newest checkpoint at or below it
-    (pruned to ``columns``), then each later commit, the widest
-    compacted range that fits standing in for its commits.
+def _log_head(ddir: str) -> int | None:
+    """The newest version ``_delta_log`` holds: its newest commit,
+    checkpoint or compacted-range end (None when it holds none)."""
+    ends = [e for spans in _compacted_spans(ddir).values() for e, _fn in spans]
+    return max(
+        [*_commit_versions(ddir), *_checkpoint_versions(ddir), *ends], default=None
+    )
 
-    A missing commit raises ``FileNotFoundError`` unless ``gaps_ok``:
-    the checkpoint writer must replay over a vacuum re-base, which
-    writes no JSON for the versions it skips, and the CDF start schema
-    leaves a cleaned-up range to the range check."""
+
+def _replay(
+    ddir: str, version: int | None = None, columns: list[str] | None = None
+) -> tuple[int, _LogState]:
+    """Reconcile the log up to ``version`` (default: the newest, see
+    :func:`_log_head`) the way the protocol reads it: the newest
+    checkpoint at or below it (pruned to ``columns``), then each later
+    commit, the widest compacted range that fits standing in for its
+    commits. A version the log cannot reconstruct raises
+    ``FileNotFoundError``."""
     versions = _commit_versions(ddir)
     cp_map = _checkpoint_versions(ddir)
     cp_versions = sorted(cp_map)
     spans = _compacted_spans(ddir)
     span_ends = {e for lst in spans.values() for e, _fn in lst}
     if version is None:
-        if not versions and not cp_versions and not span_ends:
+        version = _log_head(ddir)
+        if version is None:
             raise FileNotFoundError(
                 f"no delta log at {ddir!r}: neither JSON commits nor "
                 "checkpoints found"
             )
-        version = max(versions + cp_versions + sorted(span_ends))
-    if not gaps_ok and (
+    if (
         version not in versions
         and version not in cp_versions
         and version not in span_ends
@@ -357,9 +386,6 @@ def _replay(
                 default=None,
             )
             if fit is None:
-                if gaps_ok:
-                    v += 1
-                    continue
                 if v in versions or usable:
                     raise FileNotFoundError(
                         f"delta log is missing commit {v} needed to replay "
@@ -550,17 +576,21 @@ def _type_changes(table, entry: dict) -> dict[str, list[dict]]:
     type gets a fresh physical name and is an unrelated column, not a
     widening. Presence must be continuous and the change on the
     widening whitelist. Deterministic re-derivation from the log,
-    like :func:`_column_ids` — no extra state on the commit path;
-    versions whose (schema, columnMap) pair is unchanged are skipped
-    without parsing."""
+    like :func:`_column_ids`; versions whose (schema, columnMap) pair
+    is unchanged are skipped without parsing. The walk resumes from
+    the handle's last call when that was at or below this version, so
+    per-commit calls read only the new entries."""
     from pyspark.sql import types as T
 
     from .versioned import _widen_allowed
 
-    changes: dict[str, list[dict]] = {}
-    prev_types: dict[str, T.DataType] = {}
-    prev_sig: tuple | None = None
+    walk = getattr(table, "_type_walk", None)
+    if walk is None or walk[0] > entry["version"]:
+        walk = (-1, {}, None, {})
+    last, prev_types, prev_sig, changes = walk
     for v in sorted(table._versions()):
+        if v <= last:
+            continue
         if v > entry["version"]:
             break
         raw = table._read_log_raw(v)
@@ -578,11 +608,12 @@ def _type_changes(table, entry: dict) -> dict[str, list[dict]]:
                 )
         prev_types = cur
         prev_sig = sig
+    table._type_walk = (entry["version"], prev_types, prev_sig, changes)
     if not changes:
         return {}
     ecmap = entry.get("columnMap") or {}
     return {
-        f["name"]: changes[ecmap.get(f["name"], f["name"])]
+        f["name"]: list(changes[ecmap.get(f["name"], f["name"])])
         for f in entry["schema"]["fields"]
         if ecmap.get(f["name"], f["name"]) in changes
     }
@@ -1006,53 +1037,15 @@ def _ensure_materialized(table, entry: dict) -> None:
 
 
 def latest_mirror_protocol(table) -> dict | None:
-    """The protocol in force at the mirror's newest version: every
-    artifact kind (JSON commits, minor compactions, the newest
-    checkpoint) yields its best (version, protocol) candidate and the
-    HIGHEST VERSION wins — never artifact-kind order. (Kind order was
-    a real bug: a surviving old compaction carrying the v0 protocol
-    would otherwise mask a later checkpoint's upgraded protocol, and
-    a vacuum-protocol check against the stale protocol would miss an
-    external writer's unknown feature — the exact class
-    vacuumProtocolCheck exists to stop.) Returns None when the mirror
-    has never written a protocol (no _delta_log, or artifacts missing
-    it entirely)."""
-    ddir = os.path.join(table.path, "_delta_log")
-    if not os.path.isdir(ddir):
+    """The protocol in force at the mirror's newest version, replayed
+    like any reader's: the newest checkpoint (pruned to its protocol
+    column), then the commits after it, so no commit below a newer
+    checkpoint is opened. Returns None when the table has no
+    ``_delta_log`` or the log has never written a protocol."""
+    ddir = _delta_dir(table.path)
+    if not os.path.isdir(ddir) or _log_head(ddir) is None:
         return None
-
-    def _last_protocol(actions) -> dict | None:
-        state = _LogState()
-        for action in actions:
-            state.apply(action)
-        return state.protocol
-
-    candidates: list[tuple[int, dict]] = []
-    for v in reversed(_commit_versions(ddir)):
-        p = _last_protocol(_commit_actions(os.path.join(ddir, f"{v:020d}.json")))
-        if p is not None:
-            candidates.append((v, p))
-            break  # highest JSON version with a protocol line
-    spans = _compacted_spans(ddir)
-    # a compaction's protocol is the reconciled one AT its range end
-    for end, cfn in sorted(
-        ((e, fn) for s in spans for e, fn in spans[s]), reverse=True
-    ):
-        p = _last_protocol(_commit_actions(os.path.join(ddir, cfn)))
-        if p is not None:
-            candidates.append((end, p))
-            break
-    cps = _checkpoint_versions(ddir)
-    if cps:
-        cp = max(cps)
-        # column-pruned: the protocol lookup must not materialize a
-        # large checkpoint's add/remove/stats rows
-        p = _last_protocol(_checkpoint_actions(ddir, cps[cp], ["protocol"]))
-        if p is not None:
-            candidates.append((cp, p))
-    if not candidates:
-        return None
-    return max(candidates, key=lambda t: t[0])[1]
+    return _replay(ddir, columns=["protocol"])[1].protocol
 
 
 def _vacuum_protocol_check(table) -> bool:
@@ -1325,10 +1318,12 @@ def _write_version_crc(
 def sync(table, materialize_dvs: bool = False) -> int:
     """Bring ``_delta_log`` up to the private log's latest version.
 
-    Idempotent: every already-mirrored version is skipped; every
-    missing one (crash between commit and mirror) is backfilled in
-    order by diffing consecutive private entries. Concurrent syncers
-    race benignly — identical content, first ``os.link`` wins.
+    Exports forward only: every private version above the newest one
+    the Delta log holds (:func:`_log_head`) is written in order by
+    diffing consecutive private entries, so a crash between a commit
+    and its mirror write heals on the next sync, and a prefix that
+    log cleanup removed stays removed. Concurrent syncers race
+    benignly — identical content, first ``os.link`` wins.
 
     Versions whose files were vacuumed are skipped and the log is
     re-based with a full-snapshot commit + checkpoint at the oldest
@@ -1346,9 +1341,10 @@ def sync(table, materialize_dvs: bool = False) -> int:
     Returns the latest mirrored version."""
     ddir = _delta_dir(table.path)
     os.makedirs(ddir, exist_ok=True)
-    have = set(_commit_versions(ddir))
+    head = _log_head(ddir)
+    mirrored = -1 if head is None else head
     latest = table.latest_version()
-    missing = [v for v in range(0, latest + 1) if v not in have]
+    missing = range(mirrored + 1, latest + 1)
     if not missing:
         return latest
 
@@ -1375,7 +1371,6 @@ def sync(table, materialize_dvs: bool = False) -> int:
             "files (vacuumed or corrupted) — the table itself is no "
             "longer fully readable at HEAD"
         )
-    mirrored = set(have)
     for v in missing:
         if v in bad:
             continue  # unexportable history: superseded by the re-base below
@@ -1384,7 +1379,7 @@ def sync(table, materialize_dvs: bool = False) -> int:
             _ensure_materialized(table, entry)
         if v == 0:
             actions = _actions_for(table, v, None, entry)
-        elif (v - 1) in mirrored:
+        elif v - 1 == mirrored:
             prev = entries.get(v - 1) or table._read_log(v - 1)
             if not native and any(_has_dv(f) for f in prev["files"]):
                 _ensure_materialized(table, prev)
@@ -1392,20 +1387,29 @@ def sync(table, materialize_dvs: bool = False) -> int:
         else:
             # predecessor unexportable: re-base with a full snapshot
             # commit + checkpoint (the protocol's cleaned-JSON-prefix
-            # state; readers start at the checkpoint).
+            # state; readers start at the checkpoint). The checkpoint
+            # is that commit's state (a replay across the gap would
+            # keep adds it removed) plus txn and tombstones from below.
             actions = _full_snapshot_actions(table, entry)
             _write_atomic(
                 ddir, f"{v:020d}.json", "\n".join(json.dumps(a) for a in actions)
             )
             _write_version_crc(table, ddir, v, entry)
-            _write_checkpoint(table, ddir, v, entry)
-            mirrored.add(v)
+            state = _LogState()
+            for a in actions:
+                state.apply(a)
+            if mirrored >= 0:
+                below = _replay(ddir, mirrored, columns=["txn", "remove"])[1]
+                state.txns = {**below.txns, **state.txns}
+                state.removes = below.removes
+            _write_checkpoint(ddir, v, state)
+            mirrored = v
             continue
         _write_atomic(ddir, f"{v:020d}.json", "\n".join(json.dumps(a) for a in actions))
         _write_version_crc(table, ddir, v, entry, prev=None if v == 0 else prev)
         if v > 0 and v % _CHECKPOINT_EVERY == 0:
-            _write_checkpoint(table, ddir, v, entry)
-        mirrored.add(v)
+            _write_checkpoint(ddir, v, _replay(ddir, v)[1])
+        mirrored = v
     return latest
 
 
@@ -1476,9 +1480,11 @@ def cleanup_expired_logs(
     checkpoint become unreconstructible — time travel is bounded by
     the retention window by design; the protocol readers raise their
     descriptive not-reconstructible error for them. Checkpoints are
-    self-contained for replay, and the checkpoint writer replays txn
-    and unexpired tombstones from the prior checkpoint, so nothing a
-    FUTURE checkpoint needs lives only in the deleted JSONs. Sidecar
+    self-contained for replay, and the checkpoint writer replays
+    from the prior checkpoint, so nothing a FUTURE checkpoint needs
+    lives only in the deleted JSONs; :func:`sync` exports only above
+    the newest version the log holds, so the deleted prefix stays
+    deleted. Sidecar
     GC is reference-counted against every retained manifest — an
     incremental checkpoint's REUSED sidecars are exactly the case a
     name-based cleanup would corrupt.
@@ -1644,14 +1650,12 @@ def write_checkpoint(
     surface — run it before handing the log to a reader that should
     not replay the JSON prefix, or before cleaning that prefix up).
     Syncs the mirror first; returns the checkpointed version. The
-    checkpoint is written in the table's declared policy (classic or
-    V2 manifest + sidecars)."""
+    checkpoint is the replay of ``_delta_log`` at that version, written
+    in the table's declared policy (classic or V2 manifest +
+    sidecars)."""
     latest = sync(table, materialize_dvs=materialize_dvs)
     ddir = _delta_dir(table.path)
-    entry = table._read_log(latest)
-    if not _dv_native(table) and any(_has_dv(f) for f in entry["files"]):
-        _ensure_materialized(table, entry)
-    _write_checkpoint(table, ddir, latest, entry, parts=parts)
+    _write_checkpoint(ddir, latest, _replay(ddir, latest)[1], parts=parts)
     return latest
 
 
@@ -1783,6 +1787,10 @@ def _actions_for(table, version: int, prev: dict | None, entry: dict) -> list[di
             entry["schema"] != prev["schema"]
             or entry.get("columnMap") != prev.get("columnMap")
             or defaults_recorded
+            # the identity high-water mark rides in metaData, so the
+            # commit that advances it re-declares it
+            or entry.get("identityHighWaterMark")
+            != prev.get("identityHighWaterMark")
         )
         if emit_proto or emit_meta:
             tchanges = _type_changes(table, entry)  # once for both
@@ -1988,16 +1996,20 @@ def _checkpoint_schema(v2_manifest: bool = False):
 
 
 def _write_checkpoint(
-    table, ddir: str, version: int, entry: dict, parts: int | None = None
+    ddir: str, version: int, state: _LogState, parts: int | None = None
 ) -> None:
-    """Write the checkpoint for ``version`` in the table's declared
-    policy: classic single-file (default), multi-part classic when
-    ``parts`` is given (the external-writer split form — delta-spark's
-    ``checkpoint.partSize`` behavior), or V2 manifest + sidecars
-    (``checkpoint_policy="v2"``), plus ``_last_checkpoint`` so readers
-    can skip — or survive the cleanup of — the JSON prefix."""
-    rows = _checkpoint_rows(table, ddir, version, entry)
-    if table.checkpoint_policy() == "v2":
+    """Write ``state``, the log reconciled at ``version``, as that
+    version's checkpoint in the form its protocol declares: classic
+    single-file (default), multi-part classic when ``parts`` is given
+    (the external-writer split form — delta-spark's
+    ``checkpoint.partSize`` behavior), or V2 manifest + sidecars (the
+    ``v2Checkpoint`` feature of ``checkpoint_policy="v2"`` tables),
+    plus ``_last_checkpoint`` so readers can skip — or survive the
+    cleanup of — the JSON prefix. A state that disagrees with the
+    version's ``.crc`` raises before any file is written."""
+    _check_crc(ddir, version, state)
+    rows = _checkpoint_rows(state)
+    if "v2Checkpoint" in (state.protocol.get("writerFeatures") or []):
         if parts and parts > 1:
             raise ValueError(
                 "parts= is the multi-part CLASSIC form; a v2-policy "
@@ -2006,32 +2018,81 @@ def _write_checkpoint(
                 "expectations"
             )
         _write_checkpoint_v2(ddir, version, rows)
-    elif parts and parts > 1:
-        _write_checkpoint_multipart(ddir, version, rows, parts)
     else:
-        _write_checkpoint_classic(ddir, version, rows)
+        _write_checkpoint_classic(
+            ddir, version, rows, parts if parts and parts > 1 else None
+        )
 
 
-def _write_checkpoint_multipart(
-    ddir: str, version: int, rows: list[dict], parts: int
+def _checkpoint_rows(state: _LogState) -> list[dict]:
+    """A reconciled log state as checkpoint action rows: the protocol,
+    the metaData, the latest txn per appId, the live domainMetadata,
+    one add per live file and the remove tombstones still inside
+    delta.deletedFileRetentionDuration of the last replayed commit
+    (all of them when the replay read no commit past the previous
+    checkpoint, which filtered them already), so idempotent writers
+    can resume and external VACUUM / incremental readers still see
+    recently removed files after the JSON prefix is cleaned up
+    (PROTOCOL.md checkpoint contents). Checkpoint rows are
+    reconciliations, not new data: adds and removes carry
+    dataChange=false."""
+    if state.protocol is None or state.meta is None:
+        raise DeltaMirrorError("cannot checkpoint a log without protocol and metaData")
+    floor = (
+        None
+        if state.timestamp is None
+        else state.timestamp - _TOMBSTONE_RETENTION_MS
+    )
+    return [
+        {"protocol": state.protocol},
+        {"metaData": state.meta},
+        *({"txn": t} for t in state.txns.values()),
+        *(
+            {"domainMetadata": d}
+            for d in state.domains.values()
+            if not d.get("removed")
+        ),
+        *({"add": {**a, "dataChange": False}} for a in state.adds.values()),
+        *(
+            {
+                "remove": {
+                    "path": path,
+                    "deletionTimestamp": rm.get("deletionTimestamp"),
+                    "dataChange": False,
+                }
+            }
+            for path, rm in state.removes.items()
+            if path not in state.adds
+            and (floor is None or (rm.get("deletionTimestamp") or 0) >= floor)
+        ),
+    ]
+
+
+def _write_checkpoint_classic(
+    ddir: str, version: int, rows: list[dict], parts: int | None = None
 ) -> None:
-    """Multi-part classic checkpoint: the same reconciled action rows
-    striped across ``parts`` files named
-    ``<v>.checkpoint.<part>.<total>.parquet`` (all parts written
-    before ``_last_checkpoint`` flips, so a racing reader never sees
-    a half-published set — incomplete sets are ignored by
+    """Classic checkpoint: one ``<v>.checkpoint.parquet``, or with
+    ``parts`` the same rows striped across files named
+    ``<v>.checkpoint.<part>.<total>.parquet``, all written before
+    ``_last_checkpoint`` flips, so a racing reader never sees a
+    half-published set (incomplete sets are ignored by
     ``_checkpoint_versions`` on both sides of that race)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema = _checkpoint_schema()
-    per = -(-len(rows) // parts)  # ceil; a part may be action-empty
-    for i in range(parts):
-        chunk = rows[i * per : (i + 1) * per]
-        tbl = pa.Table.from_pylist(chunk, schema=schema)
+    n = parts or 1
+    per = -(-len(rows) // n)  # ceil; a part may be action-empty
+    for i in range(n):
+        tbl = pa.Table.from_pylist(
+            rows[i * per : (i + 1) * per], schema=_checkpoint_schema()
+        )
         tmp = os.path.join(ddir, f".tmp-{uuid.uuid4().hex}")
         pq.write_table(tbl, tmp)
-        name = f"{version:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet"
+        name = (
+            f"{version:020d}.checkpoint.parquet"
+            if parts is None
+            else f"{version:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet"
+        )
         try:
             os.link(tmp, os.path.join(ddir, name))
         except FileExistsError:
@@ -2039,80 +2100,6 @@ def _write_checkpoint_multipart(
         finally:
             os.unlink(tmp)
     _write_last_checkpoint(ddir, version, len(rows), parts=parts)
-
-
-def _checkpoint_rows(table, ddir: str, version: int, entry: dict) -> list[dict]:
-    """The reconciled snapshot at ``version`` as action rows: one
-    protocol row, one metaData row, latest txn per appId, persisted
-    domainMetadata, one add row per live file, plus retained remove
-    tombstones. Checkpoint rows are reconciliations, not new data:
-    adds are written with dataChange=false per the spec.
-
-    The live files, protocol, metaData and domains come from the
-    private entry. txn and tombstones come from replaying the log
-    from the previous checkpoint: the checkpoint must carry the
-    LATEST txn version per appId so idempotent writers can resume,
-    and unexpired removes so external VACUUM / incremental readers
-    still see recently removed files, after the JSON prefix is
-    cleaned up (PROTOCOL.md checkpoint contents)."""
-    ts = _ts_ms(entry["timestamp"])
-    part_cols = table.partition_columns()
-    tchanges = _type_changes(table, entry)  # computed once, fed to both
-    meta = _meta_action(table, entry, tchanges)["metaData"]
-    meta.setdefault("name", None)
-    meta.setdefault("description", None)
-    rows: list[dict] = [
-        _protocol_action(table, entry, tchanges),
-        {"metaData": meta},
-    ]
-    _, state = _replay(ddir, version, gaps_ok=True, columns=["txn", "remove"])
-    rows += [{"txn": t} for t in state.txns.values()]
-    if "rowIdHighWaterMark" in entry:
-        # domainMetadata persists in checkpoints (PROTOCOL.md): the
-        # row-id high-water mark must survive JSON-prefix cleanup.
-        rows.append(_row_tracking_domain(entry))
-    if entry.get("clusterBy"):
-        # likewise the clustering-columns domain: an external client
-        # must still see the declared clustering after log cleanup
-        rows.append(_clustering_domain(entry))
-    live_paths: set[str] = set()
-    for f in entry["files"]:
-        for action in _unit_adds(
-            table, f, part_cols, ts, False, entry.get("columnMap")
-        ):
-            rows.append(action)
-            live_paths.add(action["add"]["path"])
-    # tombstones last until delta.deletedFileRetentionDuration
-    floor = ts - _TOMBSTONE_RETENTION_MS
-    rows += [
-        {
-            "remove": {
-                "path": path,
-                "deletionTimestamp": rm.get("deletionTimestamp"),
-                "dataChange": False,
-            }
-        }
-        for path, rm in state.removes.items()
-        if path not in live_paths and (rm.get("deletionTimestamp") or 0) >= floor
-    ]
-    return rows
-
-
-def _write_checkpoint_classic(ddir: str, version: int, rows: list[dict]) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.Table.from_pylist(rows, schema=_checkpoint_schema())
-    tmp = os.path.join(ddir, f".tmp-{uuid.uuid4().hex}")
-    pq.write_table(tbl, tmp)
-    cp_name = f"{version:020d}.checkpoint.parquet"
-    try:
-        os.link(tmp, os.path.join(ddir, cp_name))
-    except FileExistsError:
-        pass
-    finally:
-        os.unlink(tmp)
-    _write_last_checkpoint(ddir, version, len(rows))
 
 
 def _sidecar_schema():
@@ -2129,8 +2116,6 @@ def _sidecar_bucket(action: dict, n_buckets: int) -> int:
     both action kinds carry and that never changes for a given file),
     so an unchanged file lands in the same bucket at every
     checkpoint."""
-    import hashlib
-
     path = action["add"]["path"] if "add" in action else action["remove"]["path"]
     return int.from_bytes(
         hashlib.sha256(path.encode()).digest()[:4], "big"
@@ -2138,25 +2123,13 @@ def _sidecar_bucket(action: dict, n_buckets: int) -> int:
 
 
 def _bucket_fingerprint(actions: list[dict]) -> str:
-    """Content fingerprint of one bucket's actions, EXCLUDING add
-    ``modificationTime`` — this mirror stamps it with the checkpoint
-    entry's commit timestamp, which is informational per the spec and
-    would otherwise make every bucket look changed at every
-    checkpoint. Everything a reader acts on (path, partitionValues,
-    size, stats, row-tracking ids, tombstone timestamps) is in."""
-    import hashlib
-
-    def strip(a: dict) -> dict:
-        return {
-            k: (
-                {kk: vv for kk, vv in v.items() if kk != "modificationTime"}
-                if isinstance(v, dict)
-                else v
-            )
-            for k, v in a.items()
-        }
-
-    canon = sorted(json.dumps(strip(a), sort_keys=True) for a in actions)
+    """Content fingerprint of one bucket's actions. A checkpoint's
+    actions are the replayed log's, so an unchanged file keeps the
+    same add, its own commit's ``modificationTime`` included, from
+    one checkpoint to the next (``_LogState.apply`` reads checkpoint
+    rows into the form commits carry), and its bucket keeps its
+    fingerprint."""
+    canon = sorted(json.dumps(a, sort_keys=True) for a in actions)
     return hashlib.sha256("\n".join(canon).encode()).hexdigest()[:16]
 
 
@@ -2344,27 +2317,29 @@ def _read_state(table_path: str, version: int | None) -> tuple[int, _LogState]:
                 f"(supported: {sorted(_SUPPORTED_READER_FEATURES)})"
             )
 
-    # Version-checksum validation (<v>.crc, delta-spark's
-    # VersionChecksum): the replayed file set must match the summary
-    # the writer recorded at commit time — a lost tombstone, missed
-    # compacted span, or stale checkpoint fails loudly here instead
-    # of silently returning wrong rows.
-    crc_path = os.path.join(ddir, f"{version:020d}.crc")
-    if os.path.exists(crc_path):
-        with open(crc_path) as fh:
-            crc = json.load(fh)
-        got_files = len(state.adds)
-        got_size = sum(int(a.get("size") or 0) for a in state.adds.values())
-        if (
-            crc.get("numFiles") != got_files
-            or crc.get("tableSizeBytes") != got_size
-        ):
-            raise DeltaMirrorError(
-                f"version checksum mismatch at {version}: crc says "
-                f"{crc.get('numFiles')} files / {crc.get('tableSizeBytes')} "
-                f"bytes, replay produced {got_files} / {got_size}"
-            )
+    _check_crc(ddir, version, state)
     return version, state
+
+
+def _check_crc(ddir: str, version: int, state: _LogState) -> None:
+    """Version-checksum validation (``<v>.crc``, delta-spark's
+    VersionChecksum): the replayed file set must match the summary
+    the writer recorded at commit time — a lost tombstone, missed
+    compacted span, or stale checkpoint fails loudly here instead of
+    silently returning wrong rows or being checkpointed."""
+    crc_path = os.path.join(ddir, f"{version:020d}.crc")
+    if not os.path.exists(crc_path):
+        return
+    with open(crc_path) as fh:
+        crc = json.load(fh)
+    got_files = len(state.adds)
+    got_size = sum(int(a.get("size") or 0) for a in state.adds.values())
+    if crc.get("numFiles") != got_files or crc.get("tableSizeBytes") != got_size:
+        raise DeltaMirrorError(
+            f"version checksum mismatch at {version}: crc says "
+            f"{crc.get('numFiles')} files / {crc.get('tableSizeBytes')} "
+            f"bytes, replay produced {got_files} / {got_size}"
+        )
 
 
 def read_delta_domains(
@@ -2528,13 +2503,16 @@ def read_delta_changes(
 
     # metaData as of the range start, replayed like any reader's
     # (metaData always lives in a checkpoint's top-level file, so the
-    # checkpoint read is pruned to it); a commit the range needs but
-    # the log lacks is reported by the range loop below.
+    # checkpoint read is pruned to it). When the log cannot rebuild
+    # that version, the range must carry its own metaData (a vacuum
+    # re-base commit does); a commit the range needs but the log
+    # lacks, or a range starting without metaData, raises below.
     meta = None
     if starting_version > 0:
-        meta = _replay(
-            ddir, starting_version - 1, gaps_ok=True, columns=["metaData"]
-        )[1].meta
+        try:
+            meta = _replay(ddir, starting_version - 1, columns=["metaData"])[1].meta
+        except FileNotFoundError:
+            pass
 
     out: DataFrame | None = None
     for v in range(starting_version, ending_version + 1):

@@ -30,34 +30,40 @@ def _rows(spark, n, base):
 
 def test_checkpoint_opens_only_commits_since_the_last_one(spark, monkeypatch):
     """The cadence checkpoint at version 20 replays checkpoint 10 plus
-    commits 11..20: it opens each of those JSONs once and no other."""
+    commits 11..20: it opens each of those JSONs once and no other,
+    and reads no private log entry beyond what a plain commit reads."""
     t = VersionedTable.create(
         spark, temp_table_path("cp-budget"), _rows(spark, 4, 0), delta_mirror=True
     )
-    for i in range(1, 20):
+    for i in range(1, 19):
         t.append(_rows(spark, 1, 100 * i))
     ddir = os.path.join(t.path, "_delta_log")
     assert os.path.exists(os.path.join(ddir, f"{10:020d}.checkpoint.parquet"))
 
     opened: list[int] = []
+    private: list[str] = []
     real_open = builtins.open
 
     def counting_open(file, mode="r", *args, **kwargs):
         name = str(file)
-        if (
-            os.sep + "_delta_log" + os.sep in name
-            and name.endswith(".json")
-            and not set(mode) & set("wax+")
-        ):
-            opened.append(int(os.path.basename(name).split(".")[0]))
+        if name.endswith(".json") and not set(mode) & set("wax+"):
+            if os.sep + "_delta_log" + os.sep in name:
+                opened.append(int(os.path.basename(name).split(".")[0]))
+            elif os.sep + "_log" + os.sep in name:
+                private.append(os.path.basename(name))
         return real_open(file, mode, *args, **kwargs)
 
     monkeypatch.setattr(builtins, "open", counting_open)
+    t.append(_rows(spark, 1, 1900))  # v19: a plain commit
+    plain = len(private)
+    opened.clear()
+    private.clear()
     t.append(_rows(spark, 1, 2000))  # v20: commit + sync + checkpoint
     monkeypatch.setattr(builtins, "open", real_open)
 
     assert os.path.exists(os.path.join(ddir, f"{20:020d}.checkpoint.parquet"))
     assert sorted(opened) == list(range(11, 21)), opened
+    assert len(private) <= plain, (plain, private)
 
 
 # ------------------------------------------------------------------ parity

@@ -226,10 +226,31 @@ def test_mirror_declares_identity(spark):
     assert fld["metadata"]["delta.identity.start"] == 7
     assert fld["metadata"]["delta.identity.step"] == 2
     assert fld["metadata"]["delta.identity.allowExplicitInsert"] is False
-    assert fld["metadata"]["delta.identity.highWaterMark"] >= 7
+    assert (
+        fld["metadata"]["delta.identity.highWaterMark"]
+        == t._read_log(1)["identityHighWaterMark"]
+    )
 
     # protocol reader round-trip still reads the data
     from delta_lake_play_spark.table.delta_log import read_delta_snapshot
 
     got = read_delta_snapshot(spark, t.path)
     assert got.count() == 2
+
+    # the cadence checkpoint at 10 replays the commits' marks
+    from delta_lake_play_spark.table import delta_log as dl
+
+    for i in range(9):
+        t.append(spark.createDataFrame([(f"c{i}", i)], ["name", "v"]))
+    state = dl._LogState()
+    for row in dl._checkpoint_actions(ddir, dl._checkpoint_versions(ddir)[10]):
+        state.apply(row)
+    fld = next(
+        f
+        for f in json.loads(state.meta["schemaString"])["fields"]
+        if f["name"] == "id"
+    )
+    assert (
+        fld["metadata"]["delta.identity.highWaterMark"]
+        == t._read_log(10)["identityHighWaterMark"]
+    )
