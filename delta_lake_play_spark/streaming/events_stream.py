@@ -26,43 +26,31 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from delta_lake_play_spark.sources.catalog import load_table
+from delta_lake_play_spark.sources.catalog import (
+    load_table,
+    normalize_timestamps,
+    source_schema,
+)
 
 WATERMARK = "15 minutes"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet, with the same
-    ns→µs / NTZ timestamp normalization as the batch reader
-    (``sources/catalog.py``) applied to EVERY timestamp column —
-    batch and stream see identical column types. Per-expression
-    conversions only: a reader must never flip
-    ``spark.sql.session.timeZone`` on a shared session (that would
-    silently change every subsequent timestamp query's semantics —
-    the exact global-state hazard catalog.py documents)."""
-    from delta_lake_play_spark.sources.catalog import _nanos_columns
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """File-source stream over the events parquet, normalized exactly
+    as the batch reader normalizes it: the same held schema and ns
+    column set (:func:`~delta_lake_play_spark.sources.catalog.source_schema`,
+    no inference job once the batch side has loaded the file) and the
+    same conversions (``normalize_timestamps``) on EVERY timestamp
+    column, so batch and stream see identical column types. NTZ
+    columns must convert: watermarks reject them
+    (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE)."""
     path = os.path.join(sf_dir, "events.parquet")
-    ns_cols = set(_nanos_columns(path))
-    raw_schema = spark.read.parquet(path).schema
+    schema, ns_cols, _ = source_schema(spark, path)
     # The file source requires a directory basePath; a glob whose
     # non-glob prefix is the directory satisfies it while matching
     # exactly the events file.
-    stream = spark.readStream.schema(raw_schema).parquet(path + "*")
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    converted = {}
-    for c, t in stream.dtypes:
-        if c in ns_cols and t == "bigint":
-            converted[c] = F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-        elif t == "timestamp_ntz":
-            # µs parquet without the UTC flag infers NTZ, which
-            # watermarks reject (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE);
-            # same per-expression normalization as the batch reader.
-            converted[c] = F.from_utc_timestamp(F.col(c).cast("timestamp"), tz)
-    if converted:
-        stream = stream.withColumns(converted)
-    return stream
+    stream = spark.readStream.schema(schema).parquet(path + "*")
+    return normalize_timestamps(spark, stream, schema, ns_cols)
 
 
 def tumbling_counts(events: DataFrame, watermark: str | None = None) -> DataFrame:

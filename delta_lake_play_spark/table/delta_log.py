@@ -579,7 +579,7 @@ def _type_changes(table, entry: dict) -> dict[str, list[dict]]:
     like :func:`_column_ids`; versions whose (schema, columnMap) pair
     is unchanged are skipped without parsing. The walk resumes from
     the handle's last call when that was at or below this version, so
-    per-commit calls read only the new entries."""
+    a per-commit call reads no entry: its own is ``entry``."""
     from pyspark.sql import types as T
 
     from .versioned import _widen_allowed
@@ -593,7 +593,7 @@ def _type_changes(table, entry: dict) -> dict[str, list[dict]]:
             continue
         if v > entry["version"]:
             break
-        raw = table._read_log_raw(v)
+        raw = entry if v == entry["version"] else table._read_log_raw(v)
         sig = (raw["schema"], raw.get("columnMap"))
         if sig == prev_sig:
             continue  # neither types nor identities can have moved
@@ -707,7 +707,7 @@ def _meta_action(table, entry: dict, tchanges: dict | None = None) -> dict:
     # defaults changed over the log's life the old commits must carry
     # the defaults of THEIR time — the same reason _type_changes
     # re-derives per version (ADVICE r9).
-    defaults = table.column_defaults(as_of=entry["version"])
+    defaults = table.column_defaults(as_of=entry["version"], entry=entry)
     if defaults:
         # Column defaults (PROTOCOL.md allowColumnDefaults): the
         # expression rides as CURRENT_DEFAULT field metadata so
@@ -769,7 +769,7 @@ def _meta_action(table, entry: dict, tchanges: dict | None = None) -> dict:
             "schemaString": json.dumps(schema_dict),
             "partitionColumns": table.partition_columns(),
             "configuration": config,
-            "createdTime": _ts_ms(table._read_log_raw(0)["timestamp"]),
+            "createdTime": _ts_ms(table.created_timestamp()),
         }
     }
 
@@ -852,7 +852,7 @@ def _protocol_action(table, entry: dict, tchanges: dict | None = None) -> dict:
         # wrong schema (PROTOCOL.md Type Widening)
         table_features += ["typeWidening"]
         reader_features += ["typeWidening"]
-    if table.column_defaults(as_of=entry["version"]):
+    if table.column_defaults(as_of=entry["version"], entry=entry):
         # writer-only feature: readers see materialized values; a
         # writer unaware of it would fill NULL where the table
         # declares a DEFAULT (PROTOCOL.md Column Default Values).

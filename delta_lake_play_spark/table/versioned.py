@@ -1759,7 +1759,9 @@ class VersionedTable:
 
         return self._retrying(attempt)
 
-    def column_defaults(self, as_of: int | None = None) -> dict[str, str]:
+    def column_defaults(
+        self, as_of: int | None = None, entry: dict | None = None
+    ) -> dict[str, str]:
         """Per-column DEFAULT expressions (Delta allowColumnDefaults):
         the newest commit at or before ``as_of`` (default: latest)
         that recorded a ``columnDefaults`` state wins — every commit
@@ -1769,7 +1771,10 @@ class VersionedTable:
         The latest-state path is memoized per latest version: only
         commits newer than the previous scan are read, so the common
         append/mirror call is O(new commits), not O(all versions)
-        (the cumulative O(V^2) log-read pattern ADVICE r9 flagged)."""
+        (the cumulative O(V^2) log-read pattern ADVICE r9 flagged).
+        ``entry`` is version ``as_of``'s own entry when the caller
+        already holds it (the commit being mirrored); it is not read
+        again."""
         if as_of is not None:
             # memoized per as_of: historical versions are immutable,
             # so a cached answer never goes stale. The walk ALSO
@@ -1789,7 +1794,8 @@ class VersionedTable:
                 if v != as_of and v in cache:
                     result = cache[v]
                     break
-                params = self._read_log_raw(v).get("operationParameters", {})
+                held = entry if entry is not None and v == as_of else None
+                params = (held or self._read_log_raw(v)).get("operationParameters", {})
                 if "columnDefaults" in params:
                     result = dict(params["columnDefaults"])
                     break
@@ -2923,17 +2929,24 @@ class VersionedTable:
 
     def _config(self) -> dict:
         """The table config: version 0's ``operationParameters``
-        (CREATE, CONVERT or CLONE), parsed once per handle — version 0
-        never changes once linked. Empty, and not memoized, while
-        version 0 does not exist."""
+        (CREATE, CONVERT or CLONE), parsed once per handle together
+        with the creation time — version 0 never changes once linked.
+        Empty, and not memoized, while version 0 does not exist."""
         cfg = getattr(self, "_cfg", None)
         if cfg is None:
             try:
-                cfg = self._read_log_raw(0).get("operationParameters", {})
+                v0 = self._read_log_raw(0)
             except FileNotFoundError:
                 return {}
-            self._cfg = cfg
+            self._created = v0["timestamp"]
+            cfg = self._cfg = v0.get("operationParameters", {})
         return cfg
+
+    def created_timestamp(self) -> str:
+        """Version 0's commit timestamp (ISO-8601), from the read
+        :meth:`_config` memoizes."""
+        self._config()
+        return self._created
 
     def partition_columns(self) -> list[str]:
         """Table partitioning, from the table config (empty if none)."""

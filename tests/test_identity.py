@@ -254,3 +254,31 @@ def test_mirror_declares_identity(spark):
         fld["metadata"]["delta.identity.highWaterMark"]
         == t._read_log(10)["identityHighWaterMark"]
     )
+
+
+def test_mirrored_identity_append_reads_three_entries(spark, monkeypatch):
+    """An identity append re-emits metaData every commit; its
+    createdTime, column defaults and type changes come from reads the
+    commit already made, so it opens as many private entries as a
+    plain append: the commit's predecessor, the new entry and its
+    predecessor for the mirror diff."""
+    df = spark.createDataFrame([("a", 1)], ["name", "v"])
+    t = VersionedTable.create(
+        spark,
+        temp_table_path("idreads"),
+        df,
+        identity={"column": "id"},
+        delta_mirror=True,
+    )
+    t.append(df)
+    reads = []
+    real = VersionedTable._read_log_raw
+
+    def counting(self, version):
+        reads.append(version)
+        return real(self, version)
+
+    monkeypatch.setattr(VersionedTable, "_read_log_raw", counting)
+    for i in range(12):
+        t.append(spark.createDataFrame([(f"c{i}", i)], ["name", "v"]))
+    assert len(reads) == 3 * 12
