@@ -1315,7 +1315,9 @@ def _write_version_crc(
     )
 
 
-def sync(table, materialize_dvs: bool = False) -> int:
+def sync(
+    table, materialize_dvs: bool = False, known: dict[int, dict] | None = None
+) -> int:
     """Bring ``_delta_log`` up to the private log's latest version.
 
     Exports forward only: every private version above the newest one
@@ -1338,6 +1340,11 @@ def sync(table, materialize_dvs: bool = False) -> int:
     ``delta_mirror=True`` tables passes ``True`` so the mirror stays
     consistent across ``delete_mor``.
 
+    ``known`` maps versions to private entries already in memory (a
+    commit passes the entry it just linked and its predecessor); only
+    the other versions are read from disk: crash catch-up and a full
+    ``export_delta_log``.
+
     Returns the latest mirrored version."""
     ddir = _delta_dir(table.path)
     os.makedirs(ddir, exist_ok=True)
@@ -1348,7 +1355,10 @@ def sync(table, materialize_dvs: bool = False) -> int:
     if not missing:
         return latest
 
-    entries = {v: table._read_log(v) for v in missing}
+    entries = dict(known or {})
+    for v in missing:
+        if v not in entries:
+            entries[v] = table._read_log(v)
     native = _dv_native(table)
     for v in missing:
         for f in entries[v]["files"]:

@@ -34,6 +34,11 @@ algorithm delta-core runs for the reference (``api.py:92-107``):
 3. carry every untouched file forward **by reference** in the new
    log entry.
 
+Steps 1 and 3 are one helper (``_split_touched``) for every
+copy-on-write verb; the merge-on-read verbs share one body
+(``_mask_matches``), and so do the two replaceWhere verbs
+(``_replace_slice``).
+
 A 1-row MERGE on a 100 TB table therefore rewrites one file, not
 100 TB; APPEND writes only the new rows; RESTORE writes no data at
 all (it re-references the old version's file list).
@@ -78,6 +83,7 @@ from decimal import Decimal
 from urllib.parse import unquote
 
 from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -93,6 +99,15 @@ _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _DV_BROADCAST_MAX = 4_000_000
 
 _REPLACE_WHERE_VIOLATION = "REPLACE_WHERE_SOURCE_OUTSIDE_SLICE"
+
+# Refusals of the GENERATED ALWAYS AS IDENTITY column (_refuse_identity)
+_IDENTITY_VALUES = (
+    "column {column!r} is GENERATED ALWAYS AS IDENTITY; explicit values "
+    "are refused — omit it"
+)
+_IDENTITY_ALTER = (
+    "cannot {op} identity column {column!r} (GENERATED ALWAYS AS IDENTITY)"
+)
 
 # Per-file bloom index geometry (bloom_filter_cols tables): 4096 bits
 # (512 B/file/column in the log) with k=3 hashes holds the
@@ -244,6 +259,13 @@ def _check_set_columns(set_cols: dict, schema: T.StructType) -> None:
             f"UPDATE SET references non-existent column(s) {unknown}; "
             f"table columns: {[f.name for f in schema.fields]}"
         )
+
+
+def _true(predicate: Column | str) -> Column:
+    """TRUE where ``predicate`` (a Column or SQL string) holds; NULL
+    counts as false, so SQL DML leaves NULL-predicate rows alone."""
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    return F.coalesce(pred, F.lit(False))
 
 
 def _identity_expr(idcfg: dict, hwm: int):
@@ -629,14 +651,9 @@ class VersionedTable:
             entry = self._read_log(latest)
             schema = self._entry_schema(entry)
             gen = set(self.generated_columns())
-            idcfg = self.identity_info()
+            idcfg = self._refuse_identity(df.columns, _IDENTITY_VALUES)
             idcols = {idcfg["column"]} if idcfg else set()
             have, want = set(df.columns), {f.name for f in schema.fields}
-            if idcfg and idcfg["column"] in have:
-                raise IdentityColumnError(
-                    f"column {idcfg['column']!r} is GENERATED ALWAYS AS "
-                    f"IDENTITY; explicit values are refused — omit it"
-                )
             # generated and identity columns may be omitted — they are
             # recomputed / assigned at write time regardless; so may
             # DEFAULT-bearing columns (filled below, Delta
@@ -762,14 +779,13 @@ class VersionedTable:
             t_cols = [f.name for f in schema.fields]
             s_cols = set(source.columns)
             src = source
-            idcfg = self.identity_info()
+            idcfg = self._refuse_identity(
+                s_cols,
+                "column {column!r} is GENERATED ALWAYS AS IDENTITY; merge sources "
+                "must omit it (matched rows keep the target's value, inserts "
+                "are assigned)",
+            )
             idcols = {idcfg["column"]} if idcfg else set()
-            if idcfg and idcfg["column"] in s_cols:
-                raise IdentityColumnError(
-                    f"column {idcfg['column']!r} is GENERATED ALWAYS AS "
-                    f"IDENTITY; merge sources must omit it (matched rows "
-                    f"keep the target's value, inserts are assigned)"
-                )
             if not evolve_schema:
                 if set(t_cols) - idcols != s_cols:
                     raise MergeSchemaError(
@@ -818,24 +834,15 @@ class VersionedTable:
                 ):
                     merge_map[f.name] = f"{f.name}-{uuid.uuid4().hex[:8]}"
 
-            cmap = entry.get("columnMap")
-            target = self._read_files(
-                entry["files"], schema, keep_path="__file", column_map=cmap
-            )
-            touched = {
-                self._norm_file(f)
-                for f in (
+            hit_files, carried = self._split_touched(
+                entry,
+                schema,
+                lambda target: (
                     _probe_local_merge(target, source, key)
                     if src_keys is None
                     else _probe_aggregated_merge(target, src_keys, key)
-                )
-            }
-            hit_files = [
-                f for f in entry["files"] if self._abs(f["path"]) in touched
-            ]
-            carried = [
-                f for f in entry["files"] if self._abs(f["path"]) not in touched
-            ]
+                ),
+            )
             # Type widening invalidates bloom bitmaps whose hash dtype
             # was never recorded (legacy entries): probing them with
             # the widened schema type would falsely exclude the file
@@ -855,7 +862,9 @@ class VersionedTable:
                             "bloomTypes", {}
                         ):
                             del fe["bloom"][c]
-            touched_df = self._read_files(hit_files, schema, column_map=cmap)
+            touched_df = self._read_files(
+                hit_files, schema, column_map=entry.get("columnMap")
+            )
             for f in new_schema.fields:
                 if f.name not in touched_df.columns:
                     touched_df = touched_df.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -863,16 +872,12 @@ class VersionedTable:
             params: dict = {"key": key}
             src_apply = src
             if delete_matched_where is not None:
-                dpred = (
-                    F.expr(delete_matched_where)
-                    if isinstance(delete_matched_where, str)
-                    else delete_matched_where
-                )
+                dhit = _true(delete_matched_where)
                 # Tombstone semantics: a delete-marked source row
                 # removes its matched target row and is NEVER inserted
                 # (matched or not) — the anti-join below already drops
                 # every source key from the target side.
-                src_apply = src.filter(~F.coalesce(dpred, F.lit(False)))
+                src_apply = src.filter(~dhit)
                 params["deleteMatchedWhere"] = str(delete_matched_where)
             if idcfg:
                 # GENERATED ALWAYS AS IDENTITY under MERGE: matched
@@ -914,9 +919,7 @@ class VersionedTable:
                 matched_pre = touched_df.join(src.select(key), key, "left_semi")
                 tgt_keys = touched_df.select(key)
                 if delete_matched_where is not None:
-                    del_keys = src.filter(
-                        F.coalesce(dpred, F.lit(False))
-                    ).select(key)
+                    del_keys = src.filter(dhit).select(key)
                     pre = (
                         matched_pre.join(del_keys, key, "left_semi")
                         .withColumn("_change_type", F.lit("delete"))
@@ -940,7 +943,7 @@ class VersionedTable:
                 cdc = pre.unionByName(post).unionByName(ins)
             return self._commit_files(
                 new_rows, carried, "MERGE", params, new_schema,
-                base={**entry, "columnMap": merge_map}, cdc_df=cdc,
+                base={**entry, "columnMap": merge_map}, cdc_df=cdc, prev=entry,
             )
 
         try:
@@ -954,27 +957,19 @@ class VersionedTable:
         as a Column expression — no f-string SQL construction. SQL
         DELETE semantics: only rows where the predicate is TRUE are
         removed; NULL-predicate rows are kept. Only files physically
-        containing a matching row are rewritten."""
+        containing a matching row are rewritten (``_split_touched``)."""
         self._refuse_if_append_only("DELETE")
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        hit = F.coalesce(pred, F.lit(False))
+        hit = _true(predicate)
 
         def attempt() -> int:
             entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             cmap = entry.get("columnMap")
-            cur = self._read_files(
-                entry["files"], schema, keep_path="__file", column_map=cmap
+            hit_files, carried = self._split_touched(
+                entry, schema, lambda cur: cur.filter(hit)
             )
-            touched = self._distinct_files(cur.filter(hit))
-            hit_files = [
-                f for f in entry["files"] if self._abs(f["path"]) in touched
-            ]
-            carried = [
-                f for f in entry["files"] if self._abs(f["path"]) not in touched
-            ]
             params = {"predicate": str(predicate)}
-            if not touched:
+            if not hit_files:
                 return self._commit_files(
                     None, carried, "DELETE", params, schema, base=entry,
                 )
@@ -995,34 +990,22 @@ class VersionedTable:
     def update(self, set_cols: dict[str, Column], where: Column | str) -> int:
         """UPDATE … SET … WHERE (Delta DML surface, ``README.md:11``).
         Rewrites only the files containing a row where the predicate
-        is TRUE (NULL ⇒ row unchanged, SQL semantics)."""
+        is TRUE (``_split_touched``; NULL ⇒ row unchanged, SQL
+        semantics)."""
         self._refuse_if_append_only("UPDATE")
-        idcfg = self.identity_info()
-        if idcfg and idcfg["column"] in set_cols:
-            raise IdentityColumnError(
-                f"cannot UPDATE identity column {idcfg['column']!r} "
-                f"(GENERATED ALWAYS AS IDENTITY)"
-            )
-        pred = F.expr(where) if isinstance(where, str) else where
-        hit = F.coalesce(pred, F.lit(False))
+        self._refuse_identity(set_cols, _IDENTITY_ALTER, op="UPDATE")
+        hit = _true(where)
 
         def attempt() -> int:
             entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             _check_set_columns(set_cols, schema)
             cmap = entry.get("columnMap")
-            cur = self._read_files(
-                entry["files"], schema, keep_path="__file", column_map=cmap
+            hit_files, carried = self._split_touched(
+                entry, schema, lambda cur: cur.filter(hit)
             )
-            touched = self._distinct_files(cur.filter(hit))
-            hit_files = [
-                f for f in entry["files"] if self._abs(f["path"]) in touched
-            ]
-            carried = [
-                f for f in entry["files"] if self._abs(f["path"]) not in touched
-            ]
             params = {"where": str(where)}
-            if not touched:
+            if not hit_files:
                 return self._commit_files(
                     None, carried, "UPDATE", params, schema, base=entry,
                 )
@@ -1086,8 +1069,91 @@ class VersionedTable:
         positions never touch the driver, the log entry records only
         sidecar references + per-file counts, so both driver memory
         and log size are independent of how many rows the predicate
-        matches."""
+        matches. The masking and its guards are ``_mask_matches``;
+        this verb adds only the change rows."""
         self._refuse_if_append_only("DELETE (merge-on-read)")
+
+        def legs(schema, cur, matched):
+            if not self.cdf_enabled():
+                return None, None
+            # The newly masked rows, rematerialized by position —
+            # change-sized (reads only rows whose positions landed
+            # in this commit's sidecar).
+            return None, (
+                cur.join(matched, ["__path", "__row_idx"], "left_semi")
+                .drop("__path", "__row_idx")
+                .withColumn("_change_type", F.lit("delete"))
+            )
+
+        return self._mask_matches(
+            "DELETE_MOR", predicate, {"predicate": str(predicate)},
+            "DELETE/UPDATE (delete/update_where)", legs,
+        )
+
+    def update_mor(self, set_cols: dict[str, Column], where: Column | str) -> int:
+        """Merge-on-read UPDATE (Delta's DV-backed UPDATE): mask the
+        matched row positions with deletion vectors — zero survivor
+        rows rewritten — and append ONE change-sized file holding the
+        updated versions, in a single atomic commit. A point update
+        on a 100 TB table writes bytes proportional to the rows it
+        changes, never to the files it touches; ``optimize`` hardens
+        the masks away later. Shares the DV sidecar machinery (and
+        every guard) with ``delete_mor``: both are ``_mask_matches``,
+        which this verb gives the post-image and change rows. Rows
+        already masked by a prior MoR delete are logically gone and
+        are neither re-masked nor resurrected by the SET."""
+        self._refuse_if_append_only("UPDATE (merge-on-read)")
+        self._refuse_identity(set_cols, _IDENTITY_ALTER, op="UPDATE")
+
+        def legs(schema, cur, matched):
+            _check_set_columns(set_cols, schema)
+            pre = matched.drop("__path", "__row_idx")
+            # Single select: every SET expression evaluates against the
+            # PRE-image simultaneously (Delta UPDATE semantics — SET
+            # a=b, b=a swaps); sequential withColumn would leak a
+            # post-image into a later SET.
+            post = pre.select(
+                *[
+                    set_cols[c].alias(c) if c in set_cols else F.col(c)
+                    for c in pre.columns
+                ]
+            )
+            cdc = None
+            if self.cdf_enabled():
+                cdc = pre.withColumn(
+                    "_change_type", F.lit("update_preimage")
+                ).unionByName(
+                    post.withColumn("_change_type", F.lit("update_postimage"))
+                )
+            return post, cdc
+
+        return self._mask_matches(
+            "UPDATE_MOR", where, {"where": str(where)}, "UPDATE (update)", legs
+        )
+
+    def _mask_matches(
+        self, operation: str, where: Column | str, params: dict, cow: str, legs
+    ) -> int:
+        """Merge-on-read body of ``delete_mor`` and ``update_mor``:
+        mask the rows where ``where`` is TRUE with a deletion vector
+        and commit, retrying on conflicts.
+
+        Each attempt reads the snapshot with every row's file and
+        position (``__path``, ``__row_idx``), matches the predicate,
+        drops positions an existing DV already masks (so per-file
+        counts stay exact), writes the new positions as a ``dv-*``
+        sidecar parquet, and reads back per-file counts from the
+        sidecar alone. ``legs(schema, cur, matched)`` builds the
+        verb's new rows and change rows (either may be None) from the
+        snapshot and the newly matched rows; it runs before any job,
+        so its checks fail before a sidecar is written. A match of no
+        row removes the empty sidecar and commits the snapshot
+        unchanged.
+
+        Refused up front on a mirrored row-tracking table (unless the
+        mirror keeps DVs natively): the mirror would materialize the
+        masked survivors, invalidating their row-id ranges. ``cow``
+        names the copy-on-write verb to use instead."""
         if (
             self.row_tracking_enabled()
             and self.delta_mirror_enabled()
@@ -1109,22 +1175,19 @@ class VersionedTable:
                 "deletion vectors cannot be mirrored on a row-tracking "
                 "table: DV materialization rewrites survivors, which "
                 "invalidates the file's row-id range. Use copy-on-write "
-                "DELETE/UPDATE (delete/update_where) on row-tracking "
-                "tables."
+                f"{cow} on row-tracking tables."
             )
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        hit = F.coalesce(pred, F.lit(False))
+        hit = _true(where)
 
         def attempt() -> int:
             entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             files = entry["files"]
-            cmap = entry.get("columnMap")
             cur = self._read_paths(
                 [self._abs(f["path"]) for f in files], schema, with_meta=True,
-                column_map=cmap,
+                column_map=entry.get("columnMap"),
             )
-            matched = cur.filter(hit).select("__path", "__row_idx")
+            matched = cur.filter(hit)
             # Already-masked rows match again on re-delete; exclude them
             # distributedly so per-file counts stay exact.
             existing = self._dv_df(files)
@@ -1132,6 +1195,7 @@ class VersionedTable:
                 matched = matched.join(
                     existing, ["__path", "__row_idx"], "left_anti"
                 )
+            new_rows, cdc = legs(schema, cur, matched)
             # Translate scan paths (absolute) back to the logged path
             # strings — an O(#files) broadcast map, not a collect.
             map_df = local_df(
@@ -1140,7 +1204,8 @@ class VersionedTable:
                 "__path string, path string",
             )
             new_dv = (
-                matched.join(F.broadcast(map_df), "__path")
+                matched.select("__path", "__row_idx")
+                .join(F.broadcast(map_df), "__path")
                 .select("path", F.col("__row_idx").alias("pos"))
                 # hash-partition by file so a file's positions are
                 # contiguous; AQE coalesces the small partitions.
@@ -1158,11 +1223,10 @@ class VersionedTable:
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            params = {"predicate": str(predicate)}
-            if not counts:  # no-op delete: drop the empty sidecar
+            if not counts:  # no-op: drop the empty sidecar
                 _rmtree(sidecar_dir)
                 return self._commit_files(
-                    None, list(files), "DELETE_MOR", params, schema, base=entry,
+                    None, list(files), operation, params, schema, base=entry,
                 )
             out = []
             for f in files:
@@ -1180,135 +1244,8 @@ class VersionedTable:
                             },
                         }
                     )
-            cdc = None
-            if self.cdf_enabled():
-                # The newly masked rows, rematerialized by position —
-                # change-sized (reads only rows whose positions landed
-                # in this commit's sidecar).
-                cdc = (
-                    cur.join(matched, ["__path", "__row_idx"], "left_semi")
-                    .drop("__path", "__row_idx")
-                    .withColumn("_change_type", F.lit("delete"))
-                )
             return self._commit_files(
-                None, out, "DELETE_MOR", params, schema, base=entry, cdc_df=cdc,
-            )
-
-        return self._retrying(attempt)
-
-    def update_mor(self, set_cols: dict[str, Column], where: Column | str) -> int:
-        """Merge-on-read UPDATE (Delta's DV-backed UPDATE): mask the
-        matched row positions with deletion vectors — zero survivor
-        rows rewritten — and append ONE change-sized file holding the
-        updated versions, in a single atomic commit. A point update
-        on a 100 TB table writes bytes proportional to the rows it
-        changes, never to the files it touches; ``optimize`` hardens
-        the masks away later. Shares the DV sidecar machinery (and
-        every guard) with ``delete_mor``; rows already masked by a
-        prior MoR delete are logically gone and are neither re-masked
-        nor resurrected by the SET."""
-        self._refuse_if_append_only("UPDATE (merge-on-read)")
-        idcfg = self.identity_info()
-        if idcfg and idcfg["column"] in set_cols:
-            raise IdentityColumnError(
-                f"cannot UPDATE identity column {idcfg['column']!r} "
-                f"(GENERATED ALWAYS AS IDENTITY)"
-            )
-        if (
-            self.row_tracking_enabled()
-            and self.delta_mirror_enabled()
-            and self.dv_mirror_policy() != "native"
-        ):
-            from .delta_log import DeltaMirrorError
-
-            raise DeltaMirrorError(
-                "deletion vectors cannot be mirrored on a row-tracking "
-                "table: DV materialization rewrites survivors, which "
-                "invalidates the file's row-id range. Use copy-on-write "
-                "UPDATE (update) on row-tracking tables."
-            )
-        pred = F.expr(where) if isinstance(where, str) else where
-        hit = F.coalesce(pred, F.lit(False))
-
-        def attempt() -> int:
-            entry = self._read_log(self.latest_version())
-            schema = self._entry_schema(entry)
-            files = entry["files"]
-            cmap = entry.get("columnMap")
-            cur = self._read_paths(
-                [self._abs(f["path"]) for f in files], schema, with_meta=True,
-                column_map=cmap,
-            )
-            _check_set_columns(set_cols, schema)
-            matched = cur.filter(hit)
-            existing = self._dv_df(files)
-            if existing is not None:
-                matched = matched.join(
-                    existing, ["__path", "__row_idx"], "left_anti"
-                )
-            map_df = local_df(
-                self.spark,
-                [(self._abs(f["path"]), f["path"]) for f in files],
-                "__path string, path string",
-            )
-            new_dv = (
-                matched.select("__path", "__row_idx")
-                .join(F.broadcast(map_df), "__path")
-                .select("path", F.col("__row_idx").alias("pos"))
-                .repartition("path")
-            )
-            rel_sidecar = f"dv-{entry['version'] + 1}-{uuid.uuid4().hex[:8]}"
-            sidecar_dir = os.path.join(self.path, rel_sidecar)
-            new_dv.write.mode("errorifexists").parquet(sidecar_dir)
-            counts = {
-                r["path"]: r["n"]
-                for r in self.spark.read.parquet(sidecar_dir)
-                .groupBy("path")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            params = {"where": str(where)}
-            if not counts:  # no-op update: drop the empty sidecar
-                _rmtree(sidecar_dir)
-                return self._commit_files(
-                    None, list(files), "UPDATE_MOR", params, schema, base=entry,
-                )
-            out = []
-            for f in files:
-                n = counts.get(f["path"])
-                if n is None:
-                    out.append(f)
-                else:
-                    out.append(
-                        {
-                            **f,
-                            "dv": {
-                                "sidecars": _dv_sidecars(f) + [rel_sidecar],
-                                "legacy": _dv_legacy(f),
-                                "count": _dv_count(f) + int(n),
-                            },
-                        }
-                    )
-            pre = matched.drop("__path", "__row_idx")
-            # Single select: every SET expression evaluates against the
-            # PRE-image simultaneously (Delta UPDATE semantics — SET
-            # a=b, b=a swaps); sequential withColumn would leak a
-            # post-image into a later SET.
-            post = pre.select(
-                *[
-                    set_cols[c].alias(c) if c in set_cols else F.col(c)
-                    for c in pre.columns
-                ]
-            )
-            cdc = None
-            if self.cdf_enabled():
-                cdc = pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.withColumn("_change_type", F.lit("update_postimage"))
-                )
-            return self._commit_files(
-                post, out, "UPDATE_MOR", params, schema, base=entry, cdc_df=cdc,
+                new_rows, out, operation, params, schema, base=entry, cdc_df=cdc,
             )
 
         return self._retrying(attempt)
@@ -1330,94 +1267,18 @@ class VersionedTable:
         physically containing a matching row are rewritten; at scale,
         a predicate aligned with the partition/clustering layout means
         the rewrite set is exactly the slice's files and everything
-        else is carried by reference."""
+        else is carried by reference. The body, guard included, is
+        ``_replace_slice``, with slice membership tested by the
+        predicate."""
         self._refuse_if_append_only("replaceWhere")
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        hit = F.coalesce(pred, F.lit(False))
-        idcfg = self.identity_info()
-        if idcfg and idcfg["column"] in df.columns:
-            raise IdentityColumnError(
-                f"column {idcfg['column']!r} is GENERATED ALWAYS AS "
-                f"IDENTITY; explicit values are refused — omit it"
-            )
-
-        def attempt() -> int:
-            entry = self._read_log(self.latest_version())
-            schema = self._entry_schema(entry)
-            cmap = entry.get("columnMap")
-            cur = self._read_files(
-                entry["files"], schema, keep_path="__file", column_map=cmap
-            )
-            touched = self._distinct_files(cur.filter(hit))
-            hit_files = [
-                f for f in entry["files"] if self._abs(f["path"]) in touched
-            ]
-            carried = [
-                f for f in entry["files"] if self._abs(f["path"]) not in touched
-            ]
-            params = {"predicate": str(predicate)}
-            src_df = df
-            if idcfg:
-                # incoming replacement rows are NEW rows — assigned
-                # fresh ids above the high-water mark
-                src_df = src_df.withColumn(
-                    idcfg["column"],
-                    _identity_expr(idcfg, self._identity_hwm(entry, idcfg)),
-                )
-            # Guard rides the first output column (an output column is
-            # never pruned away), firing per-row during the write.
-            guard = schema.fields[0]
-            aligned = src_df.select(
-                F.when(hit, F.col(guard.name).cast(guard.dataType))
-                .otherwise(
-                    F.raise_error(
-                        F.lit(_REPLACE_WHERE_VIOLATION)
-                    ).cast(guard.dataType)
-                )
-                .alias(guard.name),
-                *[
-                    F.col(f.name).cast(f.dataType)
-                    for f in schema.fields[1:]
-                ],
-            )
-            if touched:
-                kept = self._read_files(
-                    hit_files, schema, column_map=cmap
-                ).filter(~hit)
-                aligned = kept.unionByName(aligned)
-            cdc = None
-            if self.cdf_enabled():
-                # Replaced slice rows out as deletes, incoming rows as
-                # inserts (the raw source, not the guard-wrapped plan —
-                # the guarded main write runs first and aborts the
-                # commit before any change file exists).
-                cdc = (
-                    self._read_files(hit_files, schema, column_map=cmap)
-                    .filter(hit)
-                    .withColumn("_change_type", F.lit("delete"))
-                    .unionByName(
-                        src_df.select(
-                            *[
-                                F.col(f.name).cast(f.dataType)
-                                for f in schema.fields
-                            ]
-                        ).withColumn("_change_type", F.lit("insert"))
-                    )
-                )
-            return self._commit_files(
-                aligned, carried, "REPLACE_WHERE", params, schema,
-                base=entry, cdc_df=cdc,
-            )
-
-        try:
-            return self._retrying(attempt)
-        except Exception as e:  # surface the guard as the API error
-            if _REPLACE_WHERE_VIOLATION in str(e):
-                raise ValueError(
-                    f"overwrite_where source rows outside predicate "
-                    f"slice {predicate!r}"
-                ) from None
-            raise
+        hit = _true(predicate)
+        return self._replace_slice(
+            df,
+            {"predicate": str(predicate)},
+            lambda frame, inside: frame.filter(hit if inside else ~hit),
+            lambda src: (src, hit),
+            f"overwrite_where source rows outside predicate slice {predicate!r}",
+        )
 
     def overwrite_for_keys(
         self,
@@ -1436,7 +1297,8 @@ class VersionedTable:
         key set must never be enumerated on the driver at all:
         membership here is a broadcast semi-/anti-join against the
         change-sized key table, so a million-key micro-batch costs
-        the same plan shape as a hundred-key one.
+        the same plan shape as a hundred-key one. The two verbs share
+        one body, ``_replace_slice``.
 
         When ``keys_df`` is passed explicitly, incoming rows are
         validated against it (a row outside the declared key slice
@@ -1450,82 +1312,98 @@ class VersionedTable:
         keys = (
             (keys_df if explicit else df).select(*key_cols).distinct()
         ).persist()
-        idcfg = self.identity_info()
-        if idcfg and idcfg["column"] in df.columns:
-            raise IdentityColumnError(
-                f"column {idcfg['column']!r} is GENERATED ALWAYS AS "
-                f"IDENTITY; explicit values are refused — omit it"
+
+        def member(frame: DataFrame, inside: bool) -> DataFrame:
+            how = "leftsemi" if inside else "left_anti"
+            return frame.join(F.broadcast(keys), key_cols, how)
+
+        def guard(src: DataFrame) -> tuple[DataFrame, Column]:
+            marker = keys.withColumn("__in_slice", F.lit(True))
+            marked = src.join(F.broadcast(marker), key_cols, "left")
+            return marked, F.col("__in_slice")
+
+        try:
+            return self._replace_slice(
+                df,
+                {"predicate": f"KEY IN keys_df ({', '.join(key_cols)})"},
+                member,
+                guard if explicit else None,
+                "overwrite_for_keys source rows outside the "
+                f"declared key slice on ({', '.join(key_cols)})",
             )
+        finally:
+            keys.unpersist()
+
+    def _replace_slice(
+        self, df: DataFrame, params: dict, member, guard, violation: str
+    ) -> int:
+        """replaceWhere body of ``overwrite_where`` and
+        ``overwrite_for_keys``: in one commit, drop the snapshot's
+        rows inside the slice and write ``df``'s rows, retrying on
+        conflicts. The two verbs differ only in how slice membership
+        is tested: ``member(frame, inside)`` keeps ``frame``'s rows
+        inside (or outside) the slice, and ``guard(src)`` returns the
+        source with a Column that is TRUE on in-slice rows — or
+        ``guard`` is None when no source row can fall outside. An
+        out-of-slice source row aborts the write job through a
+        ``raise_error`` on the first output column (an output column
+        is never pruned away), surfaced as ``ValueError(violation)``.
+        Identity columns are refused in ``df`` and assigned fresh
+        above the high-water mark."""
+        idcfg = self._refuse_identity(df.columns, _IDENTITY_VALUES)
 
         def attempt() -> int:
             entry = self._read_log(self.latest_version())
             schema = self._entry_schema(entry)
             cmap = entry.get("columnMap")
-            cur = self._read_files(
-                entry["files"], schema, keep_path="__file", column_map=cmap
+            hit_files, carried = self._split_touched(
+                entry, schema, lambda cur: member(cur, True)
             )
-            touched = self._distinct_files(
-                cur.join(F.broadcast(keys), key_cols, "leftsemi")
-            )
-            hit_files = [
-                f for f in entry["files"] if self._abs(f["path"]) in touched
-            ]
-            carried = [
-                f for f in entry["files"] if self._abs(f["path"]) not in touched
-            ]
-            params = {"predicate": f"KEY IN keys_df ({', '.join(key_cols)})"}
             src_df = df
             if idcfg:
+                # incoming replacement rows are NEW rows — assigned
+                # fresh ids above the high-water mark
                 src_df = src_df.withColumn(
                     idcfg["column"],
                     _identity_expr(idcfg, self._identity_hwm(entry, idcfg)),
                 )
-            if explicit:
-                guard = schema.fields[0]
-                marked = src_df.join(
-                    F.broadcast(keys.withColumn("__in_slice", F.lit(True))),
-                    key_cols,
-                    "left",
-                )
+            # the source under the table schema: the write when no row
+            # can fall outside the slice, and the change feed's inserts
+            typed = src_df.select(
+                *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+            )
+            aligned = typed
+            if guard is not None:
+                marked, in_slice = guard(src_df)
+                first = schema.fields[0]
                 aligned = marked.select(
-                    F.when(
-                        F.col("__in_slice"),
-                        F.col(guard.name).cast(guard.dataType),
-                    )
+                    F.when(in_slice, F.col(first.name).cast(first.dataType))
                     .otherwise(
                         F.raise_error(
                             F.lit(_REPLACE_WHERE_VIOLATION)
-                        ).cast(guard.dataType)
+                        ).cast(first.dataType)
                     )
-                    .alias(guard.name),
+                    .alias(first.name),
                     *[
                         F.col(f.name).cast(f.dataType)
                         for f in schema.fields[1:]
                     ],
                 )
-            else:
-                aligned = src_df.select(
-                    *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+            if hit_files:
+                kept = member(
+                    self._read_files(hit_files, schema, column_map=cmap), False
                 )
-            if touched:
-                kept = self._read_files(
-                    hit_files, schema, column_map=cmap
-                ).join(F.broadcast(keys), key_cols, "left_anti")
                 aligned = kept.unionByName(aligned)
             cdc = None
             if self.cdf_enabled():
+                # Replaced slice rows out as deletes, incoming rows as
+                # inserts (the raw source, not the guard-wrapped plan —
+                # the guarded main write runs first and aborts the
+                # commit before any change file exists).
                 cdc = (
-                    self._read_files(hit_files, schema, column_map=cmap)
-                    .join(F.broadcast(keys), key_cols, "leftsemi")
+                    member(self._read_files(hit_files, schema, column_map=cmap), True)
                     .withColumn("_change_type", F.lit("delete"))
-                    .unionByName(
-                        src_df.select(
-                            *[
-                                F.col(f.name).cast(f.dataType)
-                                for f in schema.fields
-                            ]
-                        ).withColumn("_change_type", F.lit("insert"))
-                    )
+                    .unionByName(typed.withColumn("_change_type", F.lit("insert")))
                 )
             return self._commit_files(
                 aligned, carried, "REPLACE_WHERE", params, schema,
@@ -1534,15 +1412,10 @@ class VersionedTable:
 
         try:
             return self._retrying(attempt)
-        except Exception as e:
+        except PySparkException as e:  # surface the guard as the API error
             if _REPLACE_WHERE_VIOLATION in str(e):
-                raise ValueError(
-                    "overwrite_for_keys source rows outside the "
-                    f"declared key slice on ({', '.join(key_cols)})"
-                ) from None
+                raise ValueError(violation) from None
             raise
-        finally:
-            keys.unpersist()
 
     def restore(
         self, version: int | None = None, timestamp: datetime | str | None = None
@@ -1597,6 +1470,7 @@ class VersionedTable:
                     "retiredPhysical": entry.get("retiredPhysical"),
                 },
                 cdc_df=cdc,
+                prev=latest,
             )
 
         return self._retrying(attempt)
@@ -1647,6 +1521,7 @@ class VersionedTable:
                 params,
                 new_schema,
                 base={**entry, "columnMap": cmap},
+                prev=entry,
             )
 
         return self._retrying(attempt)
@@ -1688,6 +1563,7 @@ class VersionedTable:
                 params,
                 new_schema,
                 base={**entry, "columnMap": cmap, "retiredPhysical": retired},
+                prev=entry,
             )
 
         return self._retrying(attempt)
@@ -1755,6 +1631,7 @@ class VersionedTable:
                 params,
                 new_schema,
                 base={**entry, "columnMap": cmap},
+                prev=entry,
             )
 
         return self._retrying(attempt)
@@ -1841,12 +1718,7 @@ class VersionedTable:
                 )
         if col in self.bloom_filter_columns():
             raise ValueError(f"cannot {op} bloom-indexed column {col!r}")
-        idcfg = self.identity_info()
-        if idcfg and col == idcfg["column"]:
-            raise IdentityColumnError(
-                f"cannot {op} identity column {col!r} (GENERATED ALWAYS "
-                f"AS IDENTITY)"
-            )
+        self._refuse_identity([col], _IDENTITY_ALTER, op=op)
 
     def optimize_small(
         self, min_rows_per_file: int, target_files: int = 1
@@ -2739,13 +2611,34 @@ class VersionedTable:
         return p
 
     def _distinct_files(self, tagged: DataFrame) -> set[str]:
-        """Distinct source files of the rows in ``tagged`` (which must
-        carry a ``__file`` = input_file_name() column). One distributed
-        scan; the projection is a single string column."""
-        return {
-            self._norm_file(r["__file"])
-            for r in tagged.select("__file").distinct().collect()
-        }
+        """Distinct raw ``__file`` values of the rows in ``tagged``.
+        One distributed scan; the projection is a single string
+        column."""
+        return {r["__file"] for r in tagged.select("__file").distinct().collect()}
+
+    def _split_touched(
+        self, entry: dict, schema: T.StructType, probe
+    ) -> tuple[list[dict], list[dict]]:
+        """Copy-on-write's first step, shared by every CoW verb:
+        ``probe`` gets ``entry``'s snapshot with each row's source
+        file in ``__file`` and returns the rows to rewrite (their
+        distinct files are collected in one job) or, for MERGE, whose
+        probe job also checks the source keys, the raw ``__file``
+        values it collected. Returns ``entry``'s files split into the
+        touched ones, to rewrite, and the rest, carried by
+        reference."""
+        found = probe(
+            self._read_files(
+                entry["files"], schema, keep_path="__file",
+                column_map=entry.get("columnMap"),
+            )
+        )
+        if isinstance(found, DataFrame):
+            found = self._distinct_files(found)
+        touched = {self._norm_file(f) for f in found}
+        hit = [f for f in entry["files"] if self._abs(f["path"]) in touched]
+        carried = [f for f in entry["files"] if self._abs(f["path"]) not in touched]
+        return hit, carried
 
     def _read_paths(
         self,
@@ -2970,6 +2863,17 @@ class VersionedTable:
         "step"}`` — or None. The running high-water mark lives in
         each commit entry (``identityHighWaterMark``), never here."""
         return self._config().get("identity") or None
+
+    def _refuse_identity(self, cols, refusal: str, **fields) -> dict | None:
+        """``identity_info()``, after refusing a write or ALTER whose
+        ``cols`` include the identity column: ``IdentityColumnError``
+        with ``refusal`` formatted with the ``column`` and ``fields``."""
+        idcfg = self.identity_info()
+        if idcfg and idcfg["column"] in cols:
+            raise IdentityColumnError(
+                refusal.format(column=idcfg["column"], **fields)
+            )
+        return idcfg
 
     def _identity_hwm(self, entry: dict, idcfg: dict) -> int:
         return int(
@@ -3218,6 +3122,7 @@ class VersionedTable:
         base: dict | None = None,
         cdc_df: DataFrame | None = None,
         txn: dict | None = None,
+        prev: dict | None = None,
     ) -> int:
         """Write ``new_df`` (if any) as fresh data files, then commit
         a log entry whose file list is ``carried`` + the new files —
@@ -3240,7 +3145,10 @@ class VersionedTable:
         base's. A base without ``version`` (``None`` for CREATE and
         CONVERT; CLONE's inherited mapping and clustering) commits
         version 0, whose config is ``params`` itself; every later
-        commit reads the stored config."""
+        commit reads the stored config. ``prev`` is the entry as read
+        when ``base`` carries a new mapping (default: ``base``); the
+        Delta mirror diffs the new entry against it, so a mirrored
+        commit opens no private entry from disk."""
         base = base or {}
         version = base.get("version", -1) + 1
         cfg = params if version == 0 else self._config()
@@ -3367,8 +3275,8 @@ class VersionedTable:
         # total-ordered without sleeping
         now = datetime.now(timezone.utc)
         if "timestamp" in base:
-            prev = datetime.fromisoformat(base["timestamp"])
-            now = max(now, prev + timedelta(milliseconds=1))
+            base_ts = datetime.fromisoformat(base["timestamp"])
+            now = max(now, base_ts + timedelta(milliseconds=1))
         entry = {
             "version": version,
             "timestamp": now.isoformat(),
@@ -3466,7 +3374,10 @@ class VersionedTable:
             # refused (delta_log.py DV-materialization section).
             from .delta_log import sync as _delta_sync
 
-            _delta_sync(self, materialize_dvs=True)
+            known = {version: {**entry, "files": files}}
+            if version:
+                known[version - 1] = prev or base
+            _delta_sync(self, materialize_dvs=True, known=known)
         return version
 
     def _footer_entries(

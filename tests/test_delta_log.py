@@ -2420,3 +2420,33 @@ def test_update_mor_mirrors_with_materialization(spark):
     )
     t.update_mor({"v": F.lit(-7).cast("long")}, F.col("id") < 5)
     assert _canon(read_delta_snapshot(spark, t.path)) == _canon(t.to_df())
+
+
+@pytest.mark.parametrize("mirror", [True, False], ids=["mirrored", "unmirrored"])
+@pytest.mark.parametrize("verb", ["append", "merge", "delete"])
+def test_commit_opens_one_private_entry(spark, monkeypatch, verb, mirror):
+    """A commit opens only the entry its attempt reads: the mirror
+    diffs the entry the commit just linked against that predecessor,
+    both handed over from memory, so a mirrored commit opens no more
+    private entries than an unmirrored one."""
+    df = spark.range(0, 20).withColumn("v", (F.col("id") * 3).cast("long"))
+    t = VersionedTable.create(
+        spark, temp_table_path("dl-opens"), df, delta_mirror=mirror
+    )
+    t.append(df.limit(1))
+    run = {
+        "append": lambda i: t.append(df.limit(1)),
+        "merge": lambda i: t.merge(df.where(F.col("id") == i), key="id"),
+        "delete": lambda i: t.delete(F.col("id") == i),
+    }[verb]
+    reads = []
+    real = VersionedTable._read_log_raw
+
+    def counting(self, version):
+        reads.append(version)
+        return real(self, version)
+
+    monkeypatch.setattr(VersionedTable, "_read_log_raw", counting)
+    for i in range(3):
+        run(i)
+    assert len(reads) == 3, reads

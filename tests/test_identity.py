@@ -72,7 +72,11 @@ def test_explicit_values_refused_everywhere(spark):
     with pytest.raises(IdentityColumnError):
         t.overwrite_where(with_id, F.col("name") == "x")
     with pytest.raises(IdentityColumnError):
+        t.overwrite_for_keys(with_id, "name")
+    with pytest.raises(IdentityColumnError):
         t.update({"id": F.lit(0)}, F.col("name") == "a")
+    with pytest.raises(IdentityColumnError):
+        t.update_mor({"id": F.lit(0)}, F.col("name") == "a")
     with pytest.raises(IdentityColumnError):
         VersionedTable.create(
             spark,
@@ -256,12 +260,12 @@ def test_mirror_declares_identity(spark):
     )
 
 
-def test_mirrored_identity_append_reads_three_entries(spark, monkeypatch):
+def test_mirrored_identity_append_reads_one_entry(spark, monkeypatch):
     """An identity append re-emits metaData every commit; its
     createdTime, column defaults and type changes come from reads the
-    commit already made, so it opens as many private entries as a
-    plain append: the commit's predecessor, the new entry and its
-    predecessor for the mirror diff."""
+    commit already made, and the mirror diffs the entries the commit
+    holds in memory, so it opens one private entry, the predecessor
+    its attempt reads — as many as an unmirrored append."""
     df = spark.createDataFrame([("a", 1)], ["name", "v"])
     t = VersionedTable.create(
         spark,
@@ -281,4 +285,4 @@ def test_mirrored_identity_append_reads_three_entries(spark, monkeypatch):
     monkeypatch.setattr(VersionedTable, "_read_log_raw", counting)
     for i in range(12):
         t.append(spark.createDataFrame([(f"c{i}", i)], ["name", "v"]))
-    assert len(reads) == 3 * 12
+    assert len(reads) == 1 * 12

@@ -175,18 +175,26 @@ def test_checkpoint_carries_domain_metadata_and_row_ids(spark, sf_dir):
     assert "rowTracking" in proto["writerFeatures"]
 
 
-def test_deletion_vectors_refused_on_mirrored_row_tracking(spark, sf_dir):
+@pytest.mark.parametrize(
+    "mor",
+    [
+        lambda t: t.delete_mor("n_regionkey = 1"),
+        lambda t: t.update_mor({"n_name": F.lit("x")}, "n_regionkey = 1"),
+    ],
+    ids=["delete_mor", "update_mor"],
+)
+def test_deletion_vectors_refused_on_mirrored_row_tracking(spark, sf_dir, mor):
     n = _nation(spark, sf_dir)
     t = VersionedTable.create(
         spark, temp_table_path("rt-dv"), n, delta_mirror=True, row_tracking=True
     )
     v0 = t.latest_version()
     with pytest.raises(DeltaMirrorError, match="row-id range"):
-        t.delete_mor("n_regionkey = 1")
+        mor(t)
     # The refusal must fire BEFORE the private commit (ADVICE r5): a
     # post-commit raise in sync() would wedge the table — every later
     # commit replays sync, hits the DV version, and raises forever.
-    assert t.latest_version() == v0, "refused delete_mor left a commit behind"
+    assert t.latest_version() == v0, "refused MoR DML left a commit behind"
     t.append(n.withColumn("n_nationkey", F.col("n_nationkey") + 900))
     assert t.latest_version() == v0 + 1
     assert t.read().count() == 2 * n.count()

@@ -1370,10 +1370,10 @@ def test_update_mor_cdf_pre_and_post_images(spark):
 def test_warm_mirrored_commit_log_budget(spark, monkeypatch):
     """Private-log I/O per commit on a warm handle of the serving
     table (``delta_mirror=True``): the commit reads the snapshot it
-    builds on once, the mirror sync reads the new entry and its
-    predecessor, and version 0 (the table config, parsed once per
-    handle) is never parsed again. Counts every JSON parse of a
-    ``_log`` entry and every listing of ``_log``."""
+    builds on once, the mirror sync diffs the new entry against that
+    predecessor from memory, and version 0 (the table config, parsed
+    once per handle) is never parsed again. Counts every JSON parse of
+    a ``_log`` entry and every listing of ``_log``."""
     import json
 
     from delta_lake_play_spark.serving.handlers import NamesTableService
@@ -1415,9 +1415,9 @@ def test_warm_mirrored_commit_log_budget(spark, monkeypatch):
         got[name] = dict(counts)
     monkeypatch.undo()
     assert got == {
-        "merge": {"parses": 3, "v0": 0, "listings": 2},
-        "delete": {"parses": 3, "v0": 0, "listings": 2},
-        "append": {"parses": 3, "v0": 0, "listings": 3},
+        "merge": {"parses": 1, "v0": 0, "listings": 2},
+        "delete": {"parses": 1, "v0": 0, "listings": 2},
+        "append": {"parses": 1, "v0": 0, "listings": 3},
     }
     assert table.latest_version() == 6
 
