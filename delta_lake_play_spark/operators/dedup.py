@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from delta_lake_play_spark.functions.fanout import fan_out
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.llm import minhash as mh
 
 _log = logging.getLogger("spark_graft")
@@ -881,7 +882,7 @@ def connected_components(
         mapping = [(x, find(x)) for x in list(parent)]
         pairs.unpersist()
         spark = nodes.sparkSession
-        mdf = spark.createDataFrame(mapping or [(-1, -1)], "node long, cluster long")
+        mdf = local_df(spark, mapping or [(-1, -1)], "node long, cluster long")
         return (
             nodes.join(F.broadcast(mdf), "node", "left")
             .select("node", F.coalesce("cluster", "node").alias("cluster"))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.operators.kmeans import _quantize, _sq_dist
 
 _CODEBOOK_SCHEMA = T.StructType(
@@ -113,7 +114,7 @@ def pq_adc_topk(
             # outweighs the removed groupBy(vid, m) exchange, whose
             # partial argmin already combines map-side. The join
             # stays.
-            cdf = spark.createDataFrame(cbs, _CODEBOOK_SCHEMA)
+            cdf = local_df(spark, cbs, _CODEBOOK_SCHEMA)
             scored = sub.join(F.broadcast(cdf), "m").withColumn(
                 "dist", _sq_dist("sv", "cv")
             )
@@ -170,7 +171,8 @@ def pq_adc_topk(
             (m, cl, sum((a - b) * (a - b) for a, b in zip(query[m], cv)))
             for m, cl, cv in codebooks
         ]
-        lut = spark.createDataFrame(
+        lut = local_df(
+            spark,
             lut_rows,
             T.StructType(
                 [

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_lake_play_spark.functions.exact import dsum, sql_dsum
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
 
@@ -983,7 +984,7 @@ def agg_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(w).alias("cum"),
         (F.sum("n").over(w) - F.col("n")).alias("cum_prev"),
     )
-    qs = spark.createDataFrame([(q,) for q in _QSKETCH_QS], "q double")
+    qs = local_df(spark, [(q,) for q in _QSKETCH_QS], "q double")
     target = F.col("q") * F.col("n_total")
     est = F.col("mn") + width * (
         F.col("bucket") + (target - F.col("cum_prev")) / F.col("n")

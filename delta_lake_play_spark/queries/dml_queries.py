@@ -20,13 +20,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from delta_lake_play_spark.functions.exact import sql_dsum
+from delta_lake_play_spark.functions.local import empty_df, local_df
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
-from delta_lake_play_spark.table.versioned import (
-    VersionedTable,
-    empty_df,
-    temp_table_path,
-)
+from delta_lake_play_spark.table.versioned import VersionedTable, temp_table_path
 
 # Deterministic derived sets over customer -----------------------------------
 
@@ -1325,9 +1322,7 @@ def dml_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"row-id ranges overlap at v{v}: {spans[i]} / {spans[i + 1]}"
                 )
         rows.append((v, int(e["num_rows"]), int(e["rowIdHighWaterMark"])))
-    return spark.createDataFrame(
-        rows, "version int, num_rows bigint, row_id_hwm bigint"
-    )
+    return local_df(spark, rows, "version int, num_rows bigint, row_id_hwm bigint")
 
 
 # --- dml_in_commit_timestamps (Delta inCommitTimestamp feature) -----------

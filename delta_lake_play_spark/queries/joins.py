@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_lake_play_spark.functions.exact import dsum, sql_dsum
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.operators.asof import asof_join
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
@@ -209,7 +210,7 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream through without a shuffle."""
     o = load_table(spark, sf_dir, "orders")
     bands = F.broadcast(
-        spark.createDataFrame(_BANDS, "lo double, hi double, band string")
+        local_df(spark, _BANDS, "lo double, hi double, band string")
     )
     cond = (o.o_totalprice >= bands.lo) & (o.o_totalprice < bands.hi)
     return (

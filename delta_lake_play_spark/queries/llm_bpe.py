@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
 
@@ -125,7 +126,7 @@ def bpe_train(
     the merge log (step, pair, merged, pair_count) — the trained
     artifact, bounded at ``n_merges`` rows like a centroid table."""
     merges, _ = _bpe_learn(spark, docs, text_col, n_merges)
-    return spark.createDataFrame(merges, _MERGE_SCHEMA)
+    return local_df(spark, merges, _MERGE_SCHEMA)
 
 
 def bpe_apply_topk(

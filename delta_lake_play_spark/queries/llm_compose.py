@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
 
@@ -795,9 +796,7 @@ def llm_quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: three iterations re-aggregate the same feature rows
     feats = _qc_feats(spark, sf_dir).persist()
     n_expr = F.greatest(F.count("*"), F.lit(1))
-    w = spark.createDataFrame(
-        [(0, 0, 0, 0)], "w0 long, w1 long, w2 long, w3 long"
-    )
+    w = local_df(spark, [(0, 0, 0, 0)], "w0 long, w1 long, w2 long, w3 long")
     outs = []
     for i in range(1, _QC_ITERS + 1):
         j = feats.crossJoin(F.broadcast(w))

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from delta_lake_play_spark.functions.local import empty_df, local_df
 from delta_lake_play_spark.llm import minhash as mh
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
@@ -717,11 +718,7 @@ def llm_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature_table,
     )
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
-    from delta_lake_play_spark.table.versioned import (
-        VersionedTable,
-        empty_df,
-        temp_table_path,
-    )
+    from delta_lake_play_spark.table.versioned import VersionedTable, temp_table_path
 
     spark.dataSource.register(VersionedTableDataSource)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -898,7 +895,8 @@ def llm_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged.unpersist()
     hashed.unpersist()
     recall = float(n_hit) / n_true if n_true > 0 else None
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(n_true, n_flagged, n_hit, recall)],
         "n_true bigint, n_flagged bigint, n_hit bigint, recall double",
     )

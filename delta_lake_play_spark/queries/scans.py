@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
 
@@ -405,7 +406,8 @@ def scan_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.count()  # any action over the subtree populates the metrics
     m = obs.get
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (
                 m["n_rows"],

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from delta_lake_play_spark.functions.local import local_df
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
 
@@ -98,6 +99,6 @@ def serve_endpoint_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     hist = svc.get_table_history()
     assert {op for op in hist["operation"].values()} >= {"CREATE", "MERGE", "DELETE"}
-    return spark.createDataFrame(
-        out, "snapshot_v int, id int, firstname string, lastname string"
+    return local_df(
+        spark, out, "snapshot_v int, id int, firstname string, lastname string"
     )

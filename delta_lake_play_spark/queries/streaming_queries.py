@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from delta_lake_play_spark.functions.local import empty_df, local_df
 from delta_lake_play_spark.registry import register
 from delta_lake_play_spark.sources.catalog import load_table
 from delta_lake_play_spark.streaming import events_stream as es
@@ -332,11 +333,7 @@ def stream_medallion_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from delta_lake_play_spark.sources.table_stream import stream_table_jvm
-    from delta_lake_play_spark.table.versioned import (
-        VersionedTable,
-        empty_df,
-        temp_table_path,
-    )
+    from delta_lake_play_spark.table.versioned import VersionedTable, temp_table_path
 
     ev = load_table(spark, sf_dir, "events")
     bronze = VersionedTable.create(
@@ -479,11 +476,7 @@ def stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from delta_lake_play_spark.sources.table_stream import stream_table_jvm
-    from delta_lake_play_spark.table.versioned import (
-        VersionedTable,
-        empty_df,
-        temp_table_path,
-    )
+    from delta_lake_play_spark.table.versioned import VersionedTable, temp_table_path
 
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") % 4 == 1)
     bronze = VersionedTable.create(
@@ -684,11 +677,7 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from delta_lake_play_spark.queries.dml_queries import _cdf_script
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
-    from delta_lake_play_spark.table.versioned import (
-        VersionedTable,
-        empty_df,
-        temp_table_path,
-    )
+    from delta_lake_play_spark.table.versioned import VersionedTable, temp_table_path
 
     spark.dataSource.register(VersionedTableDataSource)
     src = _cdf_script(spark, sf_dir)
@@ -841,7 +830,8 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         acc,
         "n_nationkey bigint, n_name string, file_group bigint, "
         "batch_matches_file boolean",
@@ -967,9 +957,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
         .awaitTermination()
     )
-    partial = spark.createDataFrame(
-        acc, "segment string, event_type string, n long"
-    )
+    partial = local_df(spark, acc, "segment string, event_type string, n long")
     return partial.groupBy("segment", "event_type").agg(
         F.sum("n").cast("long").alias("n")
     )

@@ -20,7 +20,8 @@ observed flaws:
 - ``api.py:107`` builds the DELETE predicate by f-string from a
   Python tuple (renders ``id IN (7,)`` for single ids; injectable) —
   here it's a parameterized ``Column.isin``.
-- The MERGE source and the seed rows are built by ``local_df`` as
+- The MERGE source and the seed rows are built by
+  ``functions/local.py:local_df`` as
   ``LocalRelation`` plans, not PythonRDD-backed frames, so a request
   never starts a Python worker.
 
@@ -40,7 +41,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from delta_lake_play_spark.table.versioned import VersionedTable, local_df
+from delta_lake_play_spark.functions.local import local_df
+from delta_lake_play_spark.table.versioned import VersionedTable
 
 # The reference's fixed schema and seed rows (spark_project.py:29-35).
 NAMES_SCHEMA = T.StructType(

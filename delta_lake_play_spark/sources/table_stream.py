@@ -37,7 +37,6 @@ from pyspark.sql.datasource import (
 from delta_lake_play_spark.table.versioned import (
     VersionedTable,
     _dv_count,
-    _dv_legacy,
     _dv_sidecars,
 )
 
@@ -252,11 +251,10 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         entry = self._table._read_log(version)
         out = {}
         for f in entry["files"]:
-            # DV identity (sidecars + legacy + count): growth between
-            # versions must read as a CHANGE, not an append.
+            # DV identity (sidecars + count): growth between versions
+            # must read as a CHANGE, not an append.
             out[self._table._abs(f["path"])] = (
                 tuple(_dv_sidecars(f)),
-                tuple(_dv_legacy(f)),
                 _dv_count(f),
             )
         return out

@@ -85,7 +85,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .versioned import empty_df, local_df
+from delta_lake_play_spark.functions.local import empty_df, local_df
 
 _CHECKPOINT_EVERY = 10
 
@@ -923,12 +923,11 @@ def _op_params_strings(params: dict) -> dict:
 
 
 def _dv_fingerprint(f: dict) -> str:
-    dv = f.get("dv")
-    legacy = dv if isinstance(dv, list) else (dv or {}).get("legacy", [])
-    sidecars = [] if isinstance(dv, list) else (dv or {}).get("sidecars", [])
-    count = len(dv) if isinstance(dv, list) else (dv or {}).get("count", 0)
+    dv = f.get("dv") or {}
+    # The empty list is the slot of a retired inline-position DV form;
+    # it stays so that existing ``_dv_materialized/`` names still match.
     key = json.dumps(
-        [f["path"], sorted(int(i) for i in legacy), sorted(sidecars), int(count)]
+        [f["path"], [], sorted(dv.get("sidecars", [])), int(dv.get("count", 0))]
     )
     return hashlib.sha256(key.encode()).hexdigest()[:16]
 
@@ -1069,31 +1068,30 @@ def _dv_native(table) -> bool:
 
 def _dv_positions(table, f: dict) -> list[int]:
     """All masked row positions of ONE private file entry, from its
-    legacy inline list and/or sidecar parquet dirs. Driver-side
-    pyarrow read of change-sized sidecars — O(deleted rows of this
-    file), never a Spark job per file."""
-    from .versioned import _dv_legacy, _dv_sidecars
+    sidecar parquet dirs. Driver-side pyarrow read of change-sized
+    sidecars — O(deleted rows of this file), never a Spark job per
+    file."""
+    import pyarrow.parquet as pq
 
-    positions = [int(i) for i in _dv_legacy(f)]
-    if _dv_sidecars(f):
-        import pyarrow.parquet as pq
+    from .versioned import _dv_sidecars
 
-        for s in _dv_sidecars(f):
-            sdir = table._abs(s)
-            parts = (
-                [
-                    os.path.join(sdir, fn)
-                    for fn in sorted(os.listdir(sdir))
-                    if fn.endswith(".parquet")
-                ]
-                if os.path.isdir(sdir)
-                else [sdir]
-            )
-            for part in parts:
-                t = pq.read_table(part, columns=["path", "pos"])
-                for row in t.to_pylist():
-                    if row["path"] == f["path"]:
-                        positions.append(int(row["pos"]))
+    positions = []
+    for s in _dv_sidecars(f):
+        sdir = table._abs(s)
+        parts = (
+            [
+                os.path.join(sdir, fn)
+                for fn in sorted(os.listdir(sdir))
+                if fn.endswith(".parquet")
+            ]
+            if os.path.isdir(sdir)
+            else [sdir]
+        )
+        for part in parts:
+            t = pq.read_table(part, columns=["path", "pos"])
+            for row in t.to_pylist():
+                if row["path"] == f["path"]:
+                    positions.append(int(row["pos"]))
     return sorted(set(positions))
 
 
@@ -1225,9 +1223,7 @@ def _files_present(table, entry: dict) -> bool:
     for f in entry["files"]:
         if not os.path.exists(table._abs(f["path"])):
             return False
-        dv = f.get("dv")
-        sidecars = [] if not isinstance(dv, dict) else dv.get("sidecars", [])
-        for s in sidecars:
+        for s in (f.get("dv") or {}).get("sidecars", []):
             if not os.path.exists(table._abs(s)):
                 return False
     return True

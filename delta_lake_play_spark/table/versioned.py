@@ -70,9 +70,7 @@ LogStore abstraction; the layout and recovery story are unchanged.
 
 from __future__ import annotations
 
-import functools
 import json
-import logging
 import os
 import re
 import tempfile
@@ -82,13 +80,17 @@ from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 from urllib.parse import unquote
 
-from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_logger = logging.getLogger("spark_graft")
+from delta_lake_play_spark.functions.local import (
+    _is_empty_local,
+    _local_relation,
+    empty_df,
+    local_df,
+)
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -119,30 +121,12 @@ _BLOOM_HASHES = 3
 
 def _dv_sidecars(f: dict) -> list[str]:
     """Sidecar parquet dirs referenced by a file entry's deletion vector."""
-    dv = f.get("dv")
-    if isinstance(dv, dict):
-        return list(dv.get("sidecars", []))
-    return []
-
-
-def _dv_legacy(f: dict) -> list[int]:
-    """Inline row-index list of a pre-sidecar deletion vector."""
-    dv = f.get("dv")
-    if isinstance(dv, list):
-        return dv
-    if isinstance(dv, dict):
-        return list(dv.get("legacy", []))
-    return []
+    return list((f.get("dv") or {}).get("sidecars", []))
 
 
 def _dv_count(f: dict) -> int:
     """Exact number of rows masked out of a file by its deletion vector."""
-    dv = f.get("dv")
-    if not dv:
-        return 0
-    if isinstance(dv, list):
-        return len(dv)
-    return int(dv.get("count", 0))
+    return int((f.get("dv") or {}).get("count", 0))
 
 _STAT_TYPES = (
     T.NumericType,
@@ -300,10 +284,6 @@ class MergeSchemaError(ValueError):
 
 class ConstraintViolationError(ValueError):
     """A commit would write rows violating a table CHECK constraint."""
-
-
-class TypeWideningError(ValueError):
-    """The requested column type change is not a lossless widening."""
 
 
 class AppendOnlyError(RuntimeError):
@@ -849,7 +829,10 @@ class VersionedTable:
             # (xxhash64(int) != xxhash64(long)). Strip those; absence
             # safely degrades to no pruning. Entries WITH a recorded
             # bloomTypes keep their bitmaps — _point_files probes them
-            # under the recorded type.
+            # under the recorded type. Min/max stats that stop
+            # comparing with the widened type's bounds (a date's
+            # '2024-01-05' sorts below '2024-01-05T00:00:00') go the
+            # same way; null counts stay valid.
             widened = [
                 f.name
                 for f in schema.fields
@@ -862,6 +845,10 @@ class VersionedTable:
                             "bloomTypes", {}
                         ):
                             del fe["bloom"][c]
+                        if not _widen_keeps_stats(
+                            schema[c].dataType, new_schema[c].dataType
+                        ):
+                            fe.get("stats", {}).pop(c, None)
             touched_df = self._read_files(
                 hit_files, schema, column_map=entry.get("columnMap")
             )
@@ -1239,7 +1226,6 @@ class VersionedTable:
                             **f,
                             "dv": {
                                 "sidecars": _dv_sidecars(f) + [rel_sidecar],
-                                "legacy": _dv_legacy(f),
                                 "count": _dv_count(f) + int(n),
                             },
                         }
@@ -2072,7 +2058,6 @@ class VersionedTable:
         (its masked rows were deleted) and must not cancel out."""
         return (
             self._abs(f["path"]),
-            tuple(_dv_legacy(f)),
             tuple(_dv_sidecars(f)),
             _dv_count(f),
         )
@@ -2752,35 +2737,21 @@ class VersionedTable:
         """All deletion-vector positions for these files as a
         ``(__path, __row_idx)`` DataFrame (absolute paths), or None
         when nothing is masked. Sidecars are read distributedly by
-        Spark; only pre-sidecar inline lists (legacy entries) go
-        through ``local_df``. Sidecar rows for files outside
-        ``file_entries`` are filtered out by the path-map join, so
-        partial reads (stats-pruned scans, change feeds) stay exact."""
-        legacy_rows = [
-            (self._abs(f["path"]), int(i))
-            for f in file_entries
-            for i in _dv_legacy(f)
-        ]
+        Spark. Sidecar rows for files outside ``file_entries`` are
+        filtered out by the path-map join, so partial reads
+        (stats-pruned scans, change feeds) stay exact."""
         sidecars = sorted({s for f in file_entries for s in _dv_sidecars(f)})
-        if not legacy_rows and not sidecars:
+        if not sidecars:
             return None
-        out = None
-        if sidecars:
-            map_df = local_df(
-                self.spark,
-                [(f["path"], self._abs(f["path"])) for f in file_entries],
-                "path string, __path string",
-            ).dropDuplicates(["path"])
-            sc = self.spark.read.parquet(*[self._abs(s) for s in sidecars])
-            out = sc.join(F.broadcast(map_df), "path").select(
-                "__path", F.col("pos").alias("__row_idx")
-            )
-        if legacy_rows:
-            ldf = local_df(
-                self.spark, legacy_rows, "__path string, __row_idx long"
-            )
-            out = ldf if out is None else out.unionByName(ldf)
-        return out
+        map_df = local_df(
+            self.spark,
+            [(f["path"], self._abs(f["path"])) for f in file_entries],
+            "path string, __path string",
+        ).dropDuplicates(["path"])
+        sc = self.spark.read.parquet(*[self._abs(s) for s in sidecars])
+        return sc.join(F.broadcast(map_df), "path").select(
+            "__path", F.col("pos").alias("__row_idx")
+        )
 
     def _commit_base(self, p: str) -> str:
         """``basePath`` for a leaf file of a partitioned commit: its
@@ -3454,94 +3425,6 @@ class VersionedTable:
                     entry["nullCounts"] = null_counts
                 entries.append(entry)
         return entries
-
-
-def local_df(
-    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
-) -> DataFrame:
-    """DataFrame over driver-held ``rows`` (tuples in schema field
-    order) that plans as a ``LocalRelation``.
-
-    ``createDataFrame(list, schema)`` plans a ``LogicalRDD`` over
-    ``parallelize(rows)`` mapped through a Python lambda — a PythonRDD,
-    so every stage that scans it launches Python workers (~250 ms per
-    job on a small local session), and a persisted copy computed by two
-    concurrent AQE query stages races on its cache blocks. Built from
-    an Arrow table instead, the rows travel to the JVM once and the
-    plan is a ``LocalRelation``: no Python worker, no job to collect
-    it, and exact size statistics. Each row is checked first by the
-    same verifier ``createDataFrame`` runs by default, so a bad row
-    raises the same PySpark error class and message."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    s = _struct(schema)
-    verify = T._make_type_verifier(s)
-    for row in rows:
-        verify(row)
-    arrow_schema = to_arrow_schema(s)
-    columns = [
-        pa.array([row[i] for row in rows], type=field.type)
-        for i, field in enumerate(arrow_schema)
-    ]
-    return spark.createDataFrame(
-        pa.Table.from_arrays(columns, schema=arrow_schema), s
-    )
-
-
-def empty_df(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
-    """Empty DataFrame (all columns nullable) that OPTIMIZES to an
-    empty LocalRelation — emptiness is then a driver-side-provable plan
-    fact, so committing it as a table seed skips the data-write job
-    (``_is_empty_local``). ``createDataFrame([], schema)`` instead
-    parallelizes an empty RDD through a Python lambda: a LogicalRDD
-    whose emptiness only a job can prove, and every stage scanning it
-    launches Python workers (see ``local_df``)."""
-    cols = [
-        F.lit(None).cast(f.dataType).alias(f.name) for f in _struct(schema).fields
-    ]
-    return spark.range(1).select(*cols).where(F.lit(False))
-
-
-def _struct(schema: T.StructType | str) -> T.StructType:
-    """``schema`` as a StructType (DDL strings parsed)."""
-    if isinstance(schema, T.StructType):
-        return schema
-    return T._parse_datatype_string(schema)
-
-
-def _local_relation(df: DataFrame):
-    """The optimized plan of ``df`` when it is a ``LocalRelation`` —
-    rows the driver already holds, so collecting them runs no job —
-    else None. A real scan or a non-collapsed projection returns None.
-    So does a DataFrame without a classic JVM plan (Connect), and the
-    first such fallback per error type is logged through the
-    ``spark_graft`` logger."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        return plan if plan.getClass().getSimpleName() == "LocalRelation" else None
-    except (AttributeError, Py4JError) as e:  # non-classic DataFrame
-        _log_local_plan_fallback(type(e).__name__)
-        return None
-
-
-@functools.cache
-def _log_local_plan_fallback(error: str) -> None:
-    """Warn once per error type that the LocalRelation check fell back."""
-    _logger.warning(
-        "no classic plan to inspect (%s); treating the frame as a "
-        "distributed relation",
-        error,
-    )
-
-
-def _is_empty_local(df: DataFrame) -> bool:
-    """True iff ``df`` optimizes to an EMPTY LocalRelation — a plan
-    whose row count is a driver-side fact (no job needed). Used to
-    skip the data-write job of empty commits; anything else runs the
-    normal write path."""
-    plan = _local_relation(df)
-    return plan is not None and plan.data().isEmpty()
 
 
 def _probe_local_merge(target: DataFrame, source: DataFrame, key: str) -> set[str]:

@@ -11,11 +11,8 @@ rows.
 import pytest
 from pyspark.sql import functions as F
 
-from delta_lake_play_spark.table.versioned import (
-    VersionedTable,
-    local_df,
-    temp_table_path,
-)
+from delta_lake_play_spark.functions.local import local_df
+from delta_lake_play_spark.table.versioned import VersionedTable, temp_table_path
 from .conftest import spark_jobs
 
 HIT = "id < 15"  # rows of the first two files

@@ -1,16 +1,21 @@
 """``local_df`` builds the same DataFrame as ``createDataFrame(rows,
 schema)`` — rows, schema and nullability, and the same PySpark error
-for a bad row — but plans it as a ``LocalRelation``. Covered for every
-schema the table and serving layers build from driver-held rows."""
+for a bad row — but plans it as a ``LocalRelation``. Covered for the
+schemas the package builds from driver-held rows."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pytest
 from pyspark.errors import PySparkException
+from pyspark.sql import Row
 from pyspark.sql import types as T
 
+from delta_lake_play_spark.functions.local import _is_empty_local, local_df
+from delta_lake_play_spark.operators.pq import _CODEBOOK_SCHEMA
+from delta_lake_play_spark.queries.llm_bpe import _MERGE_SCHEMA
 from delta_lake_play_spark.serving.handlers import NAMES_SCHEMA, SEED_ROWS
-from delta_lake_play_spark.table.versioned import _is_empty_local, local_df
 
 # The optimize partition rows: a row index and raw hive strings, with
 # the hive null marker already turned into None.
@@ -45,10 +50,6 @@ CASES = {
         "path string, __path string",
         [("c-0-ab/part-0.parquet", "/t/c-0-ab/part-0.parquet")],
     ),
-    "dv_legacy_positions": (
-        "__path string, __row_idx long",
-        [("/t/c-0-ab/part-0.parquet", 0), ("/t/c-0-ab/part-0.parquet", 7)],
-    ),
     "dv_materialize_fingerprints": (
         "__path string, __fp string",
         [("/t/c-0-ab/part-0.parquet", "9f2c")],
@@ -57,6 +58,23 @@ CASES = {
     "optimize_partitions": (
         _PARTITION_SCHEMA,
         [(0, "eu", "2026-01-01"), (1, None, "2026-01-02"), (2, "us", None)],
+    ),
+    "pq_codebook": (_CODEBOOK_SCHEMA, [(0, 3, [1000, -2000, 5]), (1, 7, [])]),
+    "scan_observe_metrics": (
+        "n_rows bigint, sum_qty_cents bigint, "
+        "min_ship timestamp_ntz, max_ship timestamp_ntz",
+        [(60175, 153078795, datetime(1992, 1, 2), datetime(1998, 12, 1, 0, 0, 1))],
+    ),
+    "llm_dedup_recall": (
+        "n_true bigint, n_flagged bigint, n_hit bigint, recall double",
+        [(0, 4, 0, None)],
+    ),
+    "bpe_merge_log": (
+        _MERGE_SCHEMA,
+        [
+            Row(step=0, pair="<t><h>", merged="<th>", pair_count=41),
+            Row(step=1, pair="<th><e>", merged="<the>", pair_count=29),
+        ],
     ),
 }
 

@@ -10,11 +10,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from delta_lake_play_spark.functions.local import _local_relation, local_df
 from delta_lake_play_spark.table.versioned import (
     MergeSourceKeyError,
     VersionedTable,
-    _local_relation,
-    local_df,
     temp_table_path,
 )
 

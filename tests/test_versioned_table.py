@@ -859,6 +859,34 @@ def test_merge_type_widening(spark):
     assert got[1][0] == 10  # carried narrow file reads under wide schema
 
 
+def test_date_to_timestamp_ntz_widening_keeps_skipping_exact(spark):
+    """A date→timestamp_ntz widening drops the carried files' min/max
+    stats: an ISO date ('2024-01-05') sorts below the same instant as
+    a timestamp ('2024-01-05T00:00:00'), so keeping them made range
+    and point reads skip files that hold matching rows. Null counts
+    stay."""
+    from datetime import date, datetime
+
+    t = VersionedTable.create(
+        spark,
+        temp_table_path("widen-date"),
+        spark.createDataFrame(
+            [(1, date(2024, 1, 1)), (2, date(2024, 1, 5))], "id int, d date"
+        ),
+    )
+    t.merge(
+        spark.createDataFrame([(3, datetime(2024, 2, 1, 10))], "id int, d timestamp_ntz"),
+        key="id",
+        evolve_schema=True,
+    )
+    assert dict(t.to_df().dtypes)["d"] == "timestamp_ntz"
+    jan5 = datetime(2024, 1, 5)
+    assert sorted(r["id"] for r in t.read_range("d", lower=jan5).collect()) == [2, 3]
+    assert [r["id"] for r in t.read_point("d", jan5).collect()] == [2]
+    carried = [f for f in t._read_log(1)["files"] if "d" not in f["stats"]]
+    assert carried and all(f["nullCounts"]["d"] == 0 for f in carried)
+
+
 def test_append_refuses_narrowing(spark):
     t = VersionedTable.create(
         spark, temp_table_path("narrow"),
@@ -1429,7 +1457,7 @@ def test_is_empty_local_fallback_logs_warning(caplog):
     so once through the package logger."""
     from py4j.protocol import Py4JError
 
-    from delta_lake_play_spark.table import versioned as vt
+    from delta_lake_play_spark.functions import local
 
     class _Jdf:
         def queryExecution(self):
@@ -1438,11 +1466,11 @@ def test_is_empty_local_fallback_logs_warning(caplog):
     class _Frame:
         _jdf = _Jdf()
 
-    vt._log_local_plan_fallback.cache_clear()
+    local._log_local_plan_fallback.cache_clear()
     with caplog.at_level("WARNING", logger="spark_graft"):
-        assert vt._is_empty_local(_Frame()) is False
-        assert vt._is_empty_local(_Frame()) is False
-        assert vt._local_relation(_Frame()) is None
+        assert local._is_empty_local(_Frame()) is False
+        assert local._is_empty_local(_Frame()) is False
+        assert local._local_relation(_Frame()) is None
     warned = [r for r in caplog.records if r.name == "spark_graft"]
     assert [r.levelname for r in warned] == ["WARNING"]
     assert "Py4JError" in warned[0].getMessage()
