@@ -5,9 +5,10 @@ Usage: python scripts/compare_plans.py <dir_a> <suffix_a> <dir_b> <suffix_b>
 Two captures of one tree are never byte-identical: expression ids,
 RDD ids, temp-table paths and the seeds ``rand``/``shuffle`` draw at
 analysis differ from run to run. Each plan is normalized for exactly
-those (expression ids renumbered by first appearance) before the
-comparison. Prints the number of identical keys and the differing
-ones; exits 1 if any differ.
+those (expression ids and the numbers of higher-order-function
+lambda variables, ``lambda x_532#10``, renumbered by first
+appearance) before the comparison. Prints the number of identical
+keys and the differing ones; exits 1 if any differ.
 """
 
 import os
@@ -22,6 +23,13 @@ def normalize(plan: str) -> str:
     plan = re.sub(_UUID, "<uuid>", plan)
     ids: dict[str, int] = {}
     plan = re.sub(r"#(\d+)", lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan)
+    # lambda names come from one counter for the whole session
+    lambdas: dict[str, int] = {}
+    plan = re.sub(
+        r"(lambda \w+?_)(\d+)#",
+        lambda m: f"{m.group(1)}{lambdas.setdefault(m.group(2), len(lambdas))}#",
+        plan,
+    )
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
     plan = re.sub(r"Some\(-?\d{6,}\)", "Some(SEED)", plan)

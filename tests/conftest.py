@@ -36,6 +36,16 @@ def spark_jobs(spark):
     jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def job_tasks(spark, jobs):
+    """Tasks of each job in ``jobs`` (ids from ``spark_jobs``), in
+    job-id order: the sum of its stages' task counts."""
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in sorted(jobs)
+    ]
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers", "slow: long-running sweep tests (several minutes)"

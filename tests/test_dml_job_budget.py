@@ -12,7 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_play_spark.functions.local import local_df
-from delta_lake_play_spark.table.versioned import VersionedTable, temp_table_path
+from delta_lake_play_spark.table.versioned import (
+    _KEY_LITERALS_MAX,
+    VersionedTable,
+    temp_table_path,
+)
 from .conftest import spark_jobs
 
 HIT = "id < 15"  # rows of the first two files
@@ -45,6 +49,10 @@ VERBS = {
         _rows(s, [3, 12]), "id", keys_df=_rows(s, [3, 12, 13])
     ),
     "merge": lambda t, s: t.merge(_rows(s, [3, 12, 100]), key="id"),
+    # above the key-literal size: broadcast joins on the key
+    "merge (large local source)": lambda t, s: t.merge(
+        _rows(s, [3, 12, 100] + list(range(200, 200 + _KEY_LITERALS_MAX))), key="id"
+    ),
     "merge (distributed source)": lambda t, s: t.merge(
         s.createDataFrame(_rows(s, [3, 12, 100]).collect()), key="id"
     ),
@@ -54,17 +62,18 @@ VERBS = {
 
 # verb -> (jobs, jobs with enable_cdf=True)
 BUDGET = {
-    "delete": (3, 4),
-    "update": (3, 4),
+    "delete": (2, 3),
+    "update": (2, 3),
     "delete_mor": (6, 8),
     "update_mor": (7, 8),
-    "overwrite_where": (3, 4),
-    "overwrite_for_keys": (7, 9),
-    "overwrite_for_keys (keys_df)": (8, 10),
-    "merge": (4, 7),
+    "overwrite_where": (2, 3),
+    "overwrite_for_keys": (6, 8),
+    "overwrite_for_keys (keys_df)": (7, 9),
+    "merge": (2, 4),
+    "merge (large local source)": (4, 7),
     "merge (distributed source)": (12, 17),
     "delete (no match)": (1, 1),
-    "delete_mor (no match)": (5, 5),
+    "delete_mor (no match)": (3, 3),
 }
 
 
@@ -77,3 +86,21 @@ def test_dml_job_budget(spark, verb, cdf):
         VERBS[verb](t, spark)
     assert len(jobs) == BUDGET[verb][cdf], jobs
     assert t.latest_version() == 1
+
+
+# (jobs, jobs with enable_cdf=True): CREATE writes the 4-file frame,
+# APPEND a 2-row local_df. Both keep Spark's partitioning (no
+# one-split rule): the append writes one file per source partition.
+CREATE_BUDGET = (1, 1)
+APPEND_BUDGET = (1, 1)
+
+
+@pytest.mark.parametrize("cdf", [False, True], ids=["plain", "cdf"])
+def test_create_and_append_job_budget(spark, cdf):
+    with spark_jobs(spark) as jobs:
+        t = _table(spark, cdf)
+    assert len(jobs) == CREATE_BUDGET[cdf], jobs
+    with spark_jobs(spark) as jobs:
+        t.append(_rows(spark, [40, 41]))
+    assert len(jobs) == APPEND_BUDGET[cdf], jobs
+    assert [len(t._read_log(v)["files"]) for v in (0, 1)] == [4, 6]

@@ -12,7 +12,7 @@ import pytest
 
 from delta_lake_play_spark.serving.handlers import NamesTableService, TableRow
 from delta_lake_play_spark.table.versioned import temp_table_path
-from .conftest import spark_jobs
+from .conftest import job_tasks, spark_jobs
 
 
 @pytest.fixture()
@@ -324,7 +324,7 @@ def test_warm_merge_job_budget(spark, monkeypatch):
         svc.merge_to_table(rows(i))
     with spark_jobs(spark) as jobs:
         svc.merge_to_table(rows(4))  # updates ids 0-4, as serve-mixed mostly does
-    assert len(jobs) == 4
+    assert len(jobs) == 2
 
     built["history"] = svc.table.history()
     for name, df in built.items():
@@ -336,6 +336,39 @@ def test_warm_merge_job_budget(spark, monkeypatch):
         with pytest.raises((TypeError, ValueError)):
             svc.merge_to_table([bad])
     assert svc.table.latest_version() == 5
+
+
+def test_warm_merge_and_delete_run_two_one_task_jobs(spark):
+    """On the serving table (``delta_mirror=True``) a warm 5-row MERGE
+    and a warm id-list DELETE each run two Spark jobs of one task: the
+    touched-file probe and the rewrite. The MERGE matches by its key
+    literal (no broadcast of the source), both probes and the MERGE's
+    rewrite read less than one scan split and so run as one partition,
+    and the MERGE adds exactly one data file."""
+    svc = NamesTableService(spark, temp_table_path("serve-budget"), delta_mirror=True)
+
+    def rows(i):
+        return [
+            {"id": (5 * i + k) % 20, "firstname": f"f{i}", "lastname": "l"}
+            for k in range(5)
+        ]
+
+    for i in range(3):  # warm the handle; stays clear of checkpoint versions
+        svc.merge_to_table(rows(i))
+        svc.delete_from_table([17 - i])
+    head = svc.table._read_log(svc.table.latest_version())
+    before = {f["path"] for f in head["files"]}
+    with spark_jobs(spark) as jobs:
+        v = svc.merge_to_table(rows(3))["version"]
+    assert job_tasks(spark, jobs) == [1, 1]
+    added = [
+        f for f in svc.table._read_log(v)["files"] if f["path"] not in before
+    ]
+    assert len(added) == 1 and added[0]["path"].startswith(f"c-{v}-")
+    with spark_jobs(spark) as jobs:
+        svc.delete_from_table([0, 1, 2])
+    assert job_tasks(spark, jobs) == [1, 1]
+    assert {r["id"] for r in svc.get_table()["data"]} & {0, 1, 2} == set()
 
 
 def _executed_nodes(df):
